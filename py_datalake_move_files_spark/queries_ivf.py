@@ -511,10 +511,9 @@ FROM sz LEFT JOIN rem ON sz.cid = rem.cid"""
 def _semdedup_pairs(asg, *, cap: int | None):
     """Within-cluster near-dup candidate pairs above the cosine threshold,
     with the quadratic stage hard-bounded: clusters larger than ``cap``
-    are excluded from pairing by similarity._cap_bucket_size (r13: a
-    map-side-combined cluster count + broadcast anti-join on the over-cap
-    ids — the embedding payload is never window-sorted for the cap),
-    so candidates per cluster never exceed cap·(cap-1)/2
+    are excluded from pairing by similarity._cap_bucket_size (the window
+    count is co-partitioned with the join's cluster_id shuffle — no extra
+    exchange pattern), so candidates per cluster never exceed cap·(cap-1)/2
     no matter how skewed the assignment. Norms are computed ONCE per row
     (not per pair): the pair expression is a single dot product — 3x fewer
     HOF flops on the quadratic stage, bit-identical result (same IEEE ops:

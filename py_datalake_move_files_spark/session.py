@@ -56,20 +56,6 @@ def get_spark(
         # this knob only changes the small-shuffle/CPU-heavy regime.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # keep observability nodes alive under AQE: the cap device
-        # (operators/similarity._cap_bucket_size) anti-joins a usually-
-        # EMPTY broadcast of over-cap bucket keys, and
-        # AQEPropagateEmptyRelation would eliminate that subtree together
-        # with its CollectMetrics node — corrupting Observation reads and
-        # silencing the no-silent-caps metric exactly in the clean case.
-        # Empty-relation propagation is a shortcut for runtime-empty
-        # intermediates only; on non-degenerate lakes it never fires, so
-        # excluding it costs nothing while making the metrics contract
-        # unconditional.
-        .config(
-            "spark.sql.adaptive.optimizer.excludedRules",
-            "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
-        )
         # reliable-checkpoint GC: iterative operators (connected components,
         # pagerank) checkpoint per round; the ContextCleaner deletes a
         # round's files once its RDD is unreferenced, bounding checkpoint

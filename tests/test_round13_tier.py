@@ -1,6 +1,6 @@
 """Round-13 optimization-tier tests (VERDICT r12 "Next round" #2/#3/#4/#5).
 
-Pins the four r13 rewrites:
+Pins three r13 rewrites and the bucket-cap device:
 
 - ``profile_table`` exact distincts are EXPAND-FREE (per-column
   distinct→count arms + broadcast attach) and still equal
@@ -11,9 +11,11 @@ Pins the four r13 rewrites:
   result-identical to the DuckDB oracle on a lake built so the lower and
   upper median ranks cross in DIFFERENT coarse buckets — the adversarial
   case for the bucket-locate step (#4).
-- ``_cap_bucket_size`` plans NO window/sort over the capped frame: the
-  cap is a map-side-combined count aggregate + broadcast anti-join (#5),
-  with the observation metrics unchanged (values re-pinned here).
+- ``_cap_bucket_size`` reports the observation metrics unchanged (values
+  re-pinned here), caps a NULL-key bucket like any other (the window
+  groups NULL keys), and fills the observation on an empty frame; the
+  band-keyed queries scan ``documents`` once with no anti-join, under a
+  session that excludes no AQE optimizer rule.
 """
 
 from __future__ import annotations
@@ -131,33 +133,11 @@ def test_weighted_median_plan_is_domain_bounded(spark):
 # ------------------------------------------------------- cap device (#5)
 
 
-def test_cap_bucket_size_plans_anti_join_not_window(spark):
-    """The cap must not window/sort the capped frame: plan shape is a
-    map-side-combined count aggregate + broadcast LeftAnti on the
-    over-cap keys (VERDICT r12 #5)."""
-    from py_datalake_move_files_spark.operators.similarity import (
-        _cap_bucket_size,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"k{i % 3}") for i in range(30)], "id long, b string"
-    )
-    plan = (
-        _cap_bucket_size(df, ["b"], 5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Window" not in plan, "cap regained the full-frame window"
-    assert "LeftAnti" in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    assert "partial_count" in plan  # the bucket count combines map-side
-
-
 def test_cap_bucket_size_metrics_unchanged(spark):
-    """The anti-join device reports the SAME observation values as the
-    r12 window form: rows in capped buckets / capped-bucket count / max
-    bucket size, zero-safe when clean."""
+    """The cap reports rows in capped buckets / capped-bucket count / max
+    bucket size, zero-safe when clean. NULL keys form one bucket that is
+    capped like any other — rows kept and metric agree — and an empty
+    frame still fills the observation."""
     from pyspark.sql import Observation
 
     from py_datalake_move_files_spark.operators.similarity import (
@@ -183,10 +163,30 @@ def test_cap_bucket_size_metrics_unchanged(spark):
     assert got["rows_dropped"] == 0 and got["buckets_capped"] == 0
     assert got["max_bucket_n"] == 10
 
+    nulls = spark.createDataFrame(
+        [(i, None) for i in range(10)] + [(999, "solo")], "id long, b string"
+    )
+    null_obs = Observation()
+    assert _cap_bucket_size(nulls, ["b"], 3, observation=null_obs).count() == 1
+    got = null_obs.get
+    assert got["rows_dropped"] == 10 and got["buckets_capped"] == 1
 
-def test_minhash_lsh_plan_has_no_window(spark):
-    """dedup_minhash_lsh's banding cap rides the count+anti-join device:
-    the serving plan carries no Window operator at all (the r12 shape
-    had 4 window ops + a sort per join side) and no sort-merge join."""
-    plan = _plan(spark, "dedup_minhash_lsh")
-    assert "Window" not in plan
+    empty = Observation()
+    assert _cap_bucket_size(df.limit(0), ["b"], 3, observation=empty).count() == 0
+    assert empty.get["buckets_capped"] == 0
+
+
+def test_band_keyed_plans_scan_documents_once(spark):
+    """The band-keyed pair generators cap with one window over the banded
+    frame: the final AQE plan reads ``documents`` once and carries no
+    anti-join, and the session factory excludes no AQE optimizer rule."""
+    for name in ("dedup_minhash_lsh", "simhash_dup_pairs"):
+        df = QUERIES[name](spark, SF)
+        df.collect()  # run the frame itself so AQE settles its final plan
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan, name
+        plan = plan.split("== Initial Plan ==")[0]
+        assert plan.count("FileScan parquet") == 1, name
+        assert "documents" in plan, name
+        assert "LeftAnti" not in plan, name
+    assert spark.conf.get("spark.sql.adaptive.optimizer.excludedRules", "") == ""
