@@ -8,8 +8,9 @@ reports via prints. Here mutation is split into:
    dry-run, satisfying the reference's interactive-confirm gate
    (app/main.py:269-272) as an inspectable artifact instead of ``input()``;
 2. :func:`execute_plan`, which runs the side effects distributed via
-   ``mapInPandas`` (one task per partition replaces MAX_WORKERS threads;
-   Spark's scheduler + AQE replace BATCH_SIZE/gc, app/app.py:33,174) and
+   ``mapInPandas`` (the plan rows are spread evenly over the session's task
+   slots, one task per slot, in place of MAX_WORKERS threads; Spark's
+   scheduler + AQE replace BATCH_SIZE/gc, app/app.py:33,174) and
    returns an **audit DataFrame** ``(source_path, target_path, action,
    status, reason)`` — the reference's success/failure tally
    (app/main.py:305-309) becomes ``audit.groupBy("status").count()``.
@@ -223,6 +224,14 @@ def execute_plan(
     ``target_path`` is ignored and may be absent). ``dry_run=True`` returns
     the audit with status ``planned`` and touches nothing (E5).
 
+    ``parallelism``: how many side-effect tasks to run. The plan rows are
+    spread evenly (round-robin) over that many partitions before they are
+    checkpointed, whatever partitioning the plan arrived with. The default
+    is the session's task slots (``sparkContext.defaultParallelism``): a
+    one-partition manifest plan still uses every core, and a plan with many
+    small scan partitions does not start a Python task per handful of
+    files. ``dry_run`` ignores it.
+
     ``progress``: optional :class:`PlanProgress` whose ok/error counters the
     tasks update as they complete — running-tally visibility while this call
     blocks. ``_stagger_s`` is a test-only hook delaying each task by
@@ -266,9 +275,6 @@ def execute_plan(
         F.col(source_col).alias("source_path"),
         F.col(target_col).alias("target_path"),
     )
-    if parallelism:
-        rows = rows.repartition(parallelism)
-
     if dry_run:
         return rows.select(
             "source_path",
@@ -286,7 +292,11 @@ def execute_plan(
     #    other reads keep strict missing-file semantics;
     # 2. localCheckpoint materializes the (source, target) paths and cuts the
     #    lineage, so replaying the returned audit never re-scans.
+    # The spread over task slots happens BEFORE the checkpoint: each
+    # side-effect task then reads a fixed row set, so a retried task
+    # re-runs exactly the rows its failed attempt touched.
     sess = plan.sparkSession
+    rows = rows.repartition(parallelism or sess.sparkContext.defaultParallelism)
     prev_imf = sess.conf.get("spark.sql.files.ignoreMissingFiles", None)
     sess.conf.set("spark.sql.files.ignoreMissingFiles", "true")
     try:
@@ -427,5 +437,13 @@ def execute_plan(
 
 
 def audit_summary(audit: DataFrame) -> DataFrame:
-    """A2/S10: success/failure totals as a DataFrame."""
-    return audit.groupBy("action", "status").count().orderBy("action", "status")
+    """A2/S10: success/failure totals as a DataFrame, ordered by
+    ``(action, status)``. The totals are a handful of rows, so they are
+    sorted inside one partition: a global ``orderBy`` would add
+    range-partition sampling jobs for nothing."""
+    return (
+        audit.groupBy("action", "status")
+        .count()
+        .coalesce(1)
+        .sortWithinPartitions("action", "status")
+    )

@@ -132,11 +132,10 @@ def foreach_batch_movecopy(
     from py_datalake_move_files_spark.plans.movecopy import execute_plan
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
+        # execute_plan is eager: the side effects are done when it returns
         audit = execute_plan(batch_df, mode=mode, overwrite=overwrite)
         if audit_path is not None:
             audit.write.mode("append").parquet(audit_path)
-        else:
-            audit.count()  # force side effects
 
     return (
         plan_stream.writeStream.foreachBatch(handle)

@@ -77,6 +77,73 @@ def test_dry_run_touches_nothing(spark, tmp_path):
     assert (src / "a.txt").exists() and not dst.exists()
 
 
+def test_dry_run_plan_has_no_exchange(spark, tmp_path):
+    """The dry run is a plan artifact: spreading rows over task slots is for
+    the executing path only, so no dry run shuffles — with or without a
+    ``parallelism`` override."""
+    plan = _plan_df(spark, [(f"{tmp_path}/a.txt", f"{tmp_path}/b.txt")])
+    for parallelism in (None, 3):
+        audit = execute_plan(
+            plan, mode="copy", dry_run=True, parallelism=parallelism
+        )
+        assert "Exchange" not in audit._jdf.queryExecution().executedPlan().toString()
+
+
+def test_plan_rows_spread_over_all_task_slots(spark, tmp_path):
+    """A one-partition plan (a one-file manifest) must not run every copy
+    in one task: its rows are spread over all of the session's task slots,
+    none of them left idle."""
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    names = [f"f{i}.txt" for i in range(12)]
+    _mk_tree(str(src), names)
+    plan = _plan_df(spark, [(f"{src}/{n}", f"{dst}/{n}") for n in names]).coalesce(1)
+    audit = execute_plan(plan, mode="copy")
+    per_task = {
+        r.pid: r["count"]
+        for r in audit.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    }
+    slots = spark.sparkContext.defaultParallelism
+    assert sorted(per_task) == list(range(slots))
+    assert sum(per_task.values()) == 12 and min(per_task.values()) > 0
+    assert {a.status for a in audit.collect()} == {"ok"}
+
+
+def test_side_effect_tasks_capped_at_task_slots(spark, tmp_path):
+    """A plan arriving with more partitions than task slots (a scan with
+    many small splits) runs in at most ``defaultParallelism`` side-effect
+    tasks, not one Python task per incoming partition."""
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    names = [f"f{i}.txt" for i in range(4)]
+    _mk_tree(str(src), names)
+    plan = _plan_df(spark, [(f"{src}/{n}", f"{dst}/{n}") for n in names]).repartition(16)
+    audit = execute_plan(plan, mode="move")
+    assert audit.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert {a.status for a in audit.collect()} == {"ok"}
+    assert sorted(os.listdir(dst)) == names and os.listdir(src) == []
+
+
+def test_audit_summary_same_rows_without_range_partitioning(spark):
+    """audit_summary returns the rows, in the order, of the global
+    ``orderBy`` it replaces, without that sort's range-partition
+    sampling."""
+    from py_datalake_move_files_spark.plans.movecopy import AUDIT_SCHEMA
+
+    outcomes = [
+        ("move", "ok"), ("copy", "error"), ("copy", "ok"), ("delete", "ok"),
+        ("copy", "initiated"), ("move", "error"), ("copy", "ok"), ("move", None),
+    ]
+    audit = spark.createDataFrame(
+        [(f"s{i}", f"t{i}", a, st, None) for i, (a, st) in enumerate(outcomes * 3)],
+        AUDIT_SCHEMA,
+    ).repartition(5)
+    summary = audit_summary(audit)
+    got = summary.collect()
+    want = audit.groupBy("action", "status").count().orderBy("action", "status").collect()
+    assert got == want
+    plan = summary._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan.lower()
+
+
 def test_no_overwrite_mode(spark, tmp_path):
     src, dst = tmp_path / "src", tmp_path / "dst"
     _mk_tree(str(src), ["a.txt"])

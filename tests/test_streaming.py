@@ -62,8 +62,9 @@ def test_session_window_stream_runs(spark, sf_small, tmp_path):
     assert set(out.columns) == {"session_start", "session_end", "user_id", "n_events"}
 
 
-def test_streaming_movecopy_sink(spark, tmp_path):
-    """foreachBatch bridges arriving copy plans to the batch executor."""
+def _drain_movecopy_stream(spark, tmp_path, mode, audit_path):
+    """Write one plan file of three rows into a watched directory and drain
+    it through :func:`foreach_batch_movecopy` with ``availableNow``."""
     files = tmp_path / "files"
     files.mkdir()
     for i in range(3):
@@ -82,10 +83,17 @@ def test_streaming_movecopy_sink(spark, tmp_path):
     q = foreach_batch_movecopy(
         stream,
         str(tmp_path / "ckpt"),
-        mode="copy",
-        audit_path=str(tmp_path / "audit"),
+        mode=mode,
+        audit_path=audit_path,
     ).trigger(availableNow=True).start()
     q.awaitTermination(120)
+    assert q.exception() is None
+    return files
+
+
+def test_streaming_movecopy_sink(spark, tmp_path):
+    """foreachBatch bridges arriving copy plans to the batch executor."""
+    _drain_movecopy_stream(spark, tmp_path, "copy", str(tmp_path / "audit"))
 
     assert sorted(p.name for p in (tmp_path / "moved").iterdir()) == [
         "f0.txt",
@@ -94,6 +102,19 @@ def test_streaming_movecopy_sink(spark, tmp_path):
     ]
     audit = spark.read.parquet(str(tmp_path / "audit"))
     assert audit.where(F.col("status") == "ok").count() == 3
+
+
+def test_streaming_movecopy_without_audit_path_still_moves(spark, tmp_path):
+    """With no audit sink nothing reads the audit, so the side effects must
+    run inside execute_plan itself: every file is moved."""
+    files = _drain_movecopy_stream(spark, tmp_path, "move", None)
+
+    assert sorted(p.name for p in (tmp_path / "moved").iterdir()) == [
+        "f0.txt",
+        "f1.txt",
+        "f2.txt",
+    ]
+    assert list(files.iterdir()) == []
 
 
 def test_streaming_incremental_dedup_builds_durable_index(spark, tmp_path):

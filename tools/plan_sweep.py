@@ -23,17 +23,12 @@ BEGIN = "| query | hash-exch | bcast | sort | SMJ | cartesian |"
 
 
 def sweep() -> tuple[list[str], list[str]]:
-    from pyspark.sql import SparkSession
-
     from py_datalake_move_files_spark.queries import QUERIES
+    from py_datalake_move_files_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("plan-sweep")
-        .getOrCreate()
-    )
+    # the engine's own session conf (broadcast threshold, AQE), so the
+    # table shows the plans the bench and the tests run
+    spark = get_spark("plan-sweep", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     rows, errs = [], []
     for name in sorted(QUERIES):
@@ -69,7 +64,7 @@ def main() -> None:
             end = i
             break
     table = [BEGIN, "|---|---|---|---|---|---|", *rows]
-    new = text[:start] + "\n".join(table) + "\n" + "\n".join(lines[end:])
+    new = text[:start] + "\n".join(table) + "\n" + "\n".join(lines[end:]) + "\n"
     (ROOT / "PLANS.md").write_text(new)
     print(f"{len(rows)} queries swept; {len(errs)} errors")
     for e in errs:
