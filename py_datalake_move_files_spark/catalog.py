@@ -3,7 +3,8 @@ CSV inputs.
 
 The reference loads its manifest with pandas + header inference and a single
 required-column assertion (reference app/app.py:72-98). Here every load gets
-an explicit StructType so bad files fail fast at the scan, and the tables are
+an explicit StructType (the manifest's resolved by header name, as pandas
+does) so bad files fail fast at the scan, and the tables are
 registered in the Spark catalog so both DataFrame and ``spark.sql`` queries
 resolve them.
 """
@@ -13,6 +14,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 TABLES = (
@@ -131,24 +133,34 @@ def read_manifest_csv(
     """Read a ``;``-delimited manifest CSV with a fixed schema (operator S1).
 
     Replaces the reference's pandas read + required-column check
-    (app/app.py:80-89). A fixed schema reads by POSITION, so the header is
-    validated by name first — a manifest missing ``filename`` fails fast
-    with the available columns listed (the reference's P3 assertion,
-    app/app.py:83-86) instead of silently loading misaligned data.
+    (app/app.py:80-89), and like pandas it resolves columns BY HEADER NAME:
+    the result has ``schema``'s columns, order and types whatever order the
+    header lists them in; schema columns absent from the header are typed
+    NULLs, and header columns outside the schema are dropped. A manifest
+    missing a ``required_cols`` column fails fast with the available
+    columns listed (the reference's P3 assertion, app/app.py:83-86).
+
+    The header is read once (the one job this read runs); the data scan
+    then gets a schema in header order, each field typed from ``schema``,
+    so a malformed value (say a non-numeric ``unixtimestamp``) parses to
+    NULL exactly as a PERMISSIVE CSV read does.
     """
-    if required_cols:
-        header = (
-            spark.read.option("header", True).option("sep", ";").csv(path).columns
+    reader = spark.read.option("header", True).option("sep", ";")
+    header = reader.csv(path).columns
+    missing = [c for c in required_cols if c not in header]
+    if missing:
+        raise ValueError(
+            f"manifest {path} is missing required column(s) {missing}; "
+            f"available: {header}"
         )
-        missing = [c for c in required_cols if c not in header]
-        if missing:
-            raise ValueError(
-                f"manifest {path} is missing required column(s) {missing}; "
-                f"available: {header}"
-            )
-    return (
-        spark.read.option("header", True)
-        .option("sep", ";")
-        .schema(schema)
-        .csv(path)
+    typed = {f.name: f for f in schema.fields}
+    in_header_order = T.StructType(
+        [typed.get(c, T.StructField(c, T.StringType())) for c in header]
+    )
+    raw = reader.schema(in_header_order).csv(path)
+    return raw.select(
+        *[
+            raw[f.name] if f.name in header else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ]
     )

@@ -281,11 +281,11 @@ def dataset_split(
     md5 hex digits of the id (0..255) are bucketed by cumulative weights.
     Stable across runs, engines, and partitionings — the property random
     ``sample()`` can't give a training pipeline."""
-    from py_datalake_move_files_spark.operators.dedup import hex_value_sql
+    from py_datalake_move_files_spark.operators.dedup import hex_value
 
     w = weights or {"train": 90, "val": 5, "test": 5}
     total = sum(w.values())
-    hv = hex_value_sql(f"md5(CAST({id_col} AS STRING))", 2)
+    hv = hex_value(f"md5(CAST({id_col} AS STRING))", 2)
     expr = None
     acc = 0
     for name, weight in w.items():
@@ -312,9 +312,9 @@ def source_mixture_sample(
     and a pure map-side column expression, so re-materializing the mixture
     at 100 TB is a scan, not a shuffle. Sources absent from ``rates`` keep
     rate 1.0."""
-    from py_datalake_move_files_spark.operators.dedup import hex_value_sql
+    from py_datalake_move_files_spark.operators.dedup import hex_value
 
-    hv = hex_value_sql(f"md5(CAST({id_col} AS STRING))", 2)
+    hv = hex_value(f"md5(CAST({id_col} AS STRING))", 2)
     expr = None
     for src, rate in sorted(rates.items()):
         bound = int(256 * rate)

@@ -488,7 +488,6 @@ def q_lang_temperature_resample(spark, sf_dir):
     broadcasts; the decision pass is map-only (the md5 bucket is a pure
     projection). Re-materializing the mixture is a scan, not a shuffle."""
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
-    from py_datalake_move_files_spark.operators.dedup import hex_value_sql
     from pyspark.sql import Window
 
     counts = docs.groupBy("lang").agg(
@@ -504,7 +503,7 @@ def q_lang_temperature_resample(spark, sf_dir):
         )
         .withColumn("thr", F.floor(F.col("rate") * F.lit(_TEMP_SCALE)).cast("long"))
     )
-    u32 = F.expr(hex_value_sql("md5(CAST(doc_id AS STRING))", 8))
+    u32 = F.expr(DD.hex_value("md5(CAST(doc_id AS STRING))", 8))
     j = (
         docs.select("doc_id", "lang")
         .withColumn("__u32", u32)
@@ -1382,8 +1381,9 @@ _WS_NIBBLES = 13
 _WS_DENOM = float(1 << 52)
 
 
-def _ws_key_sql(id_sql: str, w_sql: str) -> str:
-    """Portable (Spark SQL + DuckDB) Efraimidis–Spirakis sampling key:
+def _ws_key_sql(id_sql: str, w_sql: str, hex_of=DD.hex_value) -> str:
+    """Efraimidis–Spirakis sampling key in Spark SQL, or in DuckDB when
+    ``hex_of`` is the oracle's ``DD.hex_value_sql`` (same integer, same key):
     ``ln(u) / w`` with u drawn deterministically from md5(id). Log-domain
     form of the classic ``u^(1/w)`` key — same argmax order, no pow()
     underflow for large weights. Rounded to 12 dp BEFORE ranking (NOT the
@@ -1393,9 +1393,7 @@ def _ws_key_sql(id_sql: str, w_sql: str) -> str:
     keeps ~1e7 distinct levels at w=1e6 while still sitting ~9 orders of
     magnitude above cross-engine ln() ulp noise, so the rounding remains
     a safe engine-parity boundary). Ties break on id."""
-    from py_datalake_move_files_spark.operators.dedup import hex_value_sql
-
-    v = hex_value_sql(f"md5(CAST({id_sql} AS STRING))", _WS_NIBBLES)
+    v = hex_of(f"md5(CAST({id_sql} AS STRING))", _WS_NIBBLES)
     return (
         f"round((ln(CAST(({v}) AS DOUBLE) + 1.0) - ln({_WS_DENOM})) "
         f"/ CAST({w_sql} AS DOUBLE), 12)"
@@ -1405,7 +1403,7 @@ def _ws_key_sql(id_sql: str, w_sql: str) -> str:
 _WS_ORACLE = f"""
 WITH keyed AS (
   SELECT doc_id, n_chars,
-    {_ws_key_sql('doc_id', 'n_chars')} AS sample_key
+    {_ws_key_sql('doc_id', 'n_chars', DD.hex_value_sql)} AS sample_key
   FROM documents WHERE n_chars > 0
 ),
 r AS (
@@ -1531,7 +1529,7 @@ _WS_PER_LANG = 5
 _WS_LANG_ORACLE = f"""
 WITH keyed AS (
   SELECT lang, doc_id, n_chars,
-    {_ws_key_sql('doc_id', 'n_chars')} AS sample_key
+    {_ws_key_sql('doc_id', 'n_chars', DD.hex_value_sql)} AS sample_key
   FROM documents WHERE n_chars > 0
 ),
 r AS (
@@ -1770,7 +1768,7 @@ def q_training_shard_plan(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
-    hv = DD.hex_value_sql("md5(CAST(doc_id AS STRING))", 2)
+    hv = DD.hex_value("md5(CAST(doc_id AS STRING))", 2)
     keyed = docs.select(
         "doc_id",
         "n_chars",
@@ -2727,11 +2725,10 @@ def q_heaps_law_fit(spark, sf_dir):
     10-point arrays exactly like zipf_slope. Everything is integer until
     the ln() chains; the only windows run over the 10-cell checkpoint
     frame."""
-    from py_datalake_move_files_spark.operators.dedup import hex_value_sql
     from pyspark.sql import Window
 
     docs = _t(spark, sf_dir, "documents")
-    hv = hex_value_sql("md5(CAST(doc_id AS STRING))", 2)
+    hv = DD.hex_value("md5(CAST(doc_id AS STRING))", 2)
     tk = ensure_parallelism(docs).select(
         F.expr(f"CAST(({hv}) % {_HEAPS_BUCKETS} AS INT)").alias("b"),
         F.explode(F.expr("filter(split(text, ' '), ht -> ht <> '')")).alias(

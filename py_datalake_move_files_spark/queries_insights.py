@@ -797,10 +797,10 @@ def q_token_packing_plan(spark, sf_dir):
     the md5 order inside a shard is the deterministic shuffle the
     curriculum already needs, and the output is a {PACK_SHARDS}-row
     summary. All quantities integer-exact."""
-    from py_datalake_move_files_spark.operators.dedup import hex_value_sql
+    from py_datalake_move_files_spark.operators.dedup import hex_value
 
     docs = _t(spark, sf_dir, "documents")
-    hv = hex_value_sql("md5(CAST(doc_id AS STRING))", 2)
+    hv = hex_value("md5(CAST(doc_id AS STRING))", 2)
     lens = docs.select(
         "doc_id",
         F.expr(

@@ -107,7 +107,7 @@ _SIMHASH_BUCKET_CAP = 256
 
 def _simhash_fp_cte() -> str:
     """The fingerprint CTE of the simhash_fingerprints oracle at the
-    pairs tier's 32-bit width (same bit derivation, same hex_value
+    pairs tier's 32-bit width (same bit derivation, same hex_value_sql
     device — 16 bits collides far too often for PAIR generation: ~1% of
     random doc pairs land within hamming 3 of each other, vs ~1e-6 at
     32 bits)."""

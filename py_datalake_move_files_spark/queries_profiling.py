@@ -1167,11 +1167,11 @@ def q_range_partition_plan(spark, sf_dir):
     cells. At 100 TB this is exactly the two-pass shape of a production
     sort plan: cheap sample pass, metadata-sized planning state, one
     full scan."""
-    from py_datalake_move_files_spark.operators.dedup import hex_value_sql
+    from py_datalake_move_files_spark.operators.dedup import hex_value
     from pyspark.sql import Window
 
     orders = _t(spark, sf_dir, "orders")
-    hv = hex_value_sql("md5(CAST(o_orderkey AS STRING))", 2)
+    hv = hex_value("md5(CAST(o_orderkey AS STRING))", 2)
     samp = orders.where(F.expr(f"({hv}) < {_RP_SAMPLE}")).select(
         F.col("o_totalprice").alias("v")
     )

@@ -93,20 +93,23 @@ def test_lang_scores_match_python(spark):
 
 
 def test_simhash_matches_python(spark):
+    # 16 bits (simhash_fingerprints) and 32 bits (simhash_dup_pairs), where
+    # bit 31 is the top bit of an 8-nibble decode
     docs = load_table(spark, SF, "documents").limit(50)
     texts = {r.doc_id: r.text for r in docs.select("doc_id", "text").collect()}
-    got = {r.doc_id: r.simhash for r in simhash(docs, "doc_id", bits=16).collect()}
-    for doc_id, sh in got.items():
-        fp = 0
-        sums = [0] * 16
-        for t in texts[doc_id].split(" "):
-            hv = int(hashlib.md5(t.encode()).hexdigest()[:4], 16)
-            for j in range(16):
-                sums[j] += 1 if (hv >> j) & 1 else -1
-        for j in range(16):
-            if sums[j] > 0:
-                fp += 1 << j
-        assert sh == fp, f"doc {doc_id}"
+    for bits in (16, 32):
+        got = {r.doc_id: r.simhash for r in simhash(docs, "doc_id", bits=bits).collect()}
+        for doc_id, sh in got.items():
+            fp = 0
+            sums = [0] * bits
+            for t in texts[doc_id].split(" "):
+                hv = int(hashlib.md5(t.encode()).hexdigest()[: bits // 4], 16)
+                for j in range(bits):
+                    sums[j] += 1 if (hv >> j) & 1 else -1
+            for j in range(bits):
+                if sums[j] > 0:
+                    fp += 1 << j
+            assert sh == fp, f"doc {doc_id} at {bits} bits"
 
 
 def test_cosine_topk_matches_python(spark):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-from py_datalake_move_files_spark.catalog import read_manifest_csv
+from py_datalake_move_files_spark.catalog import MANIFEST_SCHEMA, read_manifest_csv
 from py_datalake_move_files_spark.operators.manifest import build_archive_plan
 from py_datalake_move_files_spark.plans.movecopy import (
     audit_summary,
@@ -287,6 +287,49 @@ def test_manifest_missing_column_fails_fast(spark, tmp_path):
 
     with pytest.raises(ValueError, match="missing required column.*filename"):
         read_manifest_csv(spark, str(bad))
+
+
+def test_manifest_columns_resolve_by_header_name(spark, tmp_path):
+    """A manifest whose header orders the columns differently from
+    MANIFEST_SCHEMA loads each value under its header name, with the
+    schema's column order and types (a positional read put the timestamp
+    into ``filename``); a malformed timestamp stays NULL."""
+    reordered = tmp_path / "reordered.csv"
+    reordered.write_text(
+        "filename;QuoteId;unixtimestamp\n"
+        "q/1.json;id1;1700000000\n"
+        "q/2.json;id2;not-a-number\n"
+    )
+    df = read_manifest_csv(spark, str(reordered))
+    assert df.schema == MANIFEST_SCHEMA
+    assert sorted(map(tuple, df.collect())) == [
+        ("id1", 1700000000, "q/1.json"),
+        ("id2", None, "q/2.json"),
+    ]
+
+
+def test_manifest_with_only_filename_plans_files(spark, tmp_path):
+    """The reference reads its manifest by name, so a ``filename``-only
+    manifest is valid (app/app.py:80-89): its files are planned, and the
+    absent optional columns are typed NULLs (a positional read loaded
+    every ``filename`` as NULL and planned nothing)."""
+    src = tmp_path / "raw"
+    _mk_tree(str(src), ["q/1.json", "q/2.json"])
+    only = tmp_path / "only_filename.csv"
+    only.write_text("filename\nq/1.json\nq/2.json\n")
+    manifest = read_manifest_csv(spark, str(only))
+    assert manifest.schema == MANIFEST_SCHEMA
+    assert sorted(map(tuple, manifest.collect())) == [
+        (None, None, "q/1.json"),
+        (None, None, "q/2.json"),
+    ]
+    plan = build_archive_plan(
+        manifest,
+        list_files(spark, str(src)),
+        source_prefix=f"file:{src}",
+        target_prefix=f"file:{tmp_path / 'archive'}",
+    )
+    assert plan.where(F.col("status") == "found").count() == 2
 
 
 def test_fire_and_forget_copy_reports_initiated(spark, tmp_path):

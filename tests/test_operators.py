@@ -5,12 +5,18 @@ semantics on controlled corners)."""
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
+
+import duckdb
+import pytest
 
 from pyspark.sql import functions as F
 
 from py_datalake_move_files_spark.operators.asof import asof_join, range_join
 from py_datalake_move_files_spark.operators.dedup import (
     dedup_exact,
+    hex_value,
+    hex_value_sql,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -59,6 +65,43 @@ def test_simhash_identical_tokens_collide(spark):
     rows = {r.doc_id: r.simhash for r in simhash(df, "doc_id").collect()}
     assert rows[1] == rows[2]  # order-insensitive token multiset
     assert rows[1] != rows[3]
+
+
+def test_hex_value_matches_oracle_form_and_python(spark):
+    """Spark's ``conv`` decoder, the DuckDB oracle's nibble arithmetic and
+    Python's ``int(s[:n], 16)`` give the same integer at every width the
+    engine decodes (1..8 nibbles for hashes, 13 for the sampling keys);
+    ``hex_value`` refuses widths whose value can overflow a BIGINT."""
+    digests = [hashlib.md5(str(i).encode()).hexdigest() for i in range(300)]
+    digests += ["0" * 32, "f" * 32, "0f" * 16]
+    widths = [*range(1, 9), 13]
+    want = {h: tuple(int(h[:n], 16) for n in widths) for h in digests}
+
+    df = spark.createDataFrame([(h,) for h in digests], ["h"])
+    spark_rows = df.select(
+        "h", *[F.expr(hex_value("h", n)).alias(f"v{n}") for n in widths]
+    ).collect()
+    assert {r[0]: tuple(r[1:]) for r in spark_rows} == want
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (h VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(h,) for h in digests])
+    cols = ", ".join(f"CAST({hex_value_sql('h', n)} AS BIGINT)" for n in widths)
+    duck_rows = con.execute(f"SELECT h, {cols} FROM t").fetchall()
+    assert {r[0]: tuple(r[1:]) for r in duck_rows} == want
+
+    with pytest.raises(ValueError, match="1..15 nibbles"):
+        hex_value("h", 16)  # 16^16 does not fit a BIGINT
+
+
+def test_hash_kernels_decode_hex_with_conv(spark):
+    """minhash_signatures and simhash decode their hex slices with one
+    native ``conv`` per hash, not the oracle's per-nibble ``instr`` terms
+    (those run interpreted inside the HOF lambdas, once per element)."""
+    df = spark.createDataFrame([(1, "a b c d"), (2, "e f g h")], ["doc_id", "text"])
+    for out in (minhash_signatures(df, "doc_id"), simhash(df, "doc_id", bits=32)):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "conv(" in plan and "instr(" not in plan, plan
 
 
 def test_brute_force_topk_orders_by_cosine(spark):
