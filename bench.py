@@ -12,6 +12,11 @@ consumes EVERY output column — unlike ``count()``, which lets Catalyst prune
 the very projections being benchmarked down to a near-metadata row count for
 map-only queries (ADVICE r01). A JVM/session warm-up runs first so measured
 times are query time, not session start.
+
+$SPARK_GRAFT_SF_DIR may list several dirs, comma-separated: they run in
+order in one session, the first fills the printed line and the sidecar's
+top level, and later dirs land under the sidecar's ``later_sfs`` with time
+ratios and ``plan_flips`` against the dir before (README.md, "Running").
 """
 
 from __future__ import annotations
@@ -234,6 +239,25 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+#: Join-shape markers counted in each query's executed plan, in the order
+#: ``plan_counts`` reports them.
+PLAN_SHAPE = (
+    "Exchange hashpartitioning",
+    "BroadcastExchange",
+    "SortMergeJoin",
+    "CartesianProduct",
+)
+
+
+def plan_counts(df) -> list[int]:
+    """Occurrences of each ``PLAN_SHAPE`` marker in ``df``'s executed plan.
+    A SortMergeJoin or CartesianProduct count that changes between two
+    scales is a plan flip: a broadcast side outgrew its threshold, or a
+    join lost its keys."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [plan.count(marker) for marker in PLAN_SHAPE]
+
+
 def shuffle_totals(spark) -> tuple[int, int] | None:
     """Cumulative (shuffle_read_bytes, shuffle_write_bytes) across all
     executors from the AppStatusStore — the same store the /api/v1 REST
@@ -255,50 +279,19 @@ def shuffle_totals(spark) -> tuple[int, int] | None:
         return None
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # test hook: run a comma-separated subset (the output contract — one
-    # compact JSON line + the BENCH_full.json sidecar — is pinned by
-    # tests/test_bench_contract.py without paying the full headline set)
-    subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
-    # NO silent caps (VERDICT r7 #3): the bench times EVERY registered
-    # query — the historical HEADLINE set first (its subtotal is reported
-    # separately so round-over-round totals stay comparable), then the
-    # remaining registry in name order as the fast tier.
-    fast_tier = sorted(n for n in QUERIES if n not in set(HEADLINE))
-    headline = (
-        [n for n in subset.split(",") if n]
-        if subset
-        else HEADLINE + fast_tier
-    )
-    spark = get_spark("pdmfs-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm-up: touch every table (FS cache), then one untimed pass per query
-    # at the TARGET sf — this single pass compiles whole-stage codegen AND
-    # pays the one-off shuffle-path JIT / buffer allocation (measured ~2× on
-    # shuffle-heavy queries), so the timed runs below report steady-state
-    # throughput — what a long-lived cluster session delivers. (A separate
-    # sf0.001 codegen pass is redundant with this and was dropped to keep
-    # the 21-query bench well inside the driver's timeout.)
-    from py_datalake_move_files_spark.catalog import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
-
-    # explicit, TIMED pre-build of every session-cached derived artifact
-    # (VERDICT r9 #2): these caches (trained centroids, PQ codebook, kNN
-    # edge frame, dedup cluster map) are built once per session and shared
-    # by whole query families, so whichever family member ran FIRST in a
-    # sweep used to absorb the build cost — registry growth reordered the
-    # sweep between rounds and produced phantom +400% per-query "regressions"
-    # in cross-round diffs. Building them here, as named line items, makes
-    # per-query timings pure query time in every sweep order and records
-    # what the one-off index builds cost (reported as "artifacts" in the
-    # sidecar; excluded from query totals — in production these are ingest-
-    # time index builds, not per-query work). PLANS.md lists which queries
-    # share which artifact.
+def build_artifacts(spark, sf_dir: str) -> dict[str, float]:
+    """Explicit, TIMED pre-build of every session-cached derived artifact
+    (VERDICT r9 #2): these caches (trained centroids, PQ codebook, kNN
+    edge frame, dedup cluster map) are built once per session and shared
+    by whole query families, so whichever family member ran FIRST in a
+    sweep used to absorb the build cost — registry growth reordered the
+    sweep between rounds and produced phantom +400% per-query "regressions"
+    in cross-round diffs. Building them here, as named line items, makes
+    per-query timings pure query time in every sweep order and records
+    what the one-off index builds cost (excluded from query totals — in
+    production these are ingest-time index builds, not per-query work).
+    PLANS.md lists which queries share which artifact. A failed build
+    records -1.0; the query pass re-reports the failure."""
     import py_datalake_move_files_spark.queries as Q
     import py_datalake_move_files_spark.queries_ivf as QIVF
     import py_datalake_move_files_spark.queries_knn as QKNN
@@ -322,13 +315,28 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — the query pass will re-report
             artifacts[aname] = -1.0
             print(f"artifact {aname} failed: {exc}", file=sys.stderr)
+    return artifacts
 
-    # per-query crash isolation: one broken query must not cost the timings
-    # of the 20 healthy ones (r2: a warm-up crash recorded zero timings)
+
+def run_scale(spark, sf_dir: str, names: list[str]) -> dict:
+    """The bench protocol at one scale: artifacts pre-built, one untimed
+    warm-up pass per query (which also records the query's plan shape),
+    then min-of-2 timed runs with the per-run shuffle delta. Per-query
+    crash isolation: one broken query must not cost the timings of the
+    healthy ones (r2: a warm-up crash recorded zero timings)."""
+    artifacts = build_artifacts(spark, sf_dir)
+
+    # the single warm-up pass compiles whole-stage codegen AND pays the
+    # one-off shuffle-path JIT / buffer allocation (measured ~2× on
+    # shuffle-heavy queries), so the timed runs below report steady-state
+    # throughput — what a long-lived cluster session delivers
     errors: dict[str, str] = {}
-    for name in headline:
+    plans: dict[str, list[int]] = {}
+    for name in names:
         try:
-            materialize(QUERIES[name](spark, sf_dir))
+            df = QUERIES[name](spark, sf_dir)
+            materialize(df)
+            plans[name] = plan_counts(df)
         except Exception as exc:  # noqa: BLE001 — record and keep benching
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
 
@@ -338,7 +346,7 @@ def main() -> None:
     times: dict[str, float] = {}
     shuffle_read_mb: dict[str, float] = {}
     shuffle_write_mb: dict[str, float] = {}
-    for name in headline:
+    for name in names:
         if name in errors:
             continue
         best = float("inf")
@@ -357,7 +365,58 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
 
-    total = round(sum(times.values()), 3)
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return {
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "value": round(sum(times.values()), 3),
+        # one-off index-build costs (ingest-time in production), timed
+        # separately so per-query numbers never absorb them (VERDICT r9 #2)
+        "artifacts": artifacts,
+        "queries": times,
+        # per-query exchange volume (delta of executor shuffle totals
+        # around the timed runs, MB per run) — the diffable scale metric
+        "shuffle_read_mb": shuffle_read_mb,
+        "shuffle_write_mb": shuffle_write_mb,
+        # join-shape counts per query, in PLAN_SHAPE order
+        "plan_counts": plans,
+        "errors": errors,
+    }
+
+
+def main() -> None:
+    # one dir, or a comma-separated list run in order in ONE session, so
+    # scale ratios between consecutive dirs carry no cross-session noise
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dirs = [d for d in sf_dir.split(",") if d]
+    # comma-separated query subset (the output contract — one compact JSON
+    # line + the BENCH_full.json sidecar — is pinned by
+    # tests/test_bench_contract.py without paying the full headline set)
+    subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
+    # NO silent caps (VERDICT r7 #3): the bench times EVERY registered
+    # query — the historical HEADLINE set first (its subtotal is reported
+    # separately so round-over-round totals stay comparable), then the
+    # remaining registry in name order as the fast tier.
+    fast_tier = sorted(n for n in QUERIES if n not in set(HEADLINE))
+    headline = (
+        [n for n in subset.split(",") if n]
+        if subset
+        else HEADLINE + fast_tier
+    )
+    spark = get_spark("pdmfs-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    # touch every table of every dir first (FS cache), so no dir's timings
+    # pay another dir's first read
+    from py_datalake_move_files_spark.catalog import TABLES, load_table
+
+    for sf_dir in sf_dirs:
+        for t in TABLES:
+            load_table(spark, sf_dir, t).count()
+
+    first, *later = [run_scale(spark, d, headline) for d in sf_dirs]
+    times = first["queries"]
+    errors = first["errors"]
+    total = first["value"]
     # the historical 163-query headline subtotal keeps the per-round series
     # comparable now that the timed set is the whole registry
     headline_total = round(
@@ -374,18 +433,39 @@ def main() -> None:
         "headline_total": headline_total,
         "queries_timed": len(times),
         "queries_headline": len(headline),
-        # one-off index-build costs (ingest-time in production), timed
-        # separately so per-query numbers never absorb them (VERDICT r9 #2)
-        "artifacts": artifacts,
+        "artifacts": first["artifacts"],
         "queries": times,
-        # per-query exchange volume (delta of executor shuffle totals
-        # around the timed runs, MB per run) — the diffable scale metric
-        "shuffle_read_mb": shuffle_read_mb,
-        "shuffle_write_mb": shuffle_write_mb,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "shuffle_read_mb": first["shuffle_read_mb"],
+        "shuffle_write_mb": first["shuffle_write_mb"],
+        "plan_counts": first["plan_counts"],
+        "sf": first["sf"],
     }
     if errors:
         full["errors"] = errors
+    # the printed line reports every dir's errors, later dirs' keyed by sf
+    all_errors = dict(errors)
+    if later:
+        # each later dir against the one before it: time ratio per query,
+        # and a plan flip wherever the SortMergeJoin or CartesianProduct
+        # count changed with scale
+        flips: list[str] = []
+        for prev, run in zip([first, *later], later):
+            run["time_ratio_vs_prev"] = {
+                n: round(t / prev["queries"][n], 3)
+                for n, t in run["queries"].items()
+                if prev["queries"].get(n)
+            }
+            for n, b in run["plan_counts"].items():
+                a = prev["plan_counts"].get(n)
+                if a is not None and a[2:] != b[2:]:
+                    flips.append(
+                        f"{n}: sf{prev['sf']} {tuple(a)} -> sf{run['sf']} {tuple(b)}"
+                    )
+            all_errors.update(
+                {f"sf{run['sf']}:{n}": e for n, e in run["errors"].items()}
+            )
+        full["later_sfs"] = later
+        full["plan_flips"] = flips
     full_path = Path(
         os.environ.get(
             "SPARK_GRAFT_BENCH_OUT",
@@ -408,15 +488,17 @@ def main() -> None:
         # round-over-round totals comparable (ADVICE r03)
         "queries_timed": len(times),
         "queries_headline": len(headline),
-        "artifacts_total": round(sum(v for v in artifacts.values() if v > 0), 3),
-        "shuffle_read_mb_total": round(sum(shuffle_read_mb.values()), 3),
-        "shuffle_write_mb_total": round(sum(shuffle_write_mb.values()), 3),
+        "artifacts_total": round(
+            sum(v for v in first["artifacts"].values() if v > 0), 3
+        ),
+        "shuffle_read_mb_total": round(sum(first["shuffle_read_mb"].values()), 3),
+        "shuffle_write_mb_total": round(sum(first["shuffle_write_mb"].values()), 3),
         "queries": slowest,
         "queries_note": f"slowest 10 of {len(times)}; full map in {full_path.name}",
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": first["sf"],
     }
-    if errors:
-        out["errors"] = {k: v[:80] for k, v in list(errors.items())[:5]}
+    if all_errors:
+        out["errors"] = {k: v[:80] for k, v in list(all_errors.items())[:5]}
     print(json.dumps(out))
     spark.stop()
 

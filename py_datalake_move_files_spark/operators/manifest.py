@@ -14,8 +14,9 @@ The reference probes blob existence one HTTPS call per manifest row
 Scale note (100 TB / 1000 executors): the manifest is the small side —
 ``broadcast()`` it so the existence check is a broadcast-hash semi join with
 NO shuffle of the (huge) listing. That is the set-at-a-time analogue of the
-reference's "point lookups beat full listing" claim (README.md:118). When the
-manifest itself is huge, drop the hint and let AQE pick a shuffled hash join.
+reference's "point lookups beat full listing" claim (README.md:118). The
+hint is always on: a manifest is a list of file names, small next to the
+listing it probes.
 """
 
 from __future__ import annotations
@@ -49,7 +50,6 @@ def build_archive_plan(
     target_prefix: str,
     filename_col: str = "filename",
     listing_path_col: str = "path",
-    broadcast_manifest: bool = True,
 ) -> DataFrame:
     """Plan DataFrame for the manifest archive copy.
 
@@ -68,9 +68,7 @@ def build_archive_plan(
     # 2. one broadcast LEFT join of manifest × found-keys resolves found and
     #    not-found in a single pass (no semi+anti+union re-scan).
     # The listing is scanned exactly once and never shuffled.
-    keys = qualified.select("source_path")
-    if broadcast_manifest:
-        keys = F.broadcast(keys)
+    keys = F.broadcast(qualified.select("source_path"))
     found_keys = F.broadcast(
         listing_paths.join(keys, "source_path", "left_semi").withColumn(
             "__found", F.lit(1)

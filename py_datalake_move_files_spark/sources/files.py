@@ -19,19 +19,15 @@ def list_files(
     path: str,
     *,
     glob: str | None = None,
-    recursive: bool = True,
 ) -> DataFrame:
     """S2+S4: recursive file catalog of ``path``.
 
     Metadata-only projection (``path, length, modificationTime``) — do NOT
     select ``content`` here; Spark prunes the byte reads away entirely.
     """
-    reader = spark.read.format("binaryFile").option(
-        "recursiveFileLookup", str(recursive).lower()
+    return read_files_with_content(spark, path, glob=glob).select(
+        "path", "length", "modificationTime"
     )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path).select("path", "length", "modificationTime")
 
 
 def read_files_with_content(
@@ -39,12 +35,10 @@ def read_files_with_content(
     path: str,
     *,
     glob: str | None = None,
-    recursive: bool = True,
 ) -> DataFrame:
-    """S5: whole-file bytes as a ``content: binary`` column."""
-    reader = spark.read.format("binaryFile").option(
-        "recursiveFileLookup", str(recursive).lower()
-    )
+    """S5: whole-file bytes as a ``content: binary`` column, listed
+    recursively."""
+    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
@@ -56,7 +50,6 @@ def read_content_after_metadata_filter(
     metadata_pred,
     *,
     glob: str | None = None,
-    recursive: bool = True,
 ) -> DataFrame:
     """Stage 2 of the two-stage content pipeline (SURVEY §4 row 2: "cheap
     metadata date filter before expensive content download",
@@ -74,9 +67,7 @@ def read_content_after_metadata_filter(
     over-maxLength file that the predicate rejects does not fail the scan —
     it would throw if its content were materialized) and by plan assertion
     (the FileScan carries the pushed modificationTime filter)."""
-    return read_files_with_content(
-        spark, path, glob=glob, recursive=recursive
-    ).where(metadata_pred)
+    return read_files_with_content(spark, path, glob=glob).where(metadata_pred)
 
 
 def with_decoded_text(df: DataFrame, *, content_col: str = "content") -> DataFrame:

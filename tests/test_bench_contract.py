@@ -4,7 +4,8 @@ JSON object as its final stdout line, small enough that tail capture
 cannot truncate it, and (b) write the full per-query map to the sidecar.
 
 Runs bench.py as a real subprocess (the way the driver does) on a 2-query
-subset at sf0.001 — the contract is the same at any scale."""
+subset at sf0.001 then sf0.01 in one session — the contract is the same at
+any scale, and the second dir exercises the multi-scale sidecar fields."""
 
 from __future__ import annotations
 
@@ -23,7 +24,7 @@ def test_bench_emits_one_compact_json_line_and_sidecar(tmp_path):
     out_sidecar = tmp_path / "bench_full.json"
     env = dict(
         os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
+        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001,/root/testdata/sf0.01",
         SPARK_GRAFT_CPUS="8",
         SPARK_GRAFT_BENCH_QUERIES="q1_pricing_summary,orders_by_month",
         SPARK_GRAFT_BENCH_OUT=str(out_sidecar),
@@ -63,6 +64,21 @@ def test_bench_emits_one_compact_json_line_and_sidecar(tmp_path):
         assert all(v >= 0 for v in full[field].values()), full[field]
     assert full["shuffle_write_mb"]["q1_pricing_summary"] > 0
     assert summary["shuffle_read_mb_total"] >= 0
+
+    # join shape per timed query: hash exchanges, broadcast exchanges,
+    # SortMergeJoin, CartesianProduct
+    assert set(full["plan_counts"]) == set(full["queries"])
+    for counts in full["plan_counts"].values():
+        assert len(counts) == 4 and all(c >= 0 for c in counts), counts
+
+    # the second dir's maps, its time ratios against the first, and the
+    # plan-flip list between them
+    (second,) = full["later_sfs"]
+    assert second["sf"] == 0.01
+    for field in ("queries", "shuffle_read_mb", "shuffle_write_mb",
+                  "plan_counts", "time_ratio_vs_prev"):
+        assert set(second[field]) == {"q1_pricing_summary", "orders_by_month"}, field
+    assert isinstance(full["plan_flips"], list)
 
 
 @pytest.mark.heavy

@@ -117,3 +117,32 @@ def test_two_stage_content_scan_never_reads_rejected_bytes(spark, tmp_path):
             ).collect()
     finally:
         spark.conf.unset("spark.sql.sources.binaryFile.maxLength")
+
+
+def test_list_files_prunes_content_from_the_scan(spark, tmp_path):
+    """The metadata listing relies on column pruning: the binaryFile scan
+    under ``list_files`` must not read ``content``. Plan check (the
+    FileScan's ReadSchema has no content field) plus the maxLength device
+    of the test above: an over-limit file lists without error because its
+    bytes are never read."""
+    from py_datalake_move_files_spark.sources.files import list_files
+
+    d = tmp_path / "lake" / "nested"
+    d.mkdir(parents=True)
+    (d / "huge.json").write_text("x" * 4096)
+
+    spark.conf.set("spark.sql.sources.binaryFile.maxLength", "1024")
+    try:
+        df = list_files(spark, str(tmp_path / "lake"))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        scans = [ln for ln in plan.splitlines() if "FileScan binaryFile" in ln]
+        assert scans, plan
+        for ln in scans:
+            read_schema = ln.split("ReadSchema:")[-1]
+            assert "path" in read_schema and "content" not in read_schema, ln
+        rows = df.collect()
+        assert [(r.path.rsplit("/", 1)[-1], r.length) for r in rows] == [
+            ("huge.json", 4096)
+        ]
+    finally:
+        spark.conf.unset("spark.sql.sources.binaryFile.maxLength")

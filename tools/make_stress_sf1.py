@@ -23,6 +23,11 @@ real scale dims grow far slower than facts, and the broadcast-ability
 the plans rely on is exactly what the smoke must preserve.
 
 Run from the repo root:  python tools/make_stress_sf1.py
+then bench it after a smaller scale in one session, for per-query sf1
+time ratios and plan flips in the sidecar (TESTDATA.md names the
+test-data dir):
+    SPARK_GRAFT_SF_DIR=<test-data dir>/sf0.1,.stress/sf1 \
+    SPARK_GRAFT_BENCH_OUT=BENCH_sf1_spot.json python bench.py
 (sf10 = the same recipe applied to the sf1 output:
     python tools/make_stress_sf1.py --src .stress/sf1 --out .stress/sf10
 the anti-clone devices compose — replica-keyed token rewrites and key
