@@ -55,7 +55,7 @@ HEADLINE = [
     "pii_redaction",
     "ann_ivf_topk",
     "corpus_curation_pipeline",
-    # r3: the event-time batch-twins of the streaming tier
+    # r3: event-time batch queries
     "interval_attribution_bucketed",
     # r4: the scale-pattern tier joins the headline set (VERDICT r3 #6)
     "fuzzy_customer_pairs",

@@ -5,16 +5,18 @@ Re-expresses the capabilities of the reference ETL utility
 (krben/py-datalake-move-files: manifest-driven archive copy, list-filter-move,
 JSON content predicates, audited parallel sinks) as declarative Spark
 DataFrame plans, and extends them — per the engine north star — with full
-relational coverage (joins/aggregates/windows/set-ops), streaming, and
-LLM-data-pipeline operators (dedup, similarity search, text analysis).
+relational coverage (joins/aggregates/windows/set-ops) and LLM-data-pipeline
+operators (dedup, similarity search, text analysis).
 
 Layout:
     session     — SparkSession factory tuned for lake-scale work (AQE, Arrow)
+    config      — Azure OAuth credentials from env, applied for abfss:// paths
     catalog     — test-table + manifest loaders with fixed schemas
-    sources/    — file-catalog scan, CSV manifest, JSON readers
+    sources/    — binaryFile listing and content scans
     operators/  — paths, predicates, manifest joins, dedup, similarity, text
-    plans/      — plan-then-execute move/copy sink with audit DataFrame
-    streaming/  — incremental file-arrival tier (Structured Streaming)
+    plans/      — plan-then-execute move/copy sink with audit DataFrame,
+                  retention/compaction/z-order maintenance
+    cli         — archive/move/maintenance/report commands
     queries     — named query registry + DuckDB oracle SQL (driver contract)
 """
 

@@ -40,19 +40,6 @@ MANIFEST_SCHEMA = T.StructType(
     ]
 )
 
-#: Schema of the reference's table-catalog CSV (app/quotes/Results.csv).
-TABLE_CATALOG_SCHEMA = T.StructType(
-    [
-        T.StructField("SourceSchema", T.StringType()),
-        T.StructField("SourceTableName", T.StringType()),
-        T.StructField("Source", T.StringType()),
-    ]
-)
-
-
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_snapshot(sf_dir: str, name: str) -> tuple:
     """Cache-key fingerprint of a table: (path, mtime_ns, size) for a local

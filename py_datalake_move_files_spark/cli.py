@@ -12,8 +12,10 @@ user of ``krben/py-datalake-move-files`` can switch 1:1:
 
 Both print the audit summary the reference printed per batch
 (app/app.py:133-152, app/main.py:305-309), but computed from the audit
-DataFrame. Paths are local-FS here; pointing at ABFS is a matter of Hadoop
-conf (see config.py) — the plans don't change.
+DataFrame. When any path argument is an ``abfss://`` URI, the session gets
+the Azure OAuth conf built from the ``AZURE_*`` credentials in the
+environment (config.py); a missing credential is reported before Spark
+starts. The plans don't change.
 
 Usage:
     python -m py_datalake_move_files_spark archive \
@@ -696,11 +698,39 @@ def _as_uri(path: str) -> str:
     return f"file:{path}"
 
 
+#: arguments whose value Spark reads or writes as a lake path
+_PATH_ARGS = (
+    "manifest",
+    "source",
+    "target",
+    "sf_dir",
+    "against",
+    "output",
+    "diff_against",
+)
+
+
+def _azure_conf(args: argparse.Namespace) -> dict[str, str] | None:
+    """Azure OAuth session conf iff some path argument is an ``abfss://``
+    URI; raises ``ValueError`` when credentials are missing."""
+    paths = (getattr(args, a, None) for a in _PATH_ARGS)
+    if not any(p and p.startswith("abfss://") for p in paths):
+        return None
+    from py_datalake_move_files_spark.config import LakeConfig, azure_oauth_conf
+
+    return azure_oauth_conf(LakeConfig.from_env())
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
+    try:
+        extra_conf = _azure_conf(args)
+    except ValueError as exc:
+        print(f"error: {exc}", file=sys.stderr)
+        return 1
     from py_datalake_move_files_spark.session import get_spark
 
-    spark = get_spark("pdmfs-cli")
+    spark = get_spark("pdmfs-cli", extra_conf=extra_conf)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         if args.cmd == "archive":

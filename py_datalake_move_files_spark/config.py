@@ -3,14 +3,16 @@ re-expressed as Spark/Hadoop conf.
 
 The reference reads ~30 env vars at import (app/config.py:1-44); only the
 Azure group (app/config.py:15-20) affects its pipelines — client id/secret/
-tenant + account/container. On Spark those become Hadoop ABFS OAuth confs
+tenant + storage account. On Spark those become Hadoop ABFS OAuth confs
 applied to the session, and every executor then reads/writes the lake
-directly (no credential plumbing through tasks). The D365/Graph/logging
+directly (no credential plumbing through tasks). The CLI applies them
+whenever a path argument is an ``abfss://`` URI. The D365/Graph/logging
 groups are vestigial in the reference (unreferenced by app.py/main.py —
-SURVEY.md §3.3) and are intentionally NOT reproduced.
+SURVEY.md §3.3) and are intentionally NOT reproduced; the container and
+prefixes are part of each ``abfss://container@account.../prefix`` path.
 
-No cloud is reachable in this environment; :func:`azure_oauth_conf` only
-builds the conf dict (unit-testable), it performs no I/O.
+:func:`azure_oauth_conf` only builds the conf dict (unit-testable); it
+performs no I/O.
 """
 
 from __future__ import annotations
@@ -21,20 +23,14 @@ from dataclasses import dataclass
 
 @dataclass(frozen=True)
 class LakeConfig:
-    """Typed replacement for the reference's flat ``os.getenv`` module.
-
-    Mirrors app/config.py:15-20: client id/secret/tenant, storage account,
-    container/filesystem, plus the source/target prefixes both pipelines
-    hard-code (app/app.py:38-43, app/main.py:21-27).
-    """
+    """Typed replacement for the reference's flat ``os.getenv`` module:
+    the credential half of app/config.py:15-20 (client id/secret/tenant
+    and storage account)."""
 
     tenant_id: str | None = None
     client_id: str | None = None
     client_secret: str | None = None
     account_name: str | None = None
-    container: str | None = None
-    source_prefix: str = ""
-    target_prefix: str = ""
 
     @classmethod
     def from_env(cls, env: dict[str, str] | None = None) -> "LakeConfig":
@@ -44,28 +40,25 @@ class LakeConfig:
             client_id=e.get("AZURE_CLIENT_ID"),
             client_secret=e.get("AZURE_CLIENT_SECRET"),
             account_name=e.get("AZURE_STORAGE_ACCOUNT_NAME"),
-            container=e.get("AZURE_STORAGE_CONTAINER"),
-            source_prefix=e.get("SOURCE_PREFIX", ""),
-            target_prefix=e.get("TARGET_PREFIX", ""),
         )
 
     def validate(self) -> list[str]:
         """The reference skips validation and fails later at client
         construction (SURVEY.md §3.3) — here missing keys are reported
         up front."""
-        missing = [
+        return [
             k
             for k in ("tenant_id", "client_id", "client_secret", "account_name")
             if getattr(self, k) in (None, "")
         ]
-        return missing
 
 
 def azure_oauth_conf(cfg: LakeConfig) -> dict[str, str]:
     """Hadoop ABFS OAuth client-credential confs equivalent to the
-    reference's ``ClientSecretCredential`` (app/app.py:26-28). Apply with
-    ``get_spark(extra_conf=azure_oauth_conf(cfg))`` (or per-bucket variants)
-    and read ``abfss://container@account.dfs.core.windows.net/...`` paths."""
+    reference's ``ClientSecretCredential`` (app/app.py:26-28), applied as
+    ``get_spark(extra_conf=azure_oauth_conf(cfg))`` so the session reads
+    and writes ``abfss://container@account.dfs.core.windows.net/...``
+    paths. Raises ``ValueError`` naming the missing keys."""
     missing = cfg.validate()
     if missing:
         raise ValueError(f"missing Azure config: {', '.join(missing)}")
@@ -82,10 +75,3 @@ def azure_oauth_conf(cfg: LakeConfig) -> dict[str, str]:
         ),
     }
 
-
-def abfss_uri(cfg: LakeConfig, path: str = "") -> str:
-    """``abfss://container@account.dfs.core.windows.net/path``."""
-    return (
-        f"abfss://{cfg.container}@{cfg.account_name}.dfs.core.windows.net/"
-        + path.lstrip("/")
-    )

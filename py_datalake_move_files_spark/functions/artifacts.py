@@ -31,8 +31,7 @@ Cache-key discipline (each component closes a distinct staleness hole):
 Only metadata-sized artifacts belong here (id pairs, id→label maps —
 O(N·k) ids, never documents or embeddings); entries accrue per distinct
 key for the process lifetime, which is bounded by design (a session
-touches a handful of (table-snapshot, params) combinations).  ``clear()``
-exists for tests that rewrite fixtures in-process.
+touches a handful of (table-snapshot, params) combinations).
 """
 
 from __future__ import annotations
@@ -64,8 +63,3 @@ def shared_artifact(
         _ARTIFACTS[full] = df
     return df
 
-
-def clear() -> None:
-    """Drop every cached artifact (tests that rewrite fixture tables
-    in-process call this; GC then reclaims the checkpoint blocks)."""
-    _ARTIFACTS.clear()

@@ -69,15 +69,7 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     scan is estimated to produce fewer partitions than half of that — i.e.
     only when the input is too concentrated to use the cluster. Never
     coalesces, and never repartitions on estimate-failure (remote lakes,
-    in-memory frames), where the scan is presumed already wide.
-
-    Streaming DataFrames pass through untouched: ``df.rdd``-family APIs
-    are illegal on a stream (analysis error), micro-batch partitioning is
-    the source's concern, and the guard exists only for the
-    tiny-local-file case — so every map-only operator that calls this
-    stays stream-compatible."""
-    if df.isStreaming:
-        return df
+    in-memory frames), where the scan is presumed already wide."""
     sc = df.sparkSession.sparkContext
     target = min_parts or sc.defaultParallelism
     est = _estimated_scan_partitions(df)

@@ -1,23 +1,12 @@
-"""Mergeable-sketch materialization: HyperLogLog partials per grain, unioned
+"""Mergeable count-min sketches: bounded frequency cells per grain, summed
 at query time.
 
-THE 100 TB rollup pattern for distinct counts: ``COUNT(DISTINCT user)`` over
-a quarter cannot be derived from daily exact counts (distincts don't add),
-so either every query re-shuffles the quarter's raw keys — or the pipeline
-materializes a DAILY HLL SKETCH (KBs per grain, computed with map-side
-combine in one pass) and every window/rollup query afterwards is a cheap
-``hll_union_agg`` over a few hundred sketch rows. Spark ships the Apache
-DataSketches HLL family as SQL aggregates (``hll_sketch_agg`` /
-``hll_union_agg`` / ``hll_sketch_estimate``), all JVM-side.
-
-The estimates are deterministic for a given item set (the sketch hashes
-values, not partition layouts) and the union is associative/commutative, so
-``estimate(union(daily)) == estimate(sketch(whole corpus))`` EXACTLY — the
-invariant pinned in tests/test_sketches.py. For the HLL tier no DuckDB
-oracle exists (DuckDB's ``approx_count_distinct`` is a different sketch),
-so it is pytest-verified rather than registry-checked, like the streaming
-surface. The count-min tier below IS oracle-checked
-(``cms_token_frequencies``): its cells are plain md5-bucket counts.
+A count-min sketch (CMS) turns an unbounded token stream into at most
+``depth·width`` cells per grain. Cells are LINEAR (the cells of A∪B are the
+elementwise sum of A's and B's), so per-day cell tables answer any-window
+frequency estimates later without re-shuffling raw tokens. The cells are
+plain md5-bucket counts, so the tier is oracle-checked
+(``cms_token_frequencies``, ``cms_join_size_estimate``).
 
 No analogue in the reference (a 565-LoC file mover, app/main.py); part of
 the engine's analytics mandate (BASELINE.json north star).
@@ -53,10 +42,10 @@ def cms_cells(
     at most ``depth·width`` cells per grain regardless of item cardinality.
 
     The CMS is LINEAR (cells of A∪B = elementwise sum of cells of A and
-    cells of B — pinned in tests/test_sketches.py), which makes it the
-    frequency analogue of the HLL partials above: materialize per-day cell
-    tables once, answer any-window frequency estimates later by summing a
-    few thousand cell rows instead of re-shuffling the raw token stream.
+    cells of B — pinned in tests/test_sketches.py): materialize per-day
+    cell tables once, answer any-window frequency estimates later by
+    summing a few thousand cell rows instead of re-shuffling the raw token
+    stream.
     Point estimate = min over the ``depth`` row buckets; always ≥ the true
     count (hashing collisions only ADD).
 
@@ -106,42 +95,3 @@ def cms_estimate(
         .agg(F.min("n").cast("long").alias("cms_est"))
     )
 
-
-def sketch_partials(
-    df: DataFrame,
-    item_col: str,
-    grain_cols: Sequence[str],
-    *,
-    lg_k: int = 12,
-    out: str = "hll_sketch",
-) -> DataFrame:
-    """One HLL sketch (binary, ~2^lg_k bytes max) + exact row count per
-    grain. ONE shuffle keyed on the grain, partial sketches merged
-    map-side — this is the expensive pass, run once per data drop and
-    written next to the data as the distinct-count 'index'."""
-    return df.groupBy(*grain_cols).agg(
-        F.hll_sketch_agg(F.col(item_col), F.lit(lg_k)).alias(out),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-    )
-
-
-def union_estimate(
-    partials: DataFrame,
-    group_cols: Sequence[str] = (),
-    *,
-    sketch_col: str = "hll_sketch",
-    out: str = "approx_distinct",
-) -> DataFrame:
-    """Roll sketch partials up to ``group_cols`` (empty = grand total):
-    ``hll_union_agg`` over sketch rows, never the raw items. A quarter's
-    distinct users from daily partials touches ~90 KB-sized rows instead
-    of re-shuffling the quarter's raw keys."""
-    grouped = (
-        partials.groupBy(*group_cols) if group_cols else partials.groupBy()
-    )
-    return grouped.agg(
-        F.hll_sketch_estimate(F.hll_union_agg(F.col(sketch_col)))
-        .cast("long")
-        .alias(out),
-        F.sum("n_rows").cast("long").alias("n_rows"),
-    )

@@ -39,7 +39,7 @@ LLM-pipeline tier (SURVEY.md "beyond-reference" mandate).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 #: seeds for the two xxhash64 calls behind double hashing; any fixed
 #: distinct pair works, pinned so filters are stable across runs

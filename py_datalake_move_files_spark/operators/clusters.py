@@ -144,24 +144,3 @@ def connected_components(
     # one row per clustered node, lineage already truncated
     return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
 
-
-def dedup_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    *,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Full dedup grouping: cluster members from ``pairs`` plus singletons
-    (cluster of themselves). Returns ``(doc_id, cluster_id, is_representative)``.
-    ``checkpoint_dir`` is forwarded to :func:`connected_components`.
-    """
-    cc = connected_components(pairs, checkpoint_dir=checkpoint_dir)
-    base = docs.select(F.col(id_col).alias("node"))
-    labeled = base.join(cc, "node", "left").select(
-        F.col("node").alias(id_col),
-        F.coalesce(F.col("cluster_id"), F.col("node")).alias("cluster_id"),
-    )
-    return labeled.withColumn(
-        "is_representative", (F.col(id_col) == F.col("cluster_id")).cast("boolean")
-    )

@@ -29,11 +29,6 @@ from py_datalake_move_files_spark.functions.scaling import ensure_parallelism
 _UNIQ = iter(range(10**9))
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokens."""
-    return F.split(text, " ")
-
-
 def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3, out: str = "shingle_set") -> DataFrame:
     """Add a distinct k-word-shingle array column.
 
@@ -178,10 +173,8 @@ def incremental_dedup(
     O(index + batch) — and the index side carries ONLY keys (32-B digests
     or fingerprints), never documents. The classify join shuffles both
     sides on the key; a production index stored bucketed by key makes the
-    index side shuffle-free (plans/layout bucketing pattern). The
-    within-batch window rides the join's key partitioning. This is the
-    batch twin of the streaming tier's ``dedup_within_watermark``
-    (streaming/joins.py) with an unbounded, durable state."""
+    index side shuffle-free (Spark ``bucketBy``). The within-batch window
+    rides the join's key partitioning."""
     w = Window.partitionBy(key_col).orderBy(F.col(id_col).asc())
     j = new_batch.join(
         index_keys.select(key_col).distinct().withColumn("__hit", F.lit(1)),

@@ -8,13 +8,12 @@ min, max — the commutative-monoid aggregates), fold each new batch into a
 partial of its own, and MERGE states instead of touching historical data.
 At 100 TB the historical state is ~#keys rows while a day's delta is tiny:
 merging shuffles only the two state tables on the key — the raw fact table
-is read exactly once, ever, per batch. Derived measures (avg) are finalized
-from the merged states, never stored, so they stay exactly mergeable.
+is read exactly once, ever, per batch. Derived measures (avg = sum / cnt)
+are computed by the reader from the merged states, never stored, so the
+states stay exactly mergeable.
 
-This is the batch twin of Structured Streaming's stateful aggregation
-(``streaming/filestream.py`` windowed aggs keep the same states in the
-state store); snapshot_diff (``operators/delta.py``) tells you *what*
-changed, this tier folds those changes into standing aggregates.
+snapshot_diff (``operators/delta.py``) tells you *what* changed; this tier
+folds those changes into standing aggregates.
 """
 
 from __future__ import annotations
@@ -24,10 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["partial_aggs", "merge_partials", "finalize_aggs"]
-
-#: state column name templates per measure column
-_STATES = ("cnt_{c}", "sum_{c}", "min_{c}", "max_{c}")
+__all__ = ["partial_aggs", "merge_partials"]
 
 
 def partial_aggs(
@@ -69,17 +65,3 @@ def merge_partials(
         )
     return base.unionByName(delta).groupBy(*keys).agg(*merged_aggs)
 
-
-def finalize_aggs(
-    states: DataFrame, measures: Sequence[str], *, round_avg: int | None = None
-) -> DataFrame:
-    """Derive the non-mergeable measures (avg) from merged states at read
-    time. ``avg_c = sum_c / cnt_c`` — computed on the final states so the
-    view is exact regardless of how many merges produced them."""
-    out = states
-    for c in measures:
-        avg = F.col(f"sum_{c}") / F.col(f"cnt_{c}")
-        if round_avg is not None:
-            avg = F.round(avg, round_avg)
-        out = out.withColumn(f"avg_{c}", avg)
-    return out

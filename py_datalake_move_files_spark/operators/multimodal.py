@@ -24,16 +24,6 @@ from pyspark.sql import types as T
 
 from py_datalake_move_files_spark.functions.scaling import ensure_parallelism
 
-#: typed metadata carried next to the opaque bytes
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
-
 IMAGE_META_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),

@@ -15,11 +15,14 @@ Spark-first design notes:
   family). Each arm scans only its own parquet column (column pruning),
   dedups map-side, and shuffles just the distinct values — the same
   exchange bytes the Expand plan paid, without the row multiplication;
-  the arms share no barrier, so their stages overlap. If even exact
-  per-column distincts are too heavy, callers swap ``approx=True`` (HLL,
-  one sketch per column per partition, single pass). The wide one-row
-  base reshapes to one-row-per-column with ``stack`` and the distinct
-  arms attach via a #columns-row broadcast join — driver-free, one job.
+  the arms share no barrier, so their stages overlap. The exact path
+  therefore scans the input 1 + #columns times: the base aggregate plus
+  one pruned single-column scan per arm (``orders`` at sf0.01 on 6
+  columns: 7 parquet scans, 15 jobs). ``approx=True`` is the single-scan
+  option (HLL, one sketch per column per partition, inside the base
+  aggregate: 1 scan, 2 jobs on the same input). The wide one-row base
+  reshapes to one-row-per-column with ``stack`` and the distinct arms
+  attach via a #columns-row broadcast join; the function runs no action.
 * :func:`histogram_fixed_width` is the classic two-job histogram: a tiny
   global min/max aggregate (one row, broadcast back) then one shuffle on
   the bucket id. Bucket arithmetic is plain double math with a fixed
@@ -46,8 +49,9 @@ def profile_table(
     repr_exprs: dict[str, "Callable[[Column], Column]"] | None = None,
     approx: bool = False,
 ) -> DataFrame:
-    """One-pass column profile: ``(column, n_rows, n_nulls, n_distinct,
-    min_repr, max_repr)`` — one output row per profiled column.
+    """Column profile: ``(column, n_rows, n_nulls, n_distinct, min_repr,
+    max_repr)`` — one output row per profiled column. The exact path scans
+    the input 1 + #columns times; ``approx=True`` scans it once.
 
     min/max are computed on the NATIVE values and only then rendered to
     string (so numeric columns report numeric extremes, not lexicographic

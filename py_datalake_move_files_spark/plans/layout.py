@@ -1,65 +1,14 @@
-"""Lake write layout: partitioned parquet sinks with pruning-friendly
-physical layout.
+"""Lake write layout: the z-order (Morton) clustering key.
 
 The reference writes one blob per file (app/main.py:179-182); an analytics
-lake instead lays data out as ``partition_col=value/`` directories so reads
-with partition predicates never touch irrelevant files (partition pruning —
-visible as ``PartitionFilters`` in the scan). At 100 TB, partition columns
-carry the coarse access dimensions (date, source, event type) and
-``sortWithinPartitions`` gives min/max row-group statistics for fine-grained
-predicate skipping inside each file.
-
-Pruning comes in two tiers, both proven in tests/test_layout.py: STATIC
-(a literal partition predicate — or one Catalyst infers through join-key
-constraint propagation — lands in ``PartitionFilters`` at planning time)
-and DYNAMIC (star-join shape: the fact carries no predicate at all and a
-selective dim-side filter prunes fact partitions at RUNTIME via a
-``dynamicpruning`` subquery reusing the dim broadcast — the 100 TB
-fact-dim access path).
+lake instead clusters rows so parquet row-group min/max statistics skip
+irrelevant data. :func:`zorder_key` interleaves several columns' bits into
+one sort key (used by ``plans/maintenance.optimize_zorder`` and the
+``zorder_locality`` query); :func:`zorder_key_sql` is the same key as
+portable SQL text for the DuckDB oracle.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: list[str],
-    sort_within: list[str] | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Write ``df`` hive-partitioned by ``partition_by``; optionally sort
-    rows inside each file so parquet row-group min/max stats prune well."""
-    out = df
-    if sort_within:
-        out = df.repartition(*[df[c] for c in partition_by]).sortWithinPartitions(
-            *sort_within
-        )
-    out.write.partitionBy(*partition_by).mode(mode).format(fmt).save(path)
-
-
-def read_pruned(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Read a partitioned layout; partition-column filters applied by the
-    caller prune directories at planning time."""
-    return spark.read.format(fmt).load(path)
-
-
-def read_evolved(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Read a layout whose parquet files were written under EVOLVING schemas
-    (columns added over time): ``mergeSchema`` unions every footer's schema
-    at planning time, and files missing a column yield nulls for it.
-
-    The lake-ingest reality a long-lived table faces — new drops grow
-    columns, history stays readable untouched. Schema merge costs one
-    footer read per file at planning (no data rewrite); at 100 TB you pin
-    the merged schema in a catalog instead of re-merging per query, but
-    the per-file null-fill behavior is identical. ``fmt`` accepts any
-    footer-schema'd columnar source (parquet, orc)."""
-    return spark.read.option("mergeSchema", "true").format(fmt).load(path)
 
 
 def zorder_key(cols: list[str], *, bits: int = 8):
@@ -102,103 +51,3 @@ def zorder_key_sql(cols: list[str], *, bits: int = 8) -> str:
                 f"THEN {2 ** (b * len(cols) + i)} ELSE 0 END)"
             )
     return " + ".join(terms)
-
-
-def write_with_stats_index(
-    df: DataFrame,
-    path: str,
-    *,
-    stats_col: str,
-    n_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Range-clustered write + file-level min/max stats sidecar — the
-    lakehouse data-skipping index (Delta/Iceberg keep exactly this in
-    their metadata): ``repartitionByRange`` clusters the stats column so
-    each file owns a narrow value range, then one metadata-only pass
-    aggregates per-file (min, max, rows) into ``<path>__stats``.
-
-    Parquet row-group stats already skip WITHIN a file once it is opened;
-    this sidecar skips the file OPEN itself (at 100 TB: planning reads a
-    KB-scale stats table instead of footers of 100k files — the listing
-    and footer round-trips are the cold-read bottleneck, not the bytes).
-    The sidecar is derived purely from the written files
-    (``input_file_name`` aggregate), so a rewrite that forgets the
-    sidecar fails closed: read_with_stats_pruning refuses a stale index
-    (file-set mismatch) rather than silently scanning everything."""
-    from pyspark.sql import functions as F
-
-    (
-        df.repartitionByRange(n_files, stats_col)
-        .write.mode(mode)
-        .parquet(path)
-    )
-    spark = df.sparkSession
-    written = spark.read.parquet(path)
-    stats = (
-        written.groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.min(stats_col).alias("min_v"),
-            F.max(stats_col).alias("max_v"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-    stats.coalesce(1).write.mode(mode).parquet(path + "__stats")
-
-
-def read_with_stats_pruning(
-    spark: SparkSession,
-    path: str,
-    *,
-    stats_col: str,
-    lo,
-    hi,
-) -> DataFrame:
-    """Open ONLY the files whose [min, max] range intersects [lo, hi],
-    per the stats sidecar, then apply the residual predicate (file stats
-    are necessary, not sufficient). Raises if the sidecar's file set
-    disagrees with the directory listing (stale index — fail closed).
-
-    Returns the same rows as ``spark.read.parquet(path).where(lo <= c <=
-    hi)`` (pinned in tests/test_layout) while touching a subset of the
-    files; the staleness check is a pure Hadoop ``FileSystem.listStatus``
-    metadata call (VERDICT r5 #4 — the previous implementation validated
-    the index with a Spark job over every ROW of the table, negating the
-    skipping it implements; now no table byte is read before pruning,
-    proved in tests by a garbage .parquet decoy that would crash any
-    row-reading check but merely trips the stale-index error here).
-
-    Driver-round-trip bound (VERDICT r9 #7): the ``.collect()`` below
-    reads the STATS SIDECAR, whose row count equals the number of data
-    files in the table — never the row count of the data. At 100 TB /
-    128 MB files that is ~8·10⁵ rows of (path, min, max) ≈ tens of MB,
-    the same metadata scale every table format's planner holds on the
-    driver (Delta checkpoint, Iceberg manifests). Asserted in
-    tests/test_layout.py (sidecar rows == part-file count)."""
-    from pyspark.sql import functions as F
-
-    stats = spark.read.parquet(path + "__stats").collect()
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    listed = set()
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if st.isFile() and name.endswith(".parquet") and name[0] not in "_.":
-            listed.add(name)
-    # sidecar records full input_file_name() URIs; compare by basename
-    # (part-file names embed a write UUID, so basenames are unique)
-    indexed = {r.file.rsplit("/", 1)[-1] for r in stats}
-    if listed != indexed:
-        raise ValueError(
-            f"stats index is stale: {len(indexed)} indexed vs "
-            f"{len(listed)} listed files — rewrite via write_with_stats_index"
-        )
-    keep = [r.file for r in stats if not (r.max_v < lo or r.min_v > hi)]
-    if not keep:
-        base = spark.read.parquet(path)
-        return base.where(F.lit(False))
-    return (
-        spark.read.parquet(*keep)
-        .where((F.col(stats_col) >= lo) & (F.col(stats_col) <= hi))
-    )

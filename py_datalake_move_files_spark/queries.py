@@ -867,8 +867,7 @@ FROM s GROUP BY user_id, sid
 """,
 )
 def q_sessionize_events(spark, sf_dir):
-    """Gaps-and-islands sessionization (30-min inactivity) — the batch twin
-    of the streaming tier's session_window."""
+    """Gaps-and-islands sessionization (30-min inactivity)."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -900,8 +899,8 @@ FROM events GROUP BY 1, 2
 """,
 )
 def q_hourly_event_stats(spark, sf_dir):
-    """Tumbling-window aggregate (batch form; streaming/ runs the same plan
-    incrementally with a watermark)."""
+    """Tumbling-window aggregate: hourly count and value sum per event
+    type."""
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy(
         F.unix_millis(F.date_trunc("hour", F.col("ts"))).alias("hour_ms"),
@@ -1921,8 +1920,7 @@ SELECT window_start_ms, event_type, CAST(count(*) AS BIGINT) AS n FROM (
 def q_sliding_window_counts(spark, sf_dir):
     """Sliding windows (1 h long, 30 min slide): each event lands in two
     windows — Spark's window() generator; the oracle mirrors it as a UNION
-    ALL of the two half-hour-aligned starts. Batch twin of the streaming
-    sliding aggregate."""
+    ALL of the two half-hour-aligned starts."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(

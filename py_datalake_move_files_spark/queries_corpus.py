@@ -2433,7 +2433,6 @@ def _eval_sample_spark(k: int) -> str:
     )
 
 
-_EVAL_SAMPLE_SPARK = _eval_sample_spark(_EVAL_SAMPLE_K)
 _EVAL_SAMPLE_DUCK = (
     "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT"
     f" % {_EVAL_SAMPLE_K} = 0"

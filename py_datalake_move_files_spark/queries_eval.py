@@ -108,10 +108,9 @@ def _dd_bm25_run(qid: int, terms: tuple[str, ...]) -> str:
 """
 
 
-#: DuckDB / Spark spellings of "term present in the split text" — filled
-#: per term via str.format (kept OUT of f-strings: nested-brace hazard)
+#: DuckDB spelling of "term present in the split text" — filled per term
+#: via str.format (kept OUT of f-strings: nested-brace hazard)
 _DD_HAS_TERM = "list_contains(string_split(text, ' '), '{term}')"
-_SP_HAS_TERM = "array_contains(split(text, ' '), '{term}')"
 
 
 def _ndcg_oracle() -> str:

@@ -390,9 +390,8 @@ def q_ivf_assignment_drift(spark, sf_dir):
     to retrain/split lists; until it fires, new vectors append into the
     existing cells with the same zero-shuffle map-stage assignment as a
     full build — no index rebuild, the property that makes IVF workable
-    under continuous ingest at 100 TB. (Batch twin of the streaming
-    foreach-batch ingest pattern; centroids deliberately NOT cached —
-    they key to the old half, not the whole-table snapshot.)"""
+    under continuous ingest at 100 TB. (Centroids deliberately NOT
+    cached — they key to the old half, not the whole-table snapshot.)"""
     emb = _t(spark, sf_dir, "embeddings")
     cents = SIM.ivf_centroids(
         emb.where(F.col("vec_id") % 2 == 0), n_lists=N_LISTS

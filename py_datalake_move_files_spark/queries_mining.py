@@ -21,10 +21,7 @@ device), ``rich_club_coefficient`` (degree-threshold density curve over
 the shared kNN census artifacts), ``effective_sample_size`` (Kish ESS
 of quality-weighted sampling per source from exact micro-integer weight
 moments), and ``weighted_median_price`` (quantity-weighted median in
-exact cents ×2 via the grouped bounded-histogram rank device). The
-streaming twin of ``changepoint_daily_events`` lives in
-streaming/filestream (``changepoint_from_state``) and runs the SAME
-``changepoint_over_daily`` device. Tier 1:
+exact cents ×2 via the grouped bounded-histogram rank device). Tier 1:
 
 - ``simhash_dup_pairs`` — banded Hamming near-dup PAIRS over 32-bit
   SimHash fingerprints (``simhash_fingerprints`` stops at per-doc
@@ -521,11 +518,8 @@ def q_changepoint_daily_events(spark, sf_dir):
 
 
 def changepoint_over_daily(d):
-    """The change-point device over a (d, c) daily frame — shared by the
-    batch query above and the streaming reader
-    (streaming/filestream.changepoint_from_state), so the two tiers
-    cannot drift: same prefix-sum window, same integer score numerator,
-    same tie-break."""
+    """The change-point device over a (d, c) daily frame: one prefix-sum
+    window, an integer score numerator and a deterministic tie-break."""
     wo = Window.orderBy("d")
     wcum = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     wall = Window.partitionBy()

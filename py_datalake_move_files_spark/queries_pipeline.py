@@ -11,7 +11,7 @@ kind of planning/auditing pass a 100 TB training-data lake runs daily:
 - ``event_order_violations`` — out-of-order-ingest audit: fraction of
   events per user whose timestamp precedes the running max of earlier
   ingested events (ingest order = event_id). The data-quality gate in
-  front of every watermark choice in the streaming tier.
+  front of any incremental-ingest watermark choice.
 - ``partition_compaction_plan`` — small-partition compaction planning:
   consecutive event-days are binned by a running-row-count prefix sum
   into ~target-row output partitions (the maintenance pass that keeps
@@ -151,9 +151,9 @@ def q_event_order_violations(spark, sf_dir):
     """Out-of-order-ingest audit per user: how often does an event's
     timestamp precede the running max of PREVIOUSLY-INGESTED events
     (ingest order = the monotone event_id)? This distribution is what
-    justifies (or indicts) a streaming watermark delay — violations
-    beyond the chosen watermark are exactly the rows the streaming tier
-    would drop.
+    justifies (or indicts) an incremental-ingest watermark delay —
+    violations beyond the chosen watermark are exactly the rows such an
+    ingest would drop.
 
     Scale: one window partitioned by user (hash-shuffle on the natural
     key, frames are per-user event counts) + one keyed count aggregate;

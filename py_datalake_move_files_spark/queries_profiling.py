@@ -23,7 +23,7 @@ from py_datalake_move_files_spark.operators.profile import (
 )
 from py_datalake_move_files_spark.operators.text import char_entropy, heavy_hitters
 from py_datalake_move_files_spark.plans.layout import zorder_key, zorder_key_sql
-from py_datalake_move_files_spark.queries import _DEC, _m2, _t, register
+from py_datalake_move_files_spark.queries import _DEC, _t, register
 
 # --------------------------------------------------------------------------
 # one-pass column profile of orders
@@ -826,10 +826,9 @@ def q_cms_join_size_estimate(spark, sf_dir):
 
     This is the pre-flight a planner runs BEFORE a suspected-skew join:
     exact answer needs a full per-key count (one shuffle of every key);
-    the sketch answer reads ≤ depth·width cells that a streaming ingest
-    (foreach_batch_cms_ingest) is already maintaining — and because the
-    CMS is linear, yesterday's cell tables answer today's estimate with
-    zero touches of the event stream. Both the estimate and the exact
+    the sketch answer reads ≤ depth·width cells — and because the CMS is
+    linear, yesterday's cell tables answer today's estimate with zero
+    touches of the event stream. Both the estimate and the exact
     count are integers from md5-bucket math, so the audit row
     (exact_pairs, cms_est, overestimate) is hash-exact cross-engine."""
     from py_datalake_move_files_spark.functions.sketches import cms_cells
@@ -873,10 +872,9 @@ def q_hll_overlap_estimate(spark, sf_dir):
     """Audience-overlap estimation from mergeable HLL sketches: |A∩B| ≈
     |A| + |B| − |A∪B| by inclusion-exclusion over three sketch
     estimates — the only way to intersect sketches (HLL unions natively
-    but cannot intersect). The use case is the same as the daily HLL
-    partials (functions/sketches.sketch_partials): per-segment sketches
-    are materialized once, and ANY pairwise overlap question is answered
-    later from sketch state without re-scanning events.
+    but cannot intersect). Per-segment sketches can be materialized
+    once, and ANY pairwise overlap question is then answered from sketch
+    state without re-scanning events.
 
     Like ``approx_distinct_users``, the raw estimates are engine-specific
     (DataSketches HLL, lgK=12 → rsd ≈ 1.6% per estimate), so the emitted

@@ -1,9 +1,8 @@
-"""Scale-pattern tier (rounds 3-4): batch twins and 100 TB join
-strategies that complete the streaming/dedup surface.
+"""Scale-pattern tier (rounds 3-4): windowed dedup and 100 TB join
+strategies.
 
-- ``event_dedup_tumbling`` — the BATCH twin of
-  ``dropDuplicatesWithinWatermark`` (streaming/joins.py): first event per
-  (user, type, tumbling window). One shuffle on the dedup key.
+- ``event_dedup_tumbling`` — first event per (user, type, tumbling
+  window). One shuffle on the dedup key.
 - ``fuzzy_customer_pairs`` — string-similarity self-join via pigeonhole
   banding (operators/fuzzy.py, PassJoin/Ed-Join/PartEnum family):
   strings within hamming distance ≤ 2 must agree on ≥ 2 of 4 interleaved
@@ -62,8 +61,7 @@ FROM ranked WHERE rn = 1
 """,
 )
 def q_event_dedup_tumbling(spark, sf_dir):
-    """Batch twin of ``dedup_within_watermark``: keep the FIRST event per
-    (user, type, 30-min tumbling window). Deterministic tie-break on
+    """Keep the FIRST event per (user, type, 30-min tumbling window). Deterministic tie-break on
     event_id. One shuffle on the full dedup key; at 100 TB the window
     column makes the key high-cardinality, so no skew concentration.
     Oracle note: DuckDB ROUNDS double->BIGINT casts, so the oracle floors

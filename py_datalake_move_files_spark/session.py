@@ -27,9 +27,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    Cloud credentials (the reference's env-config, app/config.py:15-20) would
-    map onto ``spark.hadoop.fs.azure.account.oauth2.*`` here; in this repo we
-    run against local parquet, so only compute/shuffle conf is set.
+    Sets compute/shuffle conf only. Cloud credentials arrive through
+    ``extra_conf``: the CLI passes ``config.azure_oauth_conf`` (the
+    reference's env-config, app/config.py:15-20) when a path is an
+    ``abfss://`` URI.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -70,8 +71,7 @@ def get_spark(
         # read as TimestampType, not TIMESTAMP_NTZ. The reference compares
         # plain tz-naive datetimes (app/main.py:120-132); with the session
         # pinned to UTC above, NTZ -> UTC-instant is semantics-preserving, and
-        # it keeps unix_millis/watermarks/window ranges working uniformly
-        # across batch and readStream.
+        # it keeps unix_millis and window ranges working uniformly.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # local mode: the driver JVM IS the executor — at 8g the bench's
         # accumulated shuffle/broadcast state pushed GC into the measured

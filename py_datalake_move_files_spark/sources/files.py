@@ -71,27 +71,6 @@ def read_content_after_metadata_filter(
 
 
 def with_decoded_text(df: DataFrame, *, content_col: str = "content") -> DataFrame:
-    """S6 first half: UTF-8 decode of file bytes (reference app/main.py:61)."""
+    """S6: UTF-8 decode of file bytes (reference app/main.py:61)."""
     return df.withColumn("text", F.decode(F.col(content_col), "UTF-8"))
 
-
-def read_json_tolerant(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    *,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """S6/P13: schema-on-read JSON with PERMISSIVE error tolerance — rows
-    that fail to parse land intact in ``corrupt_col`` instead of failing the
-    job (the set-level replacement for the reference's try/except-per-file,
-    app/main.py:97-106). Pass an explicit ``schema`` string to avoid the
-    inference scan at scale; the corrupt column is appended automatically."""
-    reader = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-    )
-    if schema is not None:
-        full = schema.rstrip() + f", {corrupt_col} string"
-        reader = reader.schema(full)
-    return reader.json(path)

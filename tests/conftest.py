@@ -11,7 +11,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 #: re-runs EVERY registered query twice and stays the per-round gate),
 #: hypothesis property suites, and the subprocess CLI drives (one JVM
 #: start per test). Everything else — operator semantics, plan-shape
-#: pins, tier invariants, streaming — is auto-marked `smoke`, so a
+#: pins, tier invariants — is auto-marked `smoke`, so a
 #: mid-round change gets a fast signal with `pytest -m smoke` and the
 #: full suite still runs before each snapshot.
 _NON_SMOKE_FILES = {"test_oracle_parity.py", "test_cli.py"}

@@ -10,8 +10,6 @@ corpus the prefilter discards map-side before any join runs).
 
 from __future__ import annotations
 
-import re
-
 import pytest
 from pyspark.sql import functions as F
 

@@ -1,21 +1,22 @@
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
-from py_datalake_move_files_spark.config import LakeConfig, abfss_uri, azure_oauth_conf
+from py_datalake_move_files_spark import cli, session
+from py_datalake_move_files_spark.config import LakeConfig, azure_oauth_conf
+
+_CREDS = {
+    "AZURE_TENANT_ID": "t",
+    "AZURE_CLIENT_ID": "c",
+    "AZURE_CLIENT_SECRET": "s",
+    "AZURE_STORAGE_ACCOUNT_NAME": "acct",
+}
 
 
 def test_from_env_and_validate():
-    cfg = LakeConfig.from_env(
-        {
-            "AZURE_TENANT_ID": "t",
-            "AZURE_CLIENT_ID": "c",
-            "AZURE_CLIENT_SECRET": "s",
-            "AZURE_STORAGE_ACCOUNT_NAME": "acct",
-            "AZURE_STORAGE_CONTAINER": "lake",
-            "SOURCE_PREFIX": "raw/",
-        }
-    )
+    cfg = LakeConfig.from_env(_CREDS)
     assert cfg.validate() == []
     conf = azure_oauth_conf(cfg)
     acct = "acct.dfs.core.windows.net"
@@ -23,7 +24,6 @@ def test_from_env_and_validate():
     assert "login.microsoftonline.com/t/" in conf[
         f"spark.hadoop.fs.azure.account.oauth2.client.endpoint.{acct}"
     ]
-    assert abfss_uri(cfg, "/raw/x.json") == f"abfss://lake@{acct}/raw/x.json"
 
 
 def test_missing_keys_fail_fast():
@@ -36,3 +36,43 @@ def test_missing_keys_fail_fast():
     }
     with pytest.raises(ValueError, match="missing Azure config"):
         azure_oauth_conf(cfg)
+
+
+def test_cli_applies_azure_conf_only_for_abfss_paths(monkeypatch, capsys):
+    """``cli.main`` hands the OAuth conf to the session exactly when a path
+    argument is an ``abfss://`` URI, and refuses missing credentials before
+    any session is built. ``get_spark`` and the command are stubbed, so no
+    JVM starts."""
+    sessions = []
+
+    def fake_get_spark(app_name, *, extra_conf=None, **_):
+        sessions.append(extra_conf)
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(setLogLevel=lambda level: None),
+            stop=lambda: None,
+        )
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    monkeypatch.setattr(cli, "cmd_move", lambda spark, args: 0)
+    for k, v in _CREDS.items():
+        monkeypatch.setenv(k, v)
+
+    remote = "abfss://lake@acct.dfs.core.windows.net/raw"
+    assert cli.main(["move", "--source", remote, "--target", "/tmp/out"]) == 0
+    conf = sessions.pop()
+    assert len(conf) == 5
+    assert all(".acct.dfs.core.windows.net" in k for k in conf)
+    assert conf == azure_oauth_conf(LakeConfig.from_env(_CREDS))
+
+    local = ["move", "--source", "/tmp/in", "--target", "/tmp/out"]
+    assert cli.main(local) == 0
+    assert sessions.pop() is None
+    # a non-path value that looks like a URI is not a lake path
+    assert cli.main([*local, "--json-key", "k", "--json-value", remote]) == 0
+    assert sessions.pop() is None
+
+    monkeypatch.delenv("AZURE_CLIENT_SECRET")
+    assert cli.main(["move", "--source", remote, "--target", "/tmp/out"]) == 1
+    assert sessions == []  # no session was built
+    err = capsys.readouterr().err.strip().splitlines()
+    assert err == ["error: missing Azure config: client_secret"]

@@ -320,40 +320,6 @@ def test_canonical_url_idempotent_hypothesis(spark):
     check()
 
 
-def test_quality_classifier_composes_with_streams(spark, sf_small, tmp_path):
-    """The classifier is a pure map-stage projection, so it must run
-    unchanged over a streaming DataFrame (stream/batch unification) and
-    emit the same rows the batch path does."""
-    from py_datalake_move_files_spark.catalog import load_table
-    from py_datalake_move_files_spark.operators.text import quality_classifier
-    from py_datalake_move_files_spark.streaming.filestream import (
-        file_arrival_stream,
-    )
-
-    docs = load_table(spark, sf_small, "documents").limit(50)
-    docs.coalesce(1).write.parquet(f"{tmp_path}/in/b0")
-    stream = file_arrival_stream(spark, f"{tmp_path}/in/*", docs.schema)
-    q = (
-        quality_classifier(stream)
-        .writeStream.format("parquet")
-        .option("path", f"{tmp_path}/out")
-        .option("checkpointLocation", f"{tmp_path}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["quality_logit"], r["keep"])
-        for r in spark.read.parquet(f"{tmp_path}/out").collect()
-    }
-    want = {
-        r["doc_id"]: (r["n_tokens"], r["quality_logit"], r["keep"])
-        for r in quality_classifier(docs).collect()
-    }
-    assert got == want
-
-
 def test_chunk_documents_coverage_and_overlap(spark):
     """Every token appears in at least one chunk; consecutive chunks share
     exactly `overlap` tokens (except the possibly-short tail); stripping

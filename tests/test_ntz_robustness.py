@@ -15,7 +15,6 @@ from py_datalake_move_files_spark.operators.asof import (
     asof_join,
     interval_join_bucketed,
 )
-from py_datalake_move_files_spark.streaming.filestream import tumbling_event_stats
 
 D = datetime.datetime
 FLAVORS = ["timestamp", "timestamp_ntz"]
@@ -68,17 +67,3 @@ def test_interval_join_bucketed_both_flavors(spark, flavor):
     )
     rows = out.collect()
     assert len(rows) == 1 and rows[0].label == "iv1"
-
-
-@pytest.mark.parametrize("flavor", FLAVORS)
-def test_tumbling_stats_both_flavors(spark, flavor):
-    # batch frame through the streaming builder (withWatermark no-ops in
-    # batch; the window + agg path is the part that must survive NTZ)
-    events = spark.createDataFrame(
-        [(1, "view", 2.0, D(2024, 1, 1, 0, 10)), (2, "view", 3.0, D(2024, 1, 1, 0, 50))],
-        "user_id long, event_type string, value double, ts timestamp",
-    )
-    events = _with_flavor(events, flavor, "ts")
-    out = tumbling_event_stats(events).collect()
-    assert len(out) == 1
-    assert out[0].n == 2 and out[0].total_value == 5.0

@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from py_datalake_move_files_spark.operators.incremental import (
-    finalize_aggs,
     merge_partials,
     partial_aggs,
 )
@@ -107,9 +106,9 @@ def test_merge_three_way_and_finalize(spark):
     merged = merge_partials(
         merge_partials(parts[0], parts[1], ["k"], ["v"]), parts[2], ["k"], ["v"]
     )
-    out = {r["k"]: r for r in finalize_aggs(merged, ["v"]).collect()}
-    assert out[1]["cnt_v"] == 2 and out[1]["avg_v"] == pytest.approx(15.0)
-    assert out[2]["cnt_v"] == 2 and out[2]["avg_v"] == pytest.approx(10.0)
+    out = {r["k"]: r for r in merged.collect()}
+    assert out[1]["cnt_v"] == 2 and out[1]["sum_v"] == pytest.approx(30.0)
+    assert out[2]["cnt_v"] == 2 and out[2]["sum_v"] == pytest.approx(20.0)
     assert out[2]["min_v"] == 5.0 and out[2]["max_v"] == 15.0
 
 

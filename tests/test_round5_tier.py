@@ -206,70 +206,6 @@ def test_pareto_window_runs_over_aggregate_not_corpus(spark, sf_small):
     assert win < agg
 
 
-def test_streaming_transition_ingest_sums_to_batch_matrix(spark, tmp_path):
-    """Cross-batch chaining: per-batch transition cells summed over both
-    micro-batches must equal the one-shot batch matrix — the boundary
-    transition (last event of batch 0 -> first event of batch 1 per user)
-    must be counted exactly once."""
-    from py_datalake_move_files_spark.catalog import load_table
-    from py_datalake_move_files_spark.streaming.filestream import (
-        file_arrival_stream,
-        foreach_batch_transition_ingest,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    cut = ev.selectExpr("percentile(event_id, 0.5) AS m").collect()[0].m
-    src = tmp_path / "tin"
-    # event_id is assigned in ts order in the synthetic log, so an id
-    # split respects per-user event-time order (the operator's contract)
-    ev.where(F.col("event_id") <= cut).coalesce(1).write.parquet(str(src / "p0"))
-    ev.where(F.col("event_id") > cut).coalesce(1).write.parquet(str(src / "p1"))
-
-    stream = file_arrival_stream(
-        spark,
-        f"{src}/*",
-        "user_id long, ts timestamp, event_id long, event_type string",
-        max_files_per_trigger=1,
-    )
-    q = (
-        foreach_batch_transition_ingest(
-            stream,
-            str(tmp_path / "tckpt"),
-            state_path=str(tmp_path / "tstate"),
-            out_path=str(tmp_path / "tout"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(str(tmp_path / "tout"))
-    assert got.select("batch_id").distinct().count() == 2
-    summed = {
-        (r.from_type, r.to_type): r.n
-        for r in got.groupBy("from_type", "to_type")
-        .agg(F.sum("n_transitions").cast("long").alias("n"))
-        .collect()
-    }
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    whole = {
-        (r.from_type, r.to_type): r.n
-        for r in ev.select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .where(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .collect()
-    }
-    assert summed == whole
-
-
 def test_rrf_fusion_combines_both_arms_exactly(spark, sf_small):
     """RRF output must contain exactly the union of the two arms' doc ids,
     with the ppm score recomputable from the two rank columns."""
@@ -480,70 +416,6 @@ def test_transition_state_is_replay_idempotent(spark, sf_small, tmp_path):
     # replay batch 0's state append
     last_rows(b0).write.mode("append").parquet(state)
     assert derived() == before
-
-
-def test_streaming_hll_ingest_unions_to_batch_sketch(spark, tmp_path):
-    """Mergeability, streaming-side: union of the per-batch sketch rows
-    must estimate exactly what the one-shot batch sketch estimates (same
-    algorithm, same lg_k — DataSketches HLL union of partitions of a set
-    is the sketch of the set)."""
-    from py_datalake_move_files_spark.catalog import load_table
-    from py_datalake_move_files_spark.functions.sketches import (
-        sketch_partials,
-        union_estimate,
-    )
-    from py_datalake_move_files_spark.streaming.filestream import (
-        file_arrival_stream,
-        foreach_batch_hll_ingest,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "user_id", "event_id", "event_type"
-    )
-    cut = ev.selectExpr("percentile(event_id, 0.5) AS m").collect()[0].m
-    src = tmp_path / "hin"
-    ev.where(F.col("event_id") <= cut).coalesce(1).write.parquet(str(src / "p0"))
-    ev.where(F.col("event_id") > cut).coalesce(1).write.parquet(str(src / "p1"))
-
-    stream = file_arrival_stream(
-        spark,
-        f"{src}/*",
-        "user_id long, event_id long, event_type string",
-        max_files_per_trigger=1,
-    )
-    q = (
-        foreach_batch_hll_ingest(
-            stream,
-            str(tmp_path / "hckpt"),
-            out_path=str(tmp_path / "hout"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    stored = spark.read.parquet(str(tmp_path / "hout"))
-    assert stored.select("batch_id").distinct().count() == 2
-    got = {
-        r.event_type: (r.approx_distinct, r.n_rows)
-        for r in union_estimate(stored, ["event_type"]).collect()
-    }
-    want = {
-        r.event_type: (r.approx_distinct, r.n_rows)
-        for r in union_estimate(
-            sketch_partials(ev, "user_id", ["event_type"]), ["event_type"]
-        ).collect()
-    }
-    assert got == want
-    # and the estimates sit within the 3*rsd envelope of exact truth
-    exact = {
-        r.event_type: r.n
-        for r in ev.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    for k, (est, _) in got.items():
-        assert abs(est - exact[k]) <= max(2, 0.05 * exact[k] * 3)
 
 
 def test_autocorrelation_matches_python_pearson(spark, sf_small):

@@ -7,10 +7,7 @@ from pyspark.sql import functions as F
 
 from py_datalake_move_files_spark.catalog import load_table
 from py_datalake_move_files_spark.functions.skew import salted_join
-from py_datalake_move_files_spark.operators.clusters import (
-    connected_components,
-    dedup_clusters,
-)
+from py_datalake_move_files_spark.operators.clusters import connected_components
 
 SF = "/root/testdata/sf0.001"
 
@@ -127,17 +124,12 @@ def test_multi_table_lsh_recall_dominates_single_table(spark):
 
 
 def test_connected_components_on_crafted_graph(spark):
-    # chain 1-2-3-4 (diameter 3), pair 10-11, singleton via dedup_clusters
+    # chain 1-2-3-4 (diameter 3), pair 10-11
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], ["id_a", "id_b"]
     )
     got = {r.node: r.cluster_id for r in connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-
-    docs = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 10, 11, 99]], ["doc_id"])
-    full = {r.doc_id: (r.cluster_id, r.is_representative) for r in dedup_clusters(docs, pairs).collect()}
-    assert full[99] == (99, True)  # singleton is its own representative
-    assert full[2] == (1, False) and full[1] == (1, True)
 
 
 def test_connected_components_reliable_checkpoint_identical(spark, tmp_path):

@@ -1,84 +1,14 @@
-"""Mergeable HLL sketch tier (functions/sketches.py): the
-materialize-partials / union-at-query-time pattern for distinct counts.
-
-No DuckDB oracle exists (DuckDB's approx_count_distinct is a different
-sketch), so like the streaming tier this surface is pinned by pytest:
-merge-equivalence is exact, error is bounded against exact distincts.
+"""Count-min sketch tier (functions/sketches.py): linearity under union,
+the never-underestimate guarantee, and the bounded single-exchange plan.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from py_datalake_move_files_spark.catalog import load_table
-from py_datalake_move_files_spark.functions.sketches import (
-    sketch_partials,
-    union_estimate,
-)
 
 SF = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def events(spark):
-    return load_table(spark, SF, "events")
-
-
-def test_union_of_daily_partials_equals_whole_corpus_sketch(spark, events):
-    # THE invariant that makes partials reusable: sketching per day and
-    # unioning gives the IDENTICAL estimate to sketching the whole corpus
-    # (HLL registers depend on the item set, not the grouping)
-    daily = sketch_partials(
-        events.withColumn("day", F.to_date("ts")), "user_id", ["day"]
-    )
-    merged = union_estimate(daily).collect()[0]
-    whole = (
-        events.agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.col("user_id"), F.lit(12))
-            )
-            .cast("long")
-            .alias("d")
-        ).collect()[0]["d"]
-    )
-    assert merged["approx_distinct"] == whole
-    assert merged["n_rows"] == events.count()
-
-
-def test_rollup_from_partials_matches_direct_group_sketch(spark, events):
-    # rolling daily partials up to event_type must equal sketching by
-    # event_type directly — partials compose at ANY grain above their own
-    daily = sketch_partials(
-        events.withColumn("day", F.to_date("ts")), "user_id", ["event_type", "day"]
-    )
-    by_type = {
-        r["event_type"]: r["approx_distinct"]
-        for r in union_estimate(daily, ["event_type"]).collect()
-    }
-    direct = {
-        r["event_type"]: r["approx_distinct"]
-        for r in union_estimate(
-            sketch_partials(events, "user_id", ["event_type"]), ["event_type"]
-        ).collect()
-    }
-    assert by_type == direct
-
-
-def test_estimate_error_is_bounded_vs_exact(spark, events):
-    # lg_k=12 → relative standard error ~1.6%; assert a generous 5% bound
-    est = union_estimate(
-        sketch_partials(events.withColumn("day", F.to_date("ts")), "user_id", ["day"])
-    ).collect()[0]["approx_distinct"]
-    exact = events.select("user_id").distinct().count()
-    assert abs(est - exact) / exact < 0.05
-
-
-def test_partials_plan_is_single_exchange_with_map_side_merge(spark, events):
-    df = sketch_partials(events, "user_id", ["event_type"])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "partial_hll_sketch_agg" in plan  # map-side sketch merge
 
 
 # --- count-min sketch: linearity, guarantee, plan shape -------------------

@@ -1,32 +1,9 @@
-"""Source-layer tests: tolerant JSON reads (PERMISSIVE + corrupt record)."""
+"""Source-layer tests: format round-trips and the binaryFile listing and
+content scans (what they read, and what they must never read)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from py_datalake_move_files_spark.sources.files import read_json_tolerant
-
-
-def test_read_json_tolerant_catches_corrupt_rows(spark, tmp_path):
-    f = tmp_path / "docs.jsonl"
-    f.write_text(
-        '{"id": 1, "name": "ok"}\n'
-        "this is not json\n"
-        '{"id": 2, "name": "also ok"}\n'
-        '{"id": "not-a-number", "name": "type clash"}\n'
-    )
-    df = read_json_tolerant(spark, str(f), "id long, name string").cache()
-    # (cache is the documented Spark workaround for querying only the
-    # corrupt-record column of a raw file scan)
-    rows = df.collect()
-    assert len(rows) == 4
-    good = [r for r in rows if r._corrupt_record is None]
-    bad = [r for r in rows if r._corrupt_record is not None]
-    assert {r.id for r in good} == {1, 2}
-    assert len(bad) == 2  # the non-JSON line and the type clash
-    assert any("not json" in r._corrupt_record for r in bad)
-    # error-as-filter (P13): survivors via isNull on the corrupt column
-    assert df.where(F.col("_corrupt_record").isNull()).count() == 2
 
 
 def test_source_format_round_trips(spark, sf_small, tmp_path):
