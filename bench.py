@@ -266,9 +266,16 @@ def shuffle_totals(spark) -> tuple[int, int] | None:
     the scale arguments rest on asserted shuffle-volume deltas (novelty
     sampling = 4x fewer exchange rows, IVF = shuffle-free assign), and
     wall time alone cannot diff exchange-volume regressions on a noisy
-    host. Returns None if the internal API moves (bench still times)."""
+    host. Returns None if the internal API moves (bench still times).
+
+    The totals are read only after the listener bus has delivered every
+    pending event: right after an action the last task-end events may still
+    be queued, and a delta read then would miss them (and the next delta
+    would count them instead)."""
     try:
-        ex = spark.sparkContext._jsc.sc().statusStore().executorList(True)
+        sc = spark.sparkContext._jsc.sc()
+        sc.listenerBus().waitUntilEmpty()
+        ex = sc.statusStore().executorList(True)
         r = w = 0
         for i in range(ex.size()):
             e = ex.apply(i)

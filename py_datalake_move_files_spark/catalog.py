@@ -110,37 +110,30 @@ def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def read_manifest_csv(
-    spark: SparkSession,
-    path: str,
-    *,
-    schema: T.StructType = MANIFEST_SCHEMA,
-    required_cols: tuple[str, ...] = ("filename",),
-) -> DataFrame:
+def read_manifest_csv(spark: SparkSession, path: str) -> DataFrame:
     """Read a ``;``-delimited manifest CSV with a fixed schema (operator S1).
 
     Replaces the reference's pandas read + required-column check
     (app/app.py:80-89), and like pandas it resolves columns BY HEADER NAME:
-    the result has ``schema``'s columns, order and types whatever order the
-    header lists them in; schema columns absent from the header are typed
-    NULLs, and header columns outside the schema are dropped. A manifest
-    missing a ``required_cols`` column fails fast with the available
+    the result has ``MANIFEST_SCHEMA``'s columns, order and types whatever
+    order the header lists them in; schema columns absent from the header
+    are typed NULLs, and header columns outside the schema are dropped. A
+    manifest without a ``filename`` column fails fast with the available
     columns listed (the reference's P3 assertion, app/app.py:83-86).
 
     The header is read once (the one job this read runs); the data scan
-    then gets a schema in header order, each field typed from ``schema``,
-    so a malformed value (say a non-numeric ``unixtimestamp``) parses to
-    NULL exactly as a PERMISSIVE CSV read does.
+    then gets a schema in header order, each field typed from
+    ``MANIFEST_SCHEMA``, so a malformed value (say a non-numeric
+    ``unixtimestamp``) parses to NULL exactly as a PERMISSIVE CSV read does.
     """
     reader = spark.read.option("header", True).option("sep", ";")
     header = reader.csv(path).columns
-    missing = [c for c in required_cols if c not in header]
-    if missing:
+    if "filename" not in header:
         raise ValueError(
-            f"manifest {path} is missing required column(s) {missing}; "
+            f"manifest {path} is missing required column(s) ['filename']; "
             f"available: {header}"
         )
-    typed = {f.name: f for f in schema.fields}
+    typed = {f.name: f for f in MANIFEST_SCHEMA.fields}
     in_header_order = T.StructType(
         [typed.get(c, T.StructField(c, T.StringType())) for c in header]
     )
@@ -148,6 +141,6 @@ def read_manifest_csv(
     return raw.select(
         *[
             raw[f.name] if f.name in header else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
+            for f in MANIFEST_SCHEMA.fields
         ]
     )

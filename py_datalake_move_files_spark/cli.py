@@ -317,16 +317,21 @@ def cmd_move(spark, args) -> int:
             "path",
             reason_cascade((date_pred, "outside date range")).alias("reason"),
         )
-    plan = annotated.where(F.col("reason") == "Matches all criteria").select(
+    moves = F.col("reason") == "Matches all criteria"
+    plan = annotated.where(moves).select(
         F.col("path").alias("source_path"),
         strip_prefix_rewrite(
             F.col("path"), _as_uri(args.source), _as_uri(args.target)
         ).alias("target_path"),
     )
-    rejected = annotated.where(F.col("reason") != "Matches all criteria")
-    n_move, n_skip = plan.count(), rejected.count()
-    print(f"to_move: {n_move}  skipped: {n_skip}")
-    for r in rejected.select("path", "reason").limit(args.sample).collect():
+    # one scan for both counts (the listing and content probe run once)
+    counts = {
+        r["moves"]: r["count"]
+        for r in annotated.groupBy(moves.alias("moves")).count().collect()
+    }
+    print(f"to_move: {counts.get(True, 0)}  skipped: {counts.get(False, 0)}")
+    skipped = annotated.where(~moves).select("path", "reason")
+    for r in skipped.limit(args.sample).collect():
         print(f"  [skip] {r.path}: {r.reason}")
 
     audit = _execute_with_progress(spark, plan, mode="move", dry_run=not args.execute)

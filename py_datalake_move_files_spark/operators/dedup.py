@@ -25,6 +25,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from py_datalake_move_files_spark.functions.scaling import ensure_parallelism
+from py_datalake_move_files_spark.operators.similarity import (
+    _cap_bucket_size,
+    _observe_cap,
+)
 
 _UNIQ = iter(range(10**9))
 
@@ -289,10 +293,6 @@ def lsh_candidate_pairs(
         # extra exchange pattern — with the always-on CollectMetrics node
         # (rows_dropped / buckets_capped / max_bucket_n) so the drop is
         # never silent (VERDICT r8 #3 discipline)
-        from py_datalake_move_files_spark.operators.similarity import (
-            _cap_bucket_size,
-        )
-
         banded = _cap_bucket_size(banded, ["band_key"], max_bucket)
     left = banded.alias("l")
     right = banded.alias("r")
@@ -315,63 +315,46 @@ def jaccard_pairs(
     k: int = 3,
     threshold: float = 0.8,
     candidates: DataFrame | None = None,
-    strategy: str = "inverted",
-    materialize_shingles: bool = True,
     max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs ≥ threshold.
 
-    ``max_df`` (inverted strategy only) is the scale guard for the posting
-    self-join: shingles whose document frequency exceeds the cap are
-    EXCLUDED from candidate discovery (the standard stop-shingle drop —
-    a shingle shared by thousands of documents carries ~no per-pair
-    Jaccard signal but costs df² join work), bounding the discovery join
-    at Σ min(df, max_df)² instead of Σ df², which goes quadratic in corpus
-    size on template-heavy corpora (measured: sf10/sf1 posting-pair mass
-    41.7× uncapped vs 3.6× at max_df=128 on the stress lakes). Discovered
-    pairs are then verified EXACTLY over their FULL shingle sets (the
-    candidates path below), so emitted Jaccard values are unchanged — the
-    cap only loses pairs whose every shared shingle is hotter than the
-    cap, i.e. pairs living entirely inside a >max_df near-dup family,
-    which exact dedup upstream collapses first. The drop is observable
-    (similarity._observe_cap attaches the house CollectMetrics node).
+    The shingle frame is consumed 2-3 times below (both join sides /
+    postings + sizes), so it is materialized once with ``localCheckpoint``
+    instead of re-running the HOF shingling per consumer.
 
-    ``materialize_shingles`` (default): the shingle frame is consumed 2-3
-    times below (both join sides / postings + sizes); localCheckpoint
-    materializes it once instead of re-running the HOF shingling per
-    consumer, and keeps downstream plans small. At corpus scales where the
-    shingle arrays dwarf executor storage, pass ``False`` to trade repeated
-    recomputation (extra scans, no materialized state) — the plan shape is
-    otherwise identical.
-
-    Three physical strategies, same result set:
+    Two physical paths, same scoring:
 
     - with ``candidates`` (id_a, id_b) — e.g. from LSH banding — only those
       pairs are scored: two joins bring in both shingle sets and
       ``array_intersect`` computes the overlap per pair. Cost is
       O(candidates), the 100 TB path when a sketch already pruned.
-    - ``strategy="inverted"`` (default): inverted-index join on df>1
-      shingles; intersection counts from co-occurring postings (one
-      co-partitioned window + self-join + pair groupBy — 3 shuffles,
-      fewest stages). Cost is sum over shingles of df² — right when
-      document frequencies are bounded (the harness corpus tops out at
-      df=25; measured faster than prefix filtering there).
-    - ``strategy="prefix"``: AllPairs/PPJoin prefix filtering — under a
-      global (df, shingle) total order, two sets with Jaccard >= t must
-      share a shingle within their first ``n - ceil(t*n) + 1`` shingles,
-      so only prefixes are indexed/self-joined (no false negatives), then
-      candidates verify exactly. Costs two extra shuffles, but bounds the
-      posting self-join by PREFIX df² — the only viable exact path on
-      natural-language corpora where hot shingles ("of the and") reach
-      df ~ 10^6 and full df² is quadratic in corpus size. Crossover rule:
-      prefer "prefix" when max document frequency is unbounded / grows
-      with N; "inverted" when the shingle space is high-entropy.
+    - otherwise, inverted-index discovery: postings of df>1 shingles
+      self-join on the shingle, and intersection counts come from one pair
+      groupBy (the singleton prune rides a window over the same key the
+      join shuffles on, so postings arrive co-partitioned).
+
+    ``max_df`` is the scale guard for the posting self-join: shingles whose
+    document frequency exceeds the cap are EXCLUDED from candidate
+    discovery (the standard stop-shingle drop — a shingle shared by
+    thousands of documents carries ~no per-pair Jaccard signal but costs
+    df² join work), bounding the discovery join at Σ min(df, max_df)²
+    instead of Σ df², which goes quadratic in corpus size on
+    template-heavy corpora (measured: sf10/sf1 posting-pair mass 41.7×
+    uncapped vs 3.6× at max_df=128 on the stress lakes). Discovered pairs
+    are then verified EXACTLY over their FULL shingle sets, so emitted
+    Jaccard values are unchanged — the cap only loses pairs whose every
+    shared shingle is hotter than the cap, i.e. pairs living entirely
+    inside a >max_df near-dup family, which exact dedup upstream collapses
+    first. The drop is observable (similarity._observe_cap attaches the
+    house CollectMetrics node). ``max_df=None`` caps at the document
+    count, which no shingle's df can exceed, so nothing is dropped.
     """
-    sh = with_shingles(ensure_parallelism(df), text_col, k).select(
-        F.col(id_col).alias("doc"), F.col("shingle_set")
+    sh = (
+        with_shingles(ensure_parallelism(df), text_col, k)
+        .select(F.col(id_col).alias("doc"), F.col("shingle_set"))
+        .localCheckpoint(eager=True)
     )
-    if materialize_shingles:
-        sh = sh.localCheckpoint(eager=True)
 
     def _verify(cand: DataFrame) -> DataFrame:
         """Exact scoring of candidate pairs over the FULL shingle sets —
@@ -399,174 +382,96 @@ def jaccard_pairs(
     if candidates is not None:
         return _verify(candidates)
 
-    from pyspark.sql import Window
-
-    if strategy == "prefix":
-        inv = sh.select(
-            "doc",
-            F.size("shingle_set").alias("n_sh"),
-            F.explode("shingle_set").alias("shingle"),
-        )
-        ws = Window.partitionBy("shingle")
-        inv = inv.withColumn("__df", F.count(F.lit(1)).over(ws)).where(
-            F.col("__df") > 1
-        )
-        # prefix filter: index each doc's n - ceil(t*n) + 1 rarest shingles
-        # under the total order (df, shingle); any pair with Jaccard >= t
-        # must collide inside these prefixes (AllPairs bound)
-        wd = Window.partitionBy("doc").orderBy(
-            F.col("__df").asc(), F.col("shingle").asc()
-        )
-        prefix = (
-            inv.withColumn("__rn", F.row_number().over(wd))
-            .where(
-                F.col("__rn")
-                <= F.col("n_sh")
-                - F.ceil(F.lit(threshold) * F.col("n_sh")).cast("int")
-                + 1
-            )
-            .select("doc", "shingle")
-        )
-        cand = (
-            prefix.alias("a")
-            .join(prefix.alias("b"), "shingle")
-            .where(F.col("a.doc") < F.col("b.doc"))
-            .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-            .distinct()
-        )
-        return _verify(cand)
-
-    # per-doc sizes side: broadcast only while provably small (a checkpointed
-    # sh makes the count metadata-cheap; unmaterialized → unknown → plain join)
-    n_docs = sh.count() if materialize_shingles else None
+    # per-doc sizes side: broadcast only while provably small (the
+    # checkpointed sh makes the count metadata-cheap)
+    n_docs = sh.count()
     sizes = sh.select("doc", F.size("shingle_set").alias("n_sh"))
     inv = sh.select("doc", F.explode("shingle_set").alias("shingle"))
-    # prune singleton shingles BEFORE the self-join: a shingle in exactly one
-    # doc can never contribute an intersection — the window shuffles on the
-    # same key the join uses, so the posting lists arrive co-partitioned
+    # capped DISCOVERY + exact verify: hot postings are dropped from the
+    # self-join, then the surviving distinct pairs are scored over their
+    # FULL shingle sets, so Jaccard values are exact — only pairs whose
+    # every shared shingle is hotter than max_df are missed. The cap rides
+    # the SAME window as the singleton prune (a shingle in exactly one doc
+    # can never contribute an intersection; one pass over the exploded
+    # postings, not two), observed by the house cap metrics
+    # (similarity._observe_cap, no-silent-caps).
     ws = Window.partitionBy("shingle")
-    if max_df is not None:
-        # capped DISCOVERY + exact verify: hot postings are dropped from
-        # the self-join, then the surviving distinct pairs are scored over
-        # their FULL shingle sets, so Jaccard values are exact — only
-        # pairs whose every shared shingle is hotter than max_df are
-        # missed. The cap rides the SAME window as the singleton prune
-        # (one pass over the exploded postings, not two), observed by the
-        # house cap metrics (similarity._observe_cap, no-silent-caps).
-        from py_datalake_move_files_spark.operators.similarity import (
-            _observe_cap,
-        )
-
-        flagged, dropped = _observe_cap(
-            inv.withColumn("__df", F.count(F.lit(1)).over(ws)), "__df", max_df
-        )
-        capped = flagged.where(
-            (F.col("__df") > 1) & ~dropped
-        ).drop("__df")
-        # count-first discovery (the classic inverted-index shape, map-side
-        # combined — NOT distinct + verify-everything, which re-intersected
-        # full arrays for every co-occurring pair and cost 4x at sf0.1):
-        # c_cold = shared postings under the cap, exact wherever nothing is
-        # hot. The exact-verify join then runs ONLY on pairs whose UPPER
-        # BOUND on full Jaccard clears the threshold: true_inter ≤ c_cold +
-        # min(n_hot_a, n_hot_b) with n_hot = postings hotter than the cap
-        # (zero at every parity scale → the prune is exact and verify sees
-        # just the output pairs). Same round(…, 6) ≥ t test as the verify,
-        # and Jaccard is monotone in the intersection, so the prune can
-        # never drop a qualifying pair — the oracle needs no mirror of it.
-        c_cold = (
-            capped.alias("a")
-            .join(capped.alias("b"), "shingle")
-            .where(F.col("a.doc") < F.col("b.doc"))
-            .groupBy(
-                F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b")
-            )
-            .agg(F.count(F.lit(1)).alias("__c_cold"))
-        )
-        hot = flagged.where(dropped).groupBy("doc").agg(
-            F.count(F.lit(1)).alias("__n_hot")
-        )
-        szh = sizes.join(hot, "doc", "left").select(
-            "doc",
-            "n_sh",
-            F.coalesce(F.col("__n_hot"), F.lit(0)).alias("__n_hot"),
-        )
-        sa = szh.select(
-            F.col("doc").alias("id_a"),
-            F.col("n_sh").alias("__n_a"),
-            F.col("__n_hot").alias("__h_a"),
-        )
-        sb = szh.select(
-            F.col("doc").alias("id_b"),
-            F.col("n_sh").alias("__n_b"),
-            F.col("__n_hot").alias("__h_b"),
-        )
-        upper = F.col("__c_cold") + F.least(F.col("__h_a"), F.col("__h_b"))
-        scored = (
-            c_cold.join(_maybe_broadcast(sa, n_docs), "id_a")
-            .join(_maybe_broadcast(sb, n_docs), "id_b")
-            .where(
-                F.round(
-                    upper / (F.col("__n_a") + F.col("__n_b") - upper), 6
-                )
-                >= threshold
-            )
-        )
-        if materialize_shingles:
-            # both arms below consume this frame; without the cut the
-            # union re-executes the whole discovery join per arm (measured
-            # ~2x exchange READ at sf0.1). The surviving-pair frame is
-            # output-sized — cheap to materialize once.
-            scored = scored.localCheckpoint(eager=False)
-        # hot-free pairs close WITHOUT the array verify: when neither side
-        # owns a single over-cap posting, c_cold IS the exact intersection,
-        # so the count-derived Jaccard is the final value — no shingle-set
-        # payload ever shuffles for them. That is EVERY pair at cap-inert
-        # scales; only hot-adjacent pairs (none below stress sf1) pay the
-        # full-array verify join.
-        hot_free = (F.col("__h_a") == 0) & (F.col("__h_b") == 0)
-        jc = F.round(
-            F.col("__c_cold")
-            / (F.col("__n_a") + F.col("__n_b") - F.col("__c_cold")),
-            6,
-        )
-        exact_arm = (
-            scored.where(hot_free)
-            .withColumn("jaccard", jc)
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-        verify_arm = _verify(
-            scored.where(~hot_free).select("id_a", "id_b")
-        )
-        return exact_arm.unionByName(verify_arm)
-    inv = (
-        inv.withColumn("__df", F.count(F.lit(1)).over(ws))
-        .where(F.col("__df") > 1)
-        .drop("__df")
+    flagged, dropped = _observe_cap(
+        inv.withColumn("__df", F.count(F.lit(1)).over(ws)),
+        "__df",
+        n_docs if max_df is None else max_df,
     )
-    pair_inter = (
-        inv.alias("a")
-        .join(inv.alias("b"), "shingle")
+    capped = flagged.where((F.col("__df") > 1) & ~dropped).drop("__df")
+    # count-first discovery (the classic inverted-index shape, map-side
+    # combined — NOT distinct + verify-everything, which re-intersected
+    # full arrays for every co-occurring pair and cost 4x at sf0.1):
+    # c_cold = shared postings under the cap, exact wherever nothing is
+    # hot. The exact-verify join then runs ONLY on pairs whose UPPER
+    # BOUND on full Jaccard clears the threshold: true_inter ≤ c_cold +
+    # min(n_hot_a, n_hot_b) with n_hot = postings hotter than the cap
+    # (zero at every parity scale → the prune is exact and verify sees
+    # just the output pairs). Same round(…, 6) ≥ t test as the verify,
+    # and Jaccard is monotone in the intersection, so the prune can
+    # never drop a qualifying pair — the oracle needs no mirror of it.
+    c_cold = (
+        capped.alias("a")
+        .join(capped.alias("b"), "shingle")
         .where(F.col("a.doc") < F.col("b.doc"))
-        .groupBy(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
+        .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("__c_cold"))
     )
-    return (
-        pair_inter.join(_maybe_broadcast(sizes.withColumnRenamed("doc", "id_a").withColumnRenamed("n_sh", "n_a"), n_docs), "id_a")
-        .join(_maybe_broadcast(sizes.withColumnRenamed("doc", "id_b").withColumnRenamed("n_sh", "n_b"), n_docs), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
-            ),
+    hot = flagged.where(dropped).groupBy("doc").agg(
+        F.count(F.lit(1)).alias("__n_hot")
+    )
+    szh = sizes.join(hot, "doc", "left").select(
+        "doc",
+        "n_sh",
+        F.coalesce(F.col("__n_hot"), F.lit(0)).alias("__n_hot"),
+    )
+    sa = szh.select(
+        F.col("doc").alias("id_a"),
+        F.col("n_sh").alias("__n_a"),
+        F.col("__n_hot").alias("__h_a"),
+    )
+    sb = szh.select(
+        F.col("doc").alias("id_b"),
+        F.col("n_sh").alias("__n_b"),
+        F.col("__n_hot").alias("__h_b"),
+    )
+    upper = F.col("__c_cold") + F.least(F.col("__h_a"), F.col("__h_b"))
+    # both arms below consume this frame; without the cut the union
+    # re-executes the whole discovery join per arm (measured ~2x exchange
+    # READ at sf0.1). The surviving-pair frame is output-sized — cheap to
+    # materialize once.
+    scored = (
+        c_cold.join(_maybe_broadcast(sa, n_docs), "id_a")
+        .join(_maybe_broadcast(sb, n_docs), "id_b")
+        .where(
+            F.round(upper / (F.col("__n_a") + F.col("__n_b") - upper), 6)
+            >= threshold
         )
+        .localCheckpoint(eager=False)
+    )
+    # hot-free pairs close WITHOUT the array verify: when neither side owns
+    # a single over-cap posting, c_cold IS the exact intersection, so the
+    # count-derived Jaccard is the final value — no shingle-set payload
+    # ever shuffles for them. That is EVERY pair at cap-inert scales; only
+    # hot-adjacent pairs (none below stress sf1) pay the full-array verify
+    # join.
+    hot_free = (F.col("__h_a") == 0) & (F.col("__h_b") == 0)
+    jc = F.round(
+        F.col("__c_cold")
+        / (F.col("__n_a") + F.col("__n_b") - F.col("__c_cold")),
+        6,
+    )
+    exact_arm = (
+        scored.where(hot_free)
+        .withColumn("jaccard", jc)
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+    verify_arm = _verify(scored.where(~hot_free).select("id_a", "id_b"))
+    return exact_arm.unionByName(verify_arm)
 
 
 #: Above this many documents a per-doc ``sizes`` side stops being broadcast
@@ -576,13 +481,9 @@ def jaccard_pairs(
 BROADCAST_SIZES_MAX_DOCS = 5_000_000
 
 
-def _maybe_broadcast(side: DataFrame, n_docs: int | None) -> DataFrame:
-    """Broadcast a per-document side only when it is provably small.
-
-    ``n_docs=None`` (unknown size, e.g. shingles not materialized) takes the
-    scale-safe default: NO broadcast hint, let AQE/sort-merge decide.
-    """
-    if n_docs is not None and n_docs <= BROADCAST_SIZES_MAX_DOCS:
+def _maybe_broadcast(side: DataFrame, n_docs: int) -> DataFrame:
+    """Broadcast a per-document side only when it is provably small."""
+    if n_docs <= BROADCAST_SIZES_MAX_DOCS:
         return F.broadcast(side)
     return side
 
@@ -594,7 +495,6 @@ def containment_pairs(
     *,
     k: int = 3,
     threshold: float = 0.8,
-    candidates: DataFrame | None = None,
     max_df: int | None = None,
 ) -> DataFrame:
     """Asymmetric near-dup detection: shingle containment
@@ -605,9 +505,10 @@ def containment_pairs(
     crawl pipeline keys on exactly this (the reason MinHash variants like
     Broder's containment sketch exist). Jaccard is emitted alongside so
     downstream policy can separate "same doc" (high J) from "contains"
-    (high C, low J).
+    (high C, low J). MinHash banding targets JACCARD, so it would miss
+    tiny-doc-in-huge-doc pairs; candidates come from the postings instead.
 
-    Physical shape = jaccard_pairs' inverted strategy: distinct-shingle
+    Physical shape = jaccard_pairs' inverted discovery: distinct-shingle
     postings, singleton shingles pruned BEFORE the self-join by a window
     count over the SAME key the join shuffles on (co-partitioned, no extra
     exchange), pair intersections from one groupBy, sizes joined back
@@ -624,166 +525,67 @@ def containment_pairs(
     never the full sets)``. Scores are never approximated; only pairs
     whose overlap is *entirely* ultra-hot shingles (pure boilerplate ∩
     boilerplate) can be missed, and those are the pairs a containment
-    dedup must NOT merge anyway.
-    Alternatively pass ``candidates`` (id_a, id_b) from a sketch (LSH
-    banding, AllPairs prefix) — O(candidates), same scoring branch. NOTE
-    a containment-recall caveat the symmetric case doesn't have: MinHash
-    banding targets JACCARD, so a tiny-doc-in-huge-doc pair (high C, low
-    J) can miss the candidate set; at scale, containment candidates
-    should come from the SMALL side's shingles (prefix route on min-size)
-    rather than symmetric banding.
+    dedup must NOT merge anyway. The drop is observable through the house
+    cap metrics (similarity._observe_cap). ``max_df=None`` caps at the
+    document count, which no shingle's df can exceed, so nothing is hot.
     """
-    from pyspark.sql import Window
-
-    sh = with_shingles(ensure_parallelism(df), text_col, k).select(
-        F.col(id_col).alias("doc"), F.col("shingle_set")
+    sh = (
+        with_shingles(ensure_parallelism(df), text_col, k)
+        .select(F.col(id_col).alias("doc"), F.col("shingle_set"))
+        .localCheckpoint(eager=True)
     )
-    sh = sh.localCheckpoint(eager=True)
-
-    def _score_candidates(cand: DataFrame) -> DataFrame:
-        """Exact containment+jaccard for (id_a, id_b) pairs from the full
-        (uncapped) shingle sets — used by both the caller-supplied
-        ``candidates`` branch and the internal ``max_df``-capped one."""
-        a = sh.select(
-            F.col("doc").alias("id_a"), F.col("shingle_set").alias("set_a")
-        )
-        b = sh.select(
-            F.col("doc").alias("id_b"), F.col("shingle_set").alias("set_b")
-        )
-        inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b")))
-        return (
-            cand.join(a, "id_a")
-            .join(b, "id_b")
-            .withColumn(
-                "containment",
-                F.round(
-                    inter.cast("double")
-                    / F.least(F.size("set_a"), F.size("set_b")).cast("double"),
-                    6,
-                ),
-            )
-            .withColumn(
-                "jaccard",
-                F.round(
-                    inter.cast("double")
-                    / (F.size("set_a") + F.size("set_b") - inter).cast("double"),
-                    6,
-                ),
-            )
-            .where(F.col("containment") >= threshold)
-            .select("id_a", "id_b", "containment", "jaccard")
-        )
-
-    if candidates is not None:
-        return _score_candidates(candidates)
-
-    inv = sh.select("doc", F.explode("shingle_set").alias("shingle"))
-    ws = Window.partitionBy("shingle")
-    inv = inv.withColumn("__df", F.count(F.lit(1)).over(ws))
-
-    if max_df is not None:
-        # hot-shingle guard with an EXACT intersection split: shingles with
-        # df > 1 partition into capped (2..max_df) and hot (> max_df), so
-        # inter = inter_capped + inter_hot. Candidate pairs and their
-        # capped-intersection counts come from ONE groupBy over the capped
-        # posting self-join (bounded at Σ min(df, max_df)², no distinct);
-        # the hot contribution is an array_intersect over each doc's HOT
-        # shingles only (tiny arrays — never the full shingle sets), joined
-        # per surviving pair. Pairs whose entire overlap is hot shingles
-        # are the documented recall trade (pure boilerplate ∩ boilerplate).
-        inv = inv.localCheckpoint(eager=True)
-        capped = inv.where(
-            (F.col("__df") > 1) & (F.col("__df") <= max_df)
-        ).drop("__df")
-        hot_sets = (
-            inv.where(F.col("__df") > max_df)
-            .groupBy("doc")
-            .agg(F.collect_set("shingle").alias("hs"))
-        )
-        pair_ic = (
-            capped.alias("a")
-            .join(capped.alias("b"), "shingle")
-            .where(F.col("a.doc") < F.col("b.doc"))
-            .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("ic"))
-        )
-        n_docs = sh.count()
-        sizes = sh.select("doc", F.size("shingle_set").alias("n_sh"))
-        hot_inter = F.when(
-            F.col("ha").isNotNull() & F.col("hb").isNotNull(),
-            F.size(F.array_intersect(F.col("ha"), F.col("hb"))),
-        ).otherwise(F.lit(0))
-        return (
-            pair_ic.join(
-                hot_sets.select(
-                    F.col("doc").alias("id_a"), F.col("hs").alias("ha")
-                ),
-                "id_a",
-                "left",
-            )
-            .join(
-                hot_sets.select(
-                    F.col("doc").alias("id_b"), F.col("hs").alias("hb")
-                ),
-                "id_b",
-                "left",
-            )
-            .withColumn("inter", F.col("ic") + hot_inter)
-            .join(
-                _maybe_broadcast(
-                    sizes.withColumnRenamed("doc", "id_a").withColumnRenamed(
-                        "n_sh", "n_a"
-                    ),
-                    n_docs,
-                ),
-                "id_a",
-            )
-            .join(
-                _maybe_broadcast(
-                    sizes.withColumnRenamed("doc", "id_b").withColumnRenamed(
-                        "n_sh", "n_b"
-                    ),
-                    n_docs,
-                ),
-                "id_b",
-            )
-            .withColumn(
-                "containment",
-                F.round(
-                    F.col("inter").cast("double")
-                    / F.least("n_a", "n_b").cast("double"),
-                    6,
-                ),
-            )
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("inter").cast("double")
-                    / (
-                        F.col("n_a") + F.col("n_b") - F.col("inter")
-                    ).cast("double"),
-                    6,
-                ),
-            )
-            .where(F.col("containment") >= threshold)
-            .select("id_a", "id_b", "containment", "jaccard")
-        )
-
-    # uncapped exact path: posting-list intersection counts. sh is already
-    # materialized (localCheckpoint above), so the doc count is metadata-cheap
-    # and decides whether the per-doc sizes side may be broadcast.
+    # sh is materialized, so the doc count is metadata-cheap; it decides
+    # whether the per-doc sizes side may be broadcast
     n_docs = sh.count()
     sizes = sh.select("doc", F.size("shingle_set").alias("n_sh"))
-    inv = inv.where(F.col("__df") > 1).drop("__df")
-    pair_inter = (
-        inv.alias("a")
-        .join(inv.alias("b"), "shingle")
+
+    # hot-shingle guard with an EXACT intersection split: shingles with
+    # df > 1 partition into capped (2..max_df) and hot (> max_df), so
+    # inter = inter_capped + inter_hot. Candidate pairs and their
+    # capped-intersection counts come from ONE groupBy over the capped
+    # posting self-join (bounded at Σ min(df, max_df)², no distinct);
+    # the hot contribution is an array_intersect over each doc's HOT
+    # shingles only (tiny arrays — never the full shingle sets), joined
+    # per surviving pair. Pairs whose entire overlap is hot shingles
+    # are the documented recall trade (pure boilerplate ∩ boilerplate).
+    inv = (
+        sh.select("doc", F.explode("shingle_set").alias("shingle"))
+        .withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
+        .localCheckpoint(eager=True)
+    )
+    flagged, dropped = _observe_cap(
+        inv, "__df", n_docs if max_df is None else max_df
+    )
+    capped = flagged.where((F.col("__df") > 1) & ~dropped).drop("__df")
+    hot_sets = (
+        flagged.where(dropped)
+        .groupBy("doc")
+        .agg(F.collect_set("shingle").alias("hs"))
+    )
+    pair_ic = (
+        capped.alias("a")
+        .join(capped.alias("b"), "shingle")
         .where(F.col("a.doc") < F.col("b.doc"))
         .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
+        .agg(F.count(F.lit(1)).alias("ic"))
     )
+    hot_inter = F.when(
+        F.col("ha").isNotNull() & F.col("hb").isNotNull(),
+        F.size(F.array_intersect(F.col("ha"), F.col("hb"))),
+    ).otherwise(F.lit(0))
     return (
-        pair_inter.join(
+        pair_ic.join(
+            hot_sets.select(F.col("doc").alias("id_a"), F.col("hs").alias("ha")),
+            "id_a",
+            "left",
+        )
+        .join(
+            hot_sets.select(F.col("doc").alias("id_b"), F.col("hs").alias("hb")),
+            "id_b",
+            "left",
+        )
+        .withColumn("inter", F.col("ic") + hot_inter)
+        .join(
             _maybe_broadcast(
                 sizes.withColumnRenamed("doc", "id_a").withColumnRenamed("n_sh", "n_a"),
                 n_docs,

@@ -27,18 +27,13 @@ from pyspark.sql import functions as F
 from py_datalake_move_files_spark.operators.paths import prefix_qualify, rewrite_prefix
 
 
-def qualify_manifest(
-    manifest: DataFrame,
-    source_prefix: str,
-    *,
-    filename_col: str = "filename",
-) -> DataFrame:
+def qualify_manifest(manifest: DataFrame, source_prefix: str) -> DataFrame:
     """P1+P2+P4: project the filename column, drop nulls, prefix-qualify
     (reference app/app.py:89,104-111)."""
     return (
-        manifest.select(filename_col)
-        .na.drop(subset=[filename_col])
-        .withColumn("source_path", prefix_qualify(F.col(filename_col), source_prefix))
+        manifest.select("filename")
+        .na.drop(subset=["filename"])
+        .withColumn("source_path", prefix_qualify(F.col("filename"), source_prefix))
     )
 
 
@@ -48,8 +43,6 @@ def build_archive_plan(
     *,
     source_prefix: str,
     target_prefix: str,
-    filename_col: str = "filename",
-    listing_path_col: str = "path",
 ) -> DataFrame:
     """Plan DataFrame for the manifest archive copy.
 
@@ -58,8 +51,8 @@ def build_archive_plan(
     reference's report prints approximate (app/app.py:133-152), executed by
     :mod:`py_datalake_move_files_spark.plans.movecopy`.
     """
-    qualified = qualify_manifest(manifest, source_prefix, filename_col=filename_col)
-    listing_paths = listing.select(F.col(listing_path_col).alias("source_path"))
+    qualified = qualify_manifest(manifest, source_prefix)
+    listing_paths = listing.select(F.col("path").alias("source_path"))
 
     # Scale-critical join order: Spark can only broadcast the BUILD side of a
     # semi/anti join, and the manifest is the left (probe) side — so instead:
@@ -89,4 +82,4 @@ def build_archive_plan(
             ),
         )
     )
-    return plan.select(filename_col, "source_path", "target_path", "status")
+    return plan.select("filename", "source_path", "target_path", "status")

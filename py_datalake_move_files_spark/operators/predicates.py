@@ -142,13 +142,13 @@ def make_json_key_probe_exact(key: str, target: str):
     return probe
 
 
-def reason_cascade(*checks: tuple[Column, str], default: str = "Matches all criteria") -> Column:
+def reason_cascade(*checks: tuple[Column, str]) -> Column:
     """P12 (reference should_process_file, app/main.py:109-146): evaluate
     ``(predicate, reject_reason)`` pairs in order; the reason column is the
-    FIRST failing predicate's message (cheap-before-expensive ordering is the
-    caller's responsibility, as in the reference)."""
-    expr: Column | None = None
+    FIRST failing predicate's message, or ``Matches all criteria`` when every
+    check passes (cheap-before-expensive ordering is the caller's
+    responsibility, as in the reference)."""
+    expr = F.lit("Matches all criteria")
     for pred, reason in reversed(checks):
-        tail = expr if expr is not None else F.lit(default)
-        expr = F.when(~F.coalesce(pred, F.lit(False)), F.lit(reason)).otherwise(tail)
-    return expr if expr is not None else F.lit(default)
+        expr = F.when(~F.coalesce(pred, F.lit(False)), F.lit(reason)).otherwise(expr)
+    return expr

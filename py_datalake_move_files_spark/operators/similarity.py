@@ -301,7 +301,6 @@ def lsh_bucketed_topk(
     n_planes: int | None = 8,
     dim: int = 64,
     n_tables: int = 1,
-    max_bucket: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
@@ -314,8 +313,7 @@ def lsh_bucketed_topk(
     ``n_tables`` > 1 unions candidates from independent hyperplane families
     (multi-table LSH — recall recovery; see :func:`hyperplanes` for the
     n_planes/n_tables scaling rule); the corpus is scanned ONCE and exploded
-    per table, never re-read. ``max_bucket`` bounds degenerate corpus buckets
-    (see :func:`_cap_bucket_size`). ``n_planes=None`` sizes the index with
+    per table, never re-read. ``n_planes=None`` sizes the index with
     :func:`auto_n_planes` from the corpus count (the log2(N/B) rule as the
     in-code default; registered queries pass their oracle-pinned value)."""
     if n_planes is None:
@@ -325,7 +323,7 @@ def lsh_bucketed_topk(
         ensure_parallelism(corpus), "neighbor_id", "c_vec", id_col, vec_col,
         planes_per_table,
     )
-    c = _cap_bucket_size(c, keys, max_bucket).withColumn("c_nrm", norm("c_vec"))
+    c = c.withColumn("c_nrm", norm("c_vec"))
     q, _ = _multi_bucketed(queries, "query_id", "q_vec", query_id_col, vec_col,
                            planes_per_table)
     q = q.withColumn("q_nrm", norm("q_vec"))
@@ -362,7 +360,6 @@ def lsh_multiprobe_topk(
     n_planes: int = 8,
     dim: int = 64,
     m_probes: int = 2,
-    max_bucket: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
@@ -387,9 +384,10 @@ def lsh_multiprobe_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
-    c = ensure_parallelism(c).withColumn("bucket", bucket_expr("c_vec", planes))
-    c = _cap_bucket_size(c, ["bucket"], max_bucket).withColumn(
-        "c_nrm", norm("c_vec")
+    c = (
+        ensure_parallelism(c)
+        .withColumn("bucket", bucket_expr("c_vec", planes))
+        .withColumn("c_nrm", norm("c_vec"))
     )
 
     # query side: materialize each plane's signed margin ONCE as a real
@@ -472,25 +470,21 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     n_planes: int = 8,
     dim: int = 64,
-    n_tables: int = 1,
-    max_bucket: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH buckets: only vectors in
     the same bucket are compared (no all-pairs at scale); exact cosine then
-    filters to ≥ threshold. ``n_tables`` unions candidates from independent
-    plane families (recall); ``max_bucket`` hard-bounds degenerate buckets so
-    a near-constant corpus cannot go quadratic (see :func:`_cap_bucket_size`
-    — pair such corpora with exact dedup upstream)."""
-    planes_per_table = [hyperplanes(n_planes, dim, table=t) for t in range(n_tables)]
-    b, keys = _multi_bucketed(
-        ensure_parallelism(corpus), "vid", "vec", id_col, vec_col, planes_per_table
+    filters to ≥ threshold."""
+    b = (
+        ensure_parallelism(corpus)
+        .select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+        .withColumn("bucket", bucket_expr("vec", hyperplanes(n_planes, dim)))
+        .withColumn("nrm", norm("vec"))
     )
-    b = _cap_bucket_size(b, keys, max_bucket).withColumn("nrm", norm("vec"))
-    pairs = (
+    return (
         b.alias("a")
-        .join(b.alias("x"), keys)
+        .join(b.alias("x"), "bucket")
         .where(F.col("a.vid") < F.col("x.vid"))
         .select(
             F.col("a.vid").alias("id_a"),
@@ -502,7 +496,6 @@ def embedding_near_dup_pairs(
         )
         .where(F.col("cosine_sim") >= threshold)
     )
-    return pairs.distinct() if n_tables > 1 else pairs
 
 
 # --------------------------------------------------------------------------

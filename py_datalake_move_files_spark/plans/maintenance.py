@@ -29,14 +29,13 @@ def retention_plan(
     prefix: str,
     *,
     older_than: dt.datetime,
-    glob: str | None = None,
 ) -> DataFrame:
     """Delete-plan for files with ``modificationTime < older_than``.
 
     Returns ``(source_path, target_path=null, reason)`` — execute with
     ``execute_plan(plan, mode="delete")`` (dry-run by default in the CLI
     sense: executing is the caller's explicit second step)."""
-    listing = list_files(spark, prefix, glob=glob)
+    listing = list_files(spark, prefix)
     return listing.where(F.col("modificationTime") < F.lit(older_than)).select(
         F.col("path").alias("source_path"),
         F.lit(None).cast("string").alias("target_path"),

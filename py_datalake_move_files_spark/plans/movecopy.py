@@ -205,11 +205,7 @@ def execute_plan(
     plan: DataFrame,
     *,
     mode: str = "copy",
-    overwrite: bool = True,
     dry_run: bool = False,
-    verify: bool = True,
-    source_col: str = "source_path",
-    target_col: str = "target_path",
     parallelism: int | None = None,
     progress: PlanProgress | None = None,
     filesystem_factory=None,
@@ -252,29 +248,13 @@ def execute_plan(
     ``pyarrow.fs.FileSystem.from_uri`` when the factory is absent or
     returns ``None`` — pass a factory to pin credentials/clients per
     store (one client per scheme per task, not per file).
-
-    ``verify=False`` is the reference's fire-and-forget copy contract
-    (``start_copy_from_url`` launched and never awaited, app/app.py:62-64,
-    README.md:117): copies report status ``initiated`` instead of ``ok`` —
-    the caller may not assume completion. It is rejected for ``move``: the
-    delete gate REQUIRES a verified copy, which is exactly why the
-    reference's own fire-and-forget pipeline ships with its delete
-    commented out (app/app.py:65-66).
     """
     if mode not in ("copy", "move", "delete"):
         raise ValueError(f"mode must be copy|move|delete, got {mode!r}")
-    if not verify and mode != "copy":
-        raise ValueError(
-            "verify=False (fire-and-forget) is only meaningful for copy: "
-            "move deletes the source and must await a verified copy"
-        )
 
-    if mode == "delete" and target_col not in plan.columns:
-        plan = plan.withColumn(target_col, F.lit(None).cast("string"))
-    rows = plan.select(
-        F.col(source_col).alias("source_path"),
-        F.col(target_col).alias("target_path"),
-    )
+    if mode == "delete" and "target_path" not in plan.columns:
+        plan = plan.withColumn("target_path", F.lit(None).cast("string"))
+    rows = plan.select("source_path", "target_path")
     if dry_run:
         return rows.select(
             "source_path",
@@ -310,7 +290,6 @@ def execute_plan(
     _fail_once = _fail_task_once
     do_move = mode == "move"
     do_delete = mode == "delete"
-    ok_status = "ok" if verify else "initiated"
     acc_ok = progress._ok if progress is not None else None
     acc_error = progress._error if progress is not None else None
     fs_factory = filesystem_factory
@@ -390,8 +369,6 @@ def execute_plan(
                     if not hsrc.exists(src) and hdst.exists(dst):
                         out.append((src, dst, mode, "ok", "already completed"))
                         continue
-                    if not overwrite and hdst.exists(dst):
-                        raise FileExistsError(dst)
                     # mkdir-if-needed, ref app/main.py:167-172
                     hdst.mkparents(dst)
                     stream_copy(hsrc, src, hdst, dst)
@@ -400,7 +377,7 @@ def execute_plan(
                         if hdst.size(dst) != hsrc.size(src):
                             raise OSError(f"size mismatch after copy: {dst}")
                         hsrc.remove(src)
-                    out.append((src, dst, mode, ok_status, None))
+                    out.append((src, dst, mode, "ok", None))
                 except Exception as exc:  # per-file error-as-status, ref app/main.py:190-192
                     out.append((src, dst, mode, "error", f"{type(exc).__name__}: {exc}"))
             if acc_ok is not None:

@@ -14,42 +14,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def list_files(
-    spark: SparkSession,
-    path: str,
-    *,
-    glob: str | None = None,
-) -> DataFrame:
+def list_files(spark: SparkSession, path: str) -> DataFrame:
     """S2+S4: recursive file catalog of ``path``.
 
     Metadata-only projection (``path, length, modificationTime``) — do NOT
     select ``content`` here; Spark prunes the byte reads away entirely.
     """
-    return read_files_with_content(spark, path, glob=glob).select(
+    return read_files_with_content(spark, path).select(
         "path", "length", "modificationTime"
     )
 
 
-def read_files_with_content(
-    spark: SparkSession,
-    path: str,
-    *,
-    glob: str | None = None,
-) -> DataFrame:
+def read_files_with_content(spark: SparkSession, path: str) -> DataFrame:
     """S5: whole-file bytes as a ``content: binary`` column, listed
     recursively."""
-    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
+    return (
+        spark.read.format("binaryFile")
+        .option("recursiveFileLookup", "true")
+        .load(path)
+    )
 
 
 def read_content_after_metadata_filter(
-    spark: SparkSession,
-    path: str,
-    metadata_pred,
-    *,
-    glob: str | None = None,
+    spark: SparkSession, path: str, metadata_pred
 ) -> DataFrame:
     """Stage 2 of the two-stage content pipeline (SURVEY §4 row 2: "cheap
     metadata date filter before expensive content download",
@@ -67,10 +54,10 @@ def read_content_after_metadata_filter(
     over-maxLength file that the predicate rejects does not fail the scan —
     it would throw if its content were materialized) and by plan assertion
     (the FileScan carries the pushed modificationTime filter)."""
-    return read_files_with_content(spark, path, glob=glob).where(metadata_pred)
+    return read_files_with_content(spark, path).where(metadata_pred)
 
 
-def with_decoded_text(df: DataFrame, *, content_col: str = "content") -> DataFrame:
+def with_decoded_text(df: DataFrame) -> DataFrame:
     """S6: UTF-8 decode of file bytes (reference app/main.py:61)."""
-    return df.withColumn("text", F.decode(F.col(content_col), "UTF-8"))
+    return df.withColumn("text", F.decode(F.col("content"), "UTF-8"))
 

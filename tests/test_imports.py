@@ -112,3 +112,96 @@ def test_every_package_module_is_reached_from_an_entry_point():
         todo.extend(_imported_names(mods[name], name))
     unreached = sorted(set(mods) - reached)
     assert not unreached, f"package modules no entry point imports: {unreached}"
+
+
+#: The mover's modules. Every defaulted parameter of their public functions
+#: must be set by some call outside the tests, except the test seams: each
+#: lets a test substitute a fake or force a schedule.
+MOVER_MODULES = [
+    "catalog", "config", "sources/files", "operators/manifest",
+    "operators/paths", "operators/predicates", "plans/movecopy",
+    "plans/maintenance",
+]
+TEST_SEAMS = {
+    ("execute_plan", "parallelism"), ("execute_plan", "filesystem_factory"),
+    ("execute_plan", "_stagger_s"), ("execute_plan", "_fail_task_once"),
+    ("optimize_zorder", "n_files"), ("from_env", "env"),
+}
+
+
+def _public_functions(path: Path) -> list[ast.FunctionDef]:
+    """The module's public top-level functions and public class methods."""
+    funcs = []
+    for node in ast.parse(path.read_text(), str(path)).body:
+        if isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+            funcs.extend(n for n in node.body if isinstance(n, ast.FunctionDef))
+        elif isinstance(node, ast.FunctionDef):
+            funcs.append(node)
+    return [f for f in funcs if not f.name.startswith("_")]
+
+
+def _passed_values(path: Path, positional: dict[str, list[str]]) -> set:
+    """``(function, parameter)`` for every argument a call in ``path``
+    passes by keyword or position. Forwarding the enclosing function's own
+    same-named parameter (``glob=glob``) passes nothing new, so it does not
+    count."""
+    passed = set()
+
+    def visit(node, enclosing: set[str]):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            a = node.args
+            enclosing = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            args = [(kw.arg, kw.value) for kw in node.keywords if kw.arg]
+            for param, value in zip(positional.get(name, []), node.args):
+                if isinstance(value, ast.Starred):
+                    break
+                args.append((param, value))
+            passed.update(
+                (name, param)
+                for param, value in args
+                if not (
+                    isinstance(value, ast.Name)
+                    and value.id == param
+                    and param in enclosing
+                )
+            )
+        for child in ast.iter_child_nodes(node):
+            visit(child, enclosing)
+
+    visit(ast.parse(path.read_text(), str(path)), set())
+    return passed
+
+
+def test_mover_parameters_are_set_by_an_entry_point():
+    """A setting only tests select is a code path only tests run."""
+    entry_files = [
+        *(ROOT / PKG).rglob("*.py"),
+        ROOT / "__spark_entry__.py",
+        ROOT / "bench.py",
+        *(ROOT / "perfbench").glob("*.py"),
+        *(ROOT / "tools").glob("*.py"),
+    ]
+    funcs = [
+        f for m in MOVER_MODULES for f in _public_functions(ROOT / PKG / f"{m}.py")
+    ]
+    defaults, positional = set(), {}
+    for f in funcs:
+        a = f.args
+        pos = a.posonlyargs + a.args
+        defaults.update((f.name, p.arg) for p in pos[len(pos) - len(a.defaults):])
+        defaults.update(
+            (f.name, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        )
+        positional[f.name] = [p.arg for p in pos if p.arg not in ("self", "cls")]
+    passed = set().union(
+        *(
+            _passed_values(p, positional)
+            for p in entry_files
+            if not p.name.startswith("test_")
+        )
+    )
+    unset = sorted(defaults - passed - TEST_SEAMS)
+    assert not unset, f"defaulted parameters no entry point sets: {unset}"

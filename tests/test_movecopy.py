@@ -144,20 +144,6 @@ def test_audit_summary_same_rows_without_range_partitioning(spark):
     assert "rangepartitioning" not in plan.lower()
 
 
-def test_no_overwrite_mode(spark, tmp_path):
-    src, dst = tmp_path / "src", tmp_path / "dst"
-    _mk_tree(str(src), ["a.txt"])
-    os.makedirs(dst)
-    (dst / "a.txt").write_bytes(b"already here")
-    audit = execute_plan(
-        _plan_df(spark, [(f"{src}/a.txt", f"{dst}/a.txt")]),
-        mode="copy",
-        overwrite=False,
-    ).collect()
-    assert audit[0].status == "error" and "FileExistsError" in audit[0].reason
-    assert (dst / "a.txt").read_bytes() == b"already here"
-
-
 def test_audit_actions_do_not_rerun_side_effects(spark, tmp_path):
     """ADVICE r01: the audit used to be a lazy mapInPandas frame, so every
     count/show re-ran the copy/delete — in move mode the second action saw
@@ -330,47 +316,6 @@ def test_manifest_with_only_filename_plans_files(spark, tmp_path):
         target_prefix=f"file:{tmp_path / 'archive'}",
     )
     assert plan.where(F.col("status") == "found").count() == 2
-
-
-def test_fire_and_forget_copy_reports_initiated(spark, tmp_path):
-    """verify=False = the reference's unawaited start_copy_from_url contract
-    (app/app.py:62-64): copies report 'initiated', never 'ok'."""
-    import os
-
-    from py_datalake_move_files_spark.plans.movecopy import execute_plan
-
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    for i in range(3):
-        (src_dir / f"f{i}.txt").write_text(f"data{i}")
-    plan = spark.createDataFrame(
-        [(str(src_dir / f"f{i}.txt"), str(tmp_path / "dst" / f"f{i}.txt")) for i in range(3)],
-        "source_path string, target_path string",
-    )
-    audit = execute_plan(plan, mode="copy", verify=False)
-    statuses = {r["status"] for r in audit.collect()}
-    assert statuses == {"initiated"}
-    # the local stand-in completes synchronously; files are there
-    for i in range(3):
-        assert os.path.exists(tmp_path / "dst" / f"f{i}.txt")
-    # sources untouched (copy, not move)
-    for i in range(3):
-        assert os.path.exists(src_dir / f"f{i}.txt")
-
-
-def test_fire_and_forget_rejected_for_move(spark, tmp_path):
-    """Delete is gated on a VERIFIED copy — exactly why the reference's
-    fire-and-forget pipeline ships with delete commented out
-    (app/app.py:65-66); the engine makes the coupling explicit."""
-    import pytest as _pytest
-
-    from py_datalake_move_files_spark.plans.movecopy import execute_plan
-
-    plan = spark.createDataFrame(
-        [("a", "b")], "source_path string, target_path string"
-    )
-    with _pytest.raises(ValueError, match="fire-and-forget"):
-        execute_plan(plan, mode="move", verify=False)
 
 
 def test_real_task_retry_hits_idempotent_path(tmp_path):

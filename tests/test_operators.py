@@ -251,7 +251,8 @@ def test_containment_pairs_max_df_bounds_hot_shingle_candidates(spark):
     every document. Uncapped, the posting self-join yields N·(N-1)/2
     candidate pairs from that shingle alone; with ``max_df`` the hot
     shingle is excluded from candidate generation, so hot-only pairs
-    vanish while genuinely contained pairs keep EXACT full-set scores."""
+    vanish while genuinely contained pairs keep EXACT full-set scores.
+    No silent cap: the drop reports through the house cap metrics."""
     from py_datalake_move_files_spark.operators.dedup import containment_pairs
 
     n = 6
@@ -266,7 +267,16 @@ def test_containment_pairs_max_df_bounds_hot_shingle_candidates(spark):
     )
 
     capped = containment_pairs(df, "doc_id", threshold=0.2, max_df=3)
+    qe = capped._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
+    assert "CollectMetrics" in plan and "bucket_cap:" in plan
     rows = {(r["id_a"], r["id_b"]): r for r in capped.collect()}
+    # the n postings of "x y z" are dropped, one capped bucket of size n
+    metrics = qe.observedMetrics()
+    names = metrics.keys().mkString("\n").split("\n")
+    (name,) = [k for k in names if k.startswith("bucket_cap:")]
+    got = metrics.get(name).get()
+    assert (got.getLong(0), got.getLong(1), got.getLong(2)) == (n, 1, n)
     # the hot-only boilerplate pairs are gone; the real pair survives with
     # the exact uncapped score (re-scored over FULL shingle sets)
     assert set(rows) == {(100, 101)}
@@ -403,27 +413,6 @@ def test_bm25_matches_python_recomputation(spark):
         assert got[i] == round(score, 6), (i, got[i], score)
 
 
-def test_containment_pairs_candidates_branch_matches_inverted(spark):
-    """The O(candidates) sketch-pruned branch must score identically to the
-    inverted-index branch on the pairs it is given (same rounding, same
-    min-size denominator)."""
-    from py_datalake_move_files_spark.operators.dedup import containment_pairs
-
-    small = "a b c d e"
-    big = small + " f g h i j k l m n"
-    df = spark.createDataFrame(
-        [(1, small), (2, big), (3, "zz yy xx ww vv")], "doc_id long, text string"
-    )
-    full = {(r["id_a"], r["id_b"]): (r["containment"], r["jaccard"])
-            for r in containment_pairs(df, "doc_id", threshold=0.5).collect()}
-    cands = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
-    pruned = {(r["id_a"], r["id_b"]): (r["containment"], r["jaccard"])
-              for r in containment_pairs(
-                  df, "doc_id", threshold=0.5, candidates=cands
-              ).collect()}
-    assert pruned == full == {(1, 2): (1.0, 0.25)}
-
-
 def test_multiprobe_recall_dominates_single_probe(spark):
     """Multi-probe's candidate pool is a strict superset of the home
     bucket's (probes include it), so recall@10 vs the exact baseline must
@@ -489,10 +478,8 @@ def test_sizes_broadcast_is_conditional_on_corpus_size(spark, monkeypatch):
     small = spark.createDataFrame([(1, 2)], "doc long, n_sh int")
     hinted = DD._maybe_broadcast(small, 10)._jdf.queryExecution()
     unhinted = DD._maybe_broadcast(small, 10**9)._jdf.queryExecution()
-    unknown = DD._maybe_broadcast(small, None)._jdf.queryExecution()
     assert "ResolvedHint" in hinted.analyzed().toString()
     assert "ResolvedHint" not in unhinted.analyzed().toString()
-    assert "ResolvedHint" not in unknown.analyzed().toString()
 
     # whole-operator: identical pairs through both branches
     via_broadcast = run()

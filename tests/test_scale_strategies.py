@@ -80,26 +80,6 @@ def test_lsh_candidate_cap_bounds_degenerate_corpus(spark):
     assert len(got) <= 10 * 10
 
 
-def test_near_dup_bucket_cap(spark):
-    """A near-constant embedding corpus lands in one hyperplane bucket;
-    max_bucket keeps the pair count bounded instead of quadratic."""
-    from py_datalake_move_files_spark.operators.similarity import (
-        embedding_near_dup_pairs,
-    )
-
-    dim = 8
-    vecs = [(i, [1.0] * dim) for i in range(60)]
-    emb = spark.createDataFrame(vecs, ["vec_id", "embedding"])
-    uncapped = embedding_near_dup_pairs(
-        emb, threshold=0.9, n_planes=4, dim=dim
-    ).count()
-    assert uncapped == 60 * 59 // 2
-    capped = embedding_near_dup_pairs(
-        emb, threshold=0.9, n_planes=4, dim=dim, max_bucket=10
-    ).count()
-    assert capped == 0
-
-
 def test_multi_table_lsh_recall_dominates_single_table(spark):
     """n_tables=2 unions candidates from independent plane families, so per-
     query neighbor sets are supersets of (at least as good as) each single
@@ -177,26 +157,11 @@ def test_pagerank_checkpoint_variants_identical(spark, tmp_path):
     assert abs(sum(plain.values()) - 1.0) < 1e-6  # no dangling mass here
 
 
-def test_jaccard_strategies_agree_on_harness_corpus(spark, sf_small):
-    from py_datalake_move_files_spark.operators.dedup import jaccard_pairs
-
-    docs = load_table(spark, sf_small, "documents")
-    inv = {tuple(r) for r in jaccard_pairs(docs, "doc_id", threshold=0.5).collect()}
-    pre = {
-        tuple(r)
-        for r in jaccard_pairs(
-            docs, "doc_id", threshold=0.5, strategy="prefix"
-        ).collect()
-    }
-    assert inv == pre and len(inv) > 0
-
-
-def test_prefix_strategy_survives_universal_hot_shingle(spark):
-    """A shingle present in EVERY doc makes the plain inverted index generate
-    O(N²) posting pairs for that shingle; the prefix filter excludes it from
-    (almost) every doc's prefix because it sorts LAST in the (df, shingle)
-    order. Both strategies must still agree — including on a real near-dup
-    pair that shares far more than the universal tail."""
+def test_inverted_jaccard_survives_universal_hot_shingle(spark):
+    """A shingle present in EVERY doc makes the inverted index generate
+    O(N²) posting pairs for that shingle, none of which clears the
+    threshold; the real near-dup pair that shares far more than the
+    universal tail must still come out, exactly once."""
     from py_datalake_move_files_spark.operators.dedup import jaccard_pairs
 
     rows = [(i, f"u{i}a u{i}b u{i}c u{i}d u{i}e common tail words") for i in range(60)]
@@ -206,9 +171,8 @@ def test_prefix_strategy_survives_universal_hot_shingle(spark):
         (1001, "x1 x2 x3 x4 x5 x6 x7 x8 common tail words"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for strat in ("inverted", "prefix"):
-        got = {
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in jaccard_pairs(df, "doc_id", threshold=0.8, strategy=strat).collect()
-        }
-        assert got == {(1000, 1001, 1.0)}, strat
+    got = {
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in jaccard_pairs(df, "doc_id", threshold=0.8).collect()
+    }
+    assert got == {(1000, 1001, 1.0)}
