@@ -64,14 +64,14 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
     return max(len(files), math.ceil(total / max(mpb, 1)))
 
 
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition ``df`` up to the session's default parallelism iff its
     scan is estimated to produce fewer partitions than half of that — i.e.
     only when the input is too concentrated to use the cluster. Never
     coalesces, and never repartitions on estimate-failure (remote lakes,
     in-memory frames), where the scan is presumed already wide."""
     sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = sc.defaultParallelism
     est = _estimated_scan_partitions(df)
     if est is not None and est < max(2, target // 2):
         return df.repartition(target)

@@ -1,8 +1,8 @@
-"""Mergeable count-min sketches: bounded frequency cells per grain, summed
-at query time.
+"""Mergeable count-min sketches: bounded frequency cells, summed at query
+time.
 
 A count-min sketch (CMS) turns an unbounded token stream into at most
-``depth·width`` cells per grain. Cells are LINEAR (the cells of A∪B are the
+``depth·width`` cells. Cells are LINEAR (the cells of A∪B are the
 elementwise sum of A's and B's), so per-day cell tables answer any-window
 frequency estimates later without re-shuffling raw tokens. The cells are
 plain md5-bucket counts, so the tier is oracle-checked
@@ -14,7 +14,6 @@ the engine's analytics mandate (BASELINE.json north star).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,10 +35,9 @@ def cms_cells(
     *,
     depth: int = 4,
     width: int = 1024,
-    grain_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Count-min sketch as a DataFrame: ``(grain…, row_j, bucket, n)`` —
-    at most ``depth·width`` cells per grain regardless of item cardinality.
+    """Count-min sketch as a DataFrame: ``(row_j, bucket, n)`` — at most
+    ``depth·width`` cells regardless of item cardinality.
 
     The CMS is LINEAR (cells of A∪B = elementwise sum of cells of A and
     cells of B — pinned in tests/test_sketches.py): materialize per-day
@@ -55,17 +53,15 @@ def cms_cells(
     the token stream. Everything is md5-bucket column math (exact DuckDB
     twin via :func:`cms_hash_sql`)."""
     rows = items.select(
-        *grain_cols,
         F.col(item_col).cast("string").alias("__item"),
         F.explode(F.expr(f"sequence(0, {depth - 1})")).alias("row_j"),
     )
     return (
         rows.select(
-            *grain_cols,
             "row_j",
             F.expr(cms_hash_sql("row_j", "__item", width)).alias("bucket"),
         )
-        .groupBy(*grain_cols, "row_j", "bucket")
+        .groupBy("row_j", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
 

@@ -26,19 +26,17 @@ def salted_join(
     *,
     key: str,
     salt_factor: int = 8,
-    how: str = "inner",
-    salt_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Equi-join ``facts ⋈ dim`` on ``key`` with the dim side replicated
-    ``salt_factor``× so a hot key's fact rows spread over ``salt_factor``
-    partitions. ``salt_cols`` (default: all fact columns) seed the
-    deterministic per-row salt."""
-    cols = salt_cols or facts.columns
+    """Inner equi-join ``facts ⋈ dim`` on ``key`` with the dim side
+    replicated ``salt_factor``× so a hot key's fact rows spread over
+    ``salt_factor`` partitions. All fact columns seed the deterministic
+    per-row salt."""
     salted_facts = facts.withColumn(
-        "__salt", F.pmod(F.hash(*[F.col(c) for c in cols]), F.lit(salt_factor))
+        "__salt",
+        F.pmod(F.hash(*[F.col(c) for c in facts.columns]), F.lit(salt_factor)),
     )
     salted_dim = dim.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_factor)]))
     )
-    out = salted_facts.join(salted_dim, [key, "__salt"], how)
+    out = salted_facts.join(salted_dim, [key, "__salt"], "inner")
     return out.drop("__salt")

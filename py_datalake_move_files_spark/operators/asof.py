@@ -38,32 +38,24 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_cols: list[str],
-    direction: str = "backward",
-    tolerance_ms: int | None = None,
     salt_buckets: int | None = None,
 ) -> DataFrame:
-    """pandas ``merge_asof``-style join on Spark.
-
-    ``direction="backward"`` (default): latest right row with
-    ``right_ts <= left_ts``; ``"forward"``: earliest right row with
-    ``right_ts >= left_ts``. ``tolerance_ms`` drops matches farther than the
-    given event-time distance. Right payload columns come back as
-    ``asof_<name>`` plus ``asof_ts`` when requested; left rows with no match
-    get nulls (left-outer semantics). One shuffle + one sort per side — no
-    inequality join, no per-key nested loop.
+    """pandas ``merge_asof``-style backward join on Spark: each left row
+    gets the latest right row with ``right_ts <= left_ts``. Right payload
+    columns come back as ``asof_<name>`` plus ``asof_ts`` when requested;
+    left rows with no match get nulls (left-outer semantics). One shuffle +
+    one sort per side — no inequality join, no per-key nested loop.
 
     ``salt_buckets=N`` enables the hot-key remedy from the module header:
     the carry-forward window partitions by (key, time_bucket) — N slices of
     the observed time range — so one dominant key spreads over N tasks
     instead of serializing into one sort. Cross-bucket matches are restored
     by a second, per-(key, bucket)-sized window that carries each bucket's
-    last right row into later buckets (earlier, for ``forward``). Costs one
-    extra tiny shuffle over the per-bucket summary (|keys|·N rows) and a
-    2-scalar min/max action to size the buckets; results are identical to
-    the unsalted path. Use when one key holds a large share of BOTH sides.
+    last right row into later buckets. Costs one extra tiny shuffle over
+    the per-bucket summary (|keys|·N rows) and a 2-scalar min/max action
+    to size the buckets; results are identical to the unsalted path. Use
+    when one key holds a large share of BOTH sides.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
     left = ensure_timestamp(left, left_ts)
     right = ensure_timestamp(right, right_ts)
     rstruct_type = (
@@ -89,13 +81,9 @@ def asof_join(
             *[F.col(c) for c in right_cols], F.col(right_ts).alias("__rts")
         ).alias("__r"),
     )
-    # right rows sort BEFORE left rows at equal ts (__is_left asc for
-    # backward, desc order for forward flips it symmetrically) so a
-    # same-timestamp right row is visible to the left row — inclusive bound.
-    if direction == "backward":
-        order = [F.col("__ts").asc(), F.col("__is_left").asc()]
-    else:
-        order = [F.col("__ts").desc(), F.col("__is_left").asc()]
+    # right rows sort BEFORE left rows at equal ts so a same-timestamp
+    # right row is visible to the left row — inclusive bound.
+    order = [F.col("__ts").asc(), F.col("__is_left").asc()]
     union = l_tag.unionByName(r_tag)
     if salt_buckets is None:
         w = (
@@ -130,20 +118,14 @@ def asof_join(
         # each bucket's boundary value: the right row a NEXT bucket would
         # carry in (max_by ignores rows whose ordering key is null, so left
         # rows and right-less buckets contribute nothing)
-        pick = F.max_by if direction == "backward" else F.min_by
         summary = union.groupBy("__k", "__bucket").agg(
-            pick(
+            F.max_by(
                 "__r", F.when(F.col("__is_left") == 0, F.col("__ts"))
             ).alias("__blast")
         )
-        bucket_order = (
-            F.col("__bucket").asc()
-            if direction == "backward"
-            else F.col("__bucket").desc()
-        )
         wprev = (
             Window.partitionBy("__k")
-            .orderBy(bucket_order)
+            .orderBy(F.col("__bucket").asc())
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         carry = summary.select(
@@ -154,17 +136,10 @@ def asof_join(
         merged = salted.join(carry, ["__k", "__bucket"], "left").withColumn(
             "__match", F.coalesce(F.col("__match0"), F.col("__carry"))
         )
-    match = F.col("__match")
-    if tolerance_ms is not None:
-        # distance between left ts and the matched right ts, in ms
-        mts = F.col("__match")["__rts"]
-        dist = F.abs(F.unix_millis(F.col("__ts")) - F.unix_millis(mts))
-        match = F.when(dist <= tolerance_ms, F.col("__match"))
-    out = merged.where(F.col("__is_left") == 1).select(
+    return merged.where(F.col("__is_left") == 1).select(
         F.col("__l.*"),
-        *[match[c].alias(f"asof_{c}") for c in right_cols],
+        *[F.col("__match")[c].alias(f"asof_{c}") for c in right_cols],
     )
-    return out
 
 
 def range_join(
@@ -174,15 +149,13 @@ def range_join(
     point_col: str,
     start_col: str,
     end_col: str,
-    how: str = "inner",
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
-    """Join fact rows to intervals containing them:
-    ``start <= point < end``. ``intervals`` is broadcast (small dim) by
-    default — the 100 TB path for calendar/bucket dims."""
-    iv = F.broadcast(intervals) if broadcast_intervals else intervals
+    """Inner-join fact rows to intervals containing them:
+    ``start <= point < end``. ``intervals`` is broadcast (small dim) — the
+    100 TB path for calendar/bucket dims."""
+    iv = F.broadcast(intervals)
     cond = (facts[point_col] >= iv[start_col]) & (facts[point_col] < iv[end_col])
-    return facts.join(iv, cond, how)
+    return facts.join(iv, cond)
 
 
 def interval_join_bucketed(
@@ -194,10 +167,10 @@ def interval_join_bucketed(
     end_col: str,
     keys: list[str] | None = None,
     bucket_seconds: int = 3600,
-    how: str = "inner",
 ) -> DataFrame:
-    """Big-big interval join: ``start <= point < end`` where NEITHER side
-    fits in a broadcast (the :func:`range_join` small-dim assumption).
+    """Big-big inner interval join: ``start <= point < end`` where
+    NEITHER side fits in a broadcast (the :func:`range_join` small-dim
+    assumption).
 
     Mechanism: each interval is exploded to every coarse time bucket it
     overlaps; each fact maps to its single bucket; the join is then an
@@ -232,7 +205,7 @@ def interval_join_bucketed(
             ),
         )
     )
-    joined = fb.join(iv, keys + ["__bucket"], how).where(
+    joined = fb.join(iv, keys + ["__bucket"]).where(
         (F.col(point_col) >= F.col(start_col)) & (F.col(point_col) < F.col(end_col))
     )
     return joined.drop("__bucket")

@@ -124,9 +124,8 @@ def bloom_probe(
     *,
     m_bits: int = 1 << 17,
     k_hashes: int = 4,
-    flag_col: str = "bloom_might_contain",
 ) -> DataFrame:
-    """Append a boolean ``flag_col``: true iff all ``k_hashes`` bit
+    """Append a boolean ``bloom_might_contain``: true iff all ``k_hashes`` bit
     positions of ``df[col]`` are set in ``bloom`` (built with the SAME
     m_bits/k_hashes — mismatched parameters void the no-false-negative
     guarantee, so callers thread one config through both calls).
@@ -146,6 +145,6 @@ def bloom_probe(
     return (
         _with_hashes(df, col, m_bits)
         .join(F.broadcast(bloom))
-        .withColumn(flag_col, probe)
+        .withColumn("bloom_might_contain", probe)
         .drop("bloom", "__bf_h1", "__bf_h2")
     )

@@ -33,15 +33,15 @@ from py_datalake_move_files_spark.operators.similarity import (
 _UNIQ = iter(range(10**9))
 
 
-def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3, out: str = "shingle_set") -> DataFrame:
-    """Add a distinct k-word-shingle array column.
+def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
+    """Add a distinct k-word-shingle array column ``shingle_set``.
 
     The token array is materialized ONCE per row before the shingle
     ``transform`` — referencing ``split(...)`` inside the lambda would
     re-split the text for every element access (quadratic per document).
     Documents shorter than ``k`` tokens yield the whole text as one shingle.
     """
-    toks = f"__toks_{out}"
+    toks = "__toks_shingle_set"
     u = f"i{next(_UNIQ)}"  # unique lambda var (see tests/test_lambda_safety.py)
     joined = " || ' ' || ".join(f"{toks}[{u} + {j}]" for j in range(k))
     shingle = (
@@ -51,18 +51,18 @@ def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3, out: str = 
     )
     return (
         df.withColumn(toks, F.split(F.col(text_col), " "))
-        .withColumn(out, F.expr(shingle))
+        .withColumn("shingle_set", F.expr(shingle))
         .drop(toks)
     )
 
 
-def dedup_exact(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
+def dedup_exact(df: DataFrame, id_col: str) -> DataFrame:
     """Exact dedup: one representative (min id) per identical text.
 
     Returns ``(digest, keep_id, n_copies)``. Shuffles 32-byte digests only.
     """
     return (
-        df.select(F.md5(F.col(text_col)).alias("digest"), F.col(id_col))
+        df.select(F.md5(F.col("text")).alias("digest"), F.col(id_col))
         .groupBy("digest")
         .agg(
             F.min(id_col).alias("keep_id"),
@@ -75,12 +75,9 @@ def contamination_report(
     df: DataFrame,
     id_col: str,
     eval_filter: Column,
-    text_col: str = "text",
-    *,
-    k: int = 3,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents that share any
-    k-word shingle with the evaluation slice of the corpus.
+    3-word shingle with the evaluation slice of the corpus.
 
     The standard LLM-corpus hygiene pass (n-gram overlap against held-out
     benchmark text). Returns one row per CONTAMINATED training document:
@@ -100,7 +97,7 @@ def contamination_report(
     Reference scope: the reference (a 565-LoC file mover, app/main.py) has
     no corpus operators; this op belongs to the repo's LLM-pipeline tier.
     """
-    sh = with_shingles(df, text_col, k)
+    sh = with_shingles(df)
     # explode_OUTER on both sides, with the null filter applied to the
     # GENERATED column: inner explode lets Catalyst infer
     # size(shingle_set) > 0 / isnotnull(shingle_set) constraints and push
@@ -201,10 +198,8 @@ def incremental_dedup(
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
-    text_col: str = "text",
     *,
     num_hashes: int = 8,
-    k: int = 3,
 ) -> DataFrame:
     """MinHash signature per document: hash function ``i`` is the integer
     value of 8 hex chars sliced from a per-shingle digest string, minimized
@@ -226,7 +221,7 @@ def minhash_signatures(
     Computed entirely PER ROW (``transform`` + ``array_min``): no explode,
     no groupBy, ZERO shuffles — the signature stage is embarrassingly
     parallel at any scale. Signature columns ``mh0..mh{n-1}`` (BIGINT)."""
-    sh = with_shingles(ensure_parallelism(df), text_col, k)
+    sh = with_shingles(ensure_parallelism(df))
     n_md5 = (num_hashes + 3) // 4
     u = f"s{next(_UNIQ)}"  # unique lambda vars: see tests/test_lambda_safety.py
     digest = " || ".join(
@@ -310,9 +305,7 @@ def lsh_candidate_pairs(
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
-    text_col: str = "text",
     *,
-    k: int = 3,
     threshold: float = 0.8,
     candidates: DataFrame | None = None,
     max_df: int | None = None,
@@ -346,12 +339,16 @@ def jaccard_pairs(
     Jaccard values are unchanged — the cap only loses pairs whose every
     shared shingle is hotter than the cap, i.e. pairs living entirely
     inside a >max_df near-dup family, which exact dedup upstream collapses
-    first. The drop is observable (similarity._observe_cap attaches the
-    house CollectMetrics node). ``max_df=None`` caps at the document
-    count, which no shingle's df can exceed, so nothing is dropped.
+    first. The drop is NOT observable today: similarity._observe_cap
+    attaches the house CollectMetrics node, but the downstream
+    ``localCheckpoint(eager=False)`` turns everything under it into an RDD
+    scan, so the node is not in the query's plan and its
+    ``observedMetrics()`` stays empty. ``max_df=None`` caps at
+    the document count, which no shingle's df can exceed, so nothing is
+    dropped.
     """
     sh = (
-        with_shingles(ensure_parallelism(df), text_col, k)
+        with_shingles(ensure_parallelism(df))
         .select(F.col(id_col).alias("doc"), F.col("shingle_set"))
         .localCheckpoint(eager=True)
     )
@@ -393,8 +390,8 @@ def jaccard_pairs(
     # every shared shingle is hotter than max_df are missed. The cap rides
     # the SAME window as the singleton prune (a shingle in exactly one doc
     # can never contribute an intersection; one pass over the exploded
-    # postings, not two), observed by the house cap metrics
-    # (similarity._observe_cap, no-silent-caps).
+    # postings, not two), with the house cap metrics attached
+    # (similarity._observe_cap; see the docstring for why they are lost).
     ws = Window.partitionBy("shingle")
     flagged, dropped = _observe_cap(
         inv.withColumn("__df", F.count(F.lit(1)).over(ws)),
@@ -493,7 +490,6 @@ def containment_pairs(
     id_col: str,
     text_col: str = "text",
     *,
-    k: int = 3,
     threshold: float = 0.8,
     max_df: int | None = None,
 ) -> DataFrame:
@@ -525,12 +521,15 @@ def containment_pairs(
     never the full sets)``. Scores are never approximated; only pairs
     whose overlap is *entirely* ultra-hot shingles (pure boilerplate ∩
     boilerplate) can be missed, and those are the pairs a containment
-    dedup must NOT merge anyway. The drop is observable through the house
-    cap metrics (similarity._observe_cap). ``max_df=None`` caps at the
-    document count, which no shingle's df can exceed, so nothing is hot.
+    dedup must NOT merge anyway. The drop reaches the query's
+    ``observedMetrics()`` through the house cap metrics
+    (similarity._observe_cap) unless the cap empties the result: AQE then
+    prunes the empty plan together with the metric node. ``max_df=None``
+    caps at the document count, which no shingle's df can exceed, so
+    nothing is hot.
     """
     sh = (
-        with_shingles(ensure_parallelism(df), text_col, k)
+        with_shingles(ensure_parallelism(df), text_col)
         .select(F.col(id_col).alias("doc"), F.col("shingle_set"))
         .localCheckpoint(eager=True)
     )
@@ -649,7 +648,6 @@ def hex_value(col_sql: str, nibbles: int) -> str:
 def simhash(
     df: DataFrame,
     id_col: str,
-    text_col: str = "text",
     *,
     bits: int = 16,
 ) -> DataFrame:
@@ -670,7 +668,7 @@ def simhash(
     nibbles = (bits + 3) // 4
     e = ensure_parallelism(df).withColumn(
         "hvs",
-        F.expr(f"transform(split({text_col}, ' '), t -> {hex_value('md5(t)', nibbles)})"),
+        F.expr(f"transform(split(text, ' '), t -> {hex_value('md5(t)', nibbles)})"),
     )
     bit_sums = [
         F.expr(

@@ -79,9 +79,6 @@ def scd2_apply(
     *,
     old_from: str,
     new_from: str,
-    from_col: str = "valid_from",
-    to_col: str = "valid_to",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """Type-2 slowly-changing-dimension history from two snapshots.
 
@@ -112,14 +109,14 @@ def scd2_apply(
     old_row = F.struct(
         *[F.col(f"o.{k}").alias(k) for k in key_cols],
         *[F.col(f"o.{c}").alias(c) for c in compare_cols],
-        F.lit(old_from).cast("date").alias(from_col),
-        F.when(closes_old, F.lit(new_from).cast("date")).alias(to_col),
+        F.lit(old_from).cast("date").alias("valid_from"),
+        F.when(closes_old, F.lit(new_from).cast("date")).alias("valid_to"),
     )
     new_row = F.struct(
         *[F.col(f"n.{k}").alias(k) for k in key_cols],
         *[F.col(f"n.{c}").alias(c) for c in compare_cols],
-        F.lit(new_from).cast("date").alias(from_col),
-        F.lit(None).cast("date").alias(to_col),
+        F.lit(new_from).cast("date").alias("valid_from"),
+        F.lit(None).cast("date").alias("valid_to"),
     )
     rows = F.array_compact(
         F.array(F.when(old_present, old_row), F.when(opens_new, new_row))
@@ -127,7 +124,7 @@ def scd2_apply(
     return (
         j.select(F.explode(rows).alias("__v"))
         .select("__v.*")
-        .withColumn(current_col, F.col(to_col).isNull())
+        .withColumn("is_current", F.col("valid_to").isNull())
     )
 
 
@@ -136,19 +133,14 @@ def upsert_preview(
     new: DataFrame,
     key_cols: Sequence[str],
     value_cols: Sequence[str],
-    *,
-    delete_missing: bool = False,
 ) -> DataFrame:
     """The post-MERGE table: new rows win per key, old rows survive where the
-    new snapshot has no matching key (unless ``delete_missing``).
+    new snapshot has no matching key.
 
     Same single key-join shuffle as :func:`snapshot_diff`.
     """
     j = old.alias("o").join(new.alias("n"), _all_equal(key_cols), "full_outer")
     new_present = F.col(f"n.{key_cols[0]}").isNotNull()
-
-    if delete_missing:
-        j = j.where(new_present)
     out = [
         F.coalesce(F.col(f"n.{k}"), F.col(f"o.{k}")).alias(k) for k in key_cols
     ]

@@ -68,9 +68,9 @@ def banded_strings(
     df: DataFrame,
     key_col: str,
     name_col: str,
-    group_cols: Sequence[str] = (),
-    max_dist: int = 2,
-    n_classes: int | None = None,
+    group_cols: Sequence[str],
+    max_dist: int,
+    n_classes: int | None,
 ) -> DataFrame:
     """Explode each row into (chunk_idx, chunk) bands over interleaved
     position classes of ``name_col``.
@@ -80,7 +80,7 @@ def banded_strings(
     ``(k - d)``-subset of classes concatenated — a close pair must agree on
     at least one full band (PartEnum-style combinatorial banding).
 
-    - ``n_classes = d + 1`` (the default): bands are single classes —
+    - ``n_classes = d + 1`` (or None): bands are single classes —
       minimal band multiplicity (k rows per input row), the right choice
       when single classes are selective.
     - ``n_classes > d + 1``: C(k, k-d) bands of compound keys — more

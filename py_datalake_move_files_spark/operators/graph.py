@@ -1,13 +1,13 @@
 """Iterative graph operators on DataFrames (no GraphX/GraphFrames
-dependency): weighted PageRank with pluggable lineage-cutting.
+dependency): weighted PageRank.
 
 100 TB shape: callers AGGREGATE the raw data down to a (src, dst, p)
 edge-probability list first (that star join + groupBy is the big job);
 the iteration then runs over the aggregated graph. For small aggregates
-(e.g. 25 nations) Catalyst folds the unrolled loop into one plan; for
-large node sets pass ``checkpoint_every`` so each cut truncates the plan
-to an RDD scan and round cost stays constant — mirroring
-operators/clusters.py's connected-components loop.
+(e.g. 25 nations) Catalyst folds the unrolled loop into one plan; a large
+node set would need a lineage cut every few rounds (a ``localCheckpoint``,
+as operators/clusters.py's connected-components loop does) to keep round
+cost constant.
 
 No analogue in the reference (a file-move utility); part of the
 training-data-pipeline mandate (graph/iteration tier).
@@ -18,18 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from py_datalake_move_files_spark.operators.clusters import _lineage_cutter
 
-
-def normalize_edges(
-    edges: DataFrame, src: str = "src", dst: str = "dst", weight: str = "w"
-) -> DataFrame:
-    """Per-source transition probabilities: p = w / sum(w) over src.
-    One window exchange on src."""
+def normalize_edges(edges: DataFrame) -> DataFrame:
+    """Per-source transition probabilities from (src, dst, w) edges:
+    p = w / sum(w) over src. One window exchange on src."""
     return edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        (F.col(weight) / F.sum(weight).over(Window.partitionBy(src))).alias("p"),
+        "src",
+        "dst",
+        (F.col("w") / F.sum("w").over(Window.partitionBy("src"))).alias("p"),
     )
 
 
@@ -39,42 +35,27 @@ def pagerank(
     *,
     iterations: int = 8,
     damping: float = 0.85,
-    node_col: str = "nation",
     n_nodes: int | None = None,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """``iterations`` rounds of r(dst) = (1-d)/N + d * sum(r(src) * p).
 
     ``norm``: (src, dst, p) transition probabilities (see
-    :func:`normalize_edges`); ``nodes``: one column ``node_col`` listing
+    :func:`normalize_edges`); ``nodes``: one column ``nation`` listing
     every node (dangling mass is dropped, matching the oracle's edge-set
     construction). Pass ``n_nodes`` when N is known statically to keep
     query construction action-free; otherwise one tiny ``count()`` runs.
-
-    ``checkpoint_every=0`` leaves the loop unrolled (right for small
-    aggregated graphs); ``>0`` cuts lineage every that-many rounds via
-    ``localCheckpoint`` or, when ``checkpoint_dir`` is given, reliable
-    ``checkpoint()`` (executor-loss-safe — see
-    clusters._lineage_cutter). Results are identical either way (tested).
+    The loop stays unrolled, which suits small aggregated graphs.
     """
     if n_nodes is None:
         n_nodes = nodes.count()
-    if checkpoint_dir is not None and not checkpoint_every:
-        raise ValueError(
-            "checkpoint_dir without checkpoint_every would be silently "
-            "ignored — pass checkpoint_every >= 1 to enable lineage cuts"
-        )
-    cut = _lineage_cutter(norm, checkpoint_dir) if checkpoint_every else None
-    norm = cut(norm) if cut else norm
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = norm.join(
-            ranks.withColumnRenamed(node_col, "src"), "src"
+            ranks.withColumnRenamed("nation", "src"), "src"
         ).select("dst", (F.col("rank") * F.col("p")).alias("c"))
         ranks = (
-            nodes.join(contrib, nodes[node_col] == contrib.dst, "left")
-            .groupBy(node_col)
+            nodes.join(contrib, nodes["nation"] == contrib.dst, "left")
+            .groupBy("nation")
             .agg(
                 (
                     F.lit((1.0 - damping) / n_nodes)
@@ -82,6 +63,4 @@ def pagerank(
                 ).alias("rank")
             )
         )
-        if cut and (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            ranks = cut(ranks)
     return ranks

@@ -226,13 +226,13 @@ AUDIO_META_SCHEMA = T.StructType(
 AUDIO_WINDOWS = 4
 
 
-def make_audio_decoder(n_windows: int = AUDIO_WINDOWS):
+def make_audio_decoder():
     """Build the per-content audio decoder: ``decode(content, wave_mod)``.
 
     Real path first: stdlib ``wave`` (ALWAYS importable — unlike the image
     tier's PIL, the real branch here is genuinely exercised in this
     container) parses RIFF/WAVE bytes into sample rate / channels / frame
-    count / duration and ``n_windows`` RMS energy windows over the
+    count / duration and ``AUDIO_WINDOWS`` RMS energy windows over the
     normalized samples. Undecodable payloads fall through per-row to the
     deterministic md5 stub (same hex-string-hash convention as the image
     stub, so the DuckDB oracle reproduces it bit-for-bit; rms stub values
@@ -260,7 +260,7 @@ def make_audio_decoder(n_windows: int = AUDIO_WINDOWS):
                         samples = samples - 128.0
                     samples = samples / float(2 ** (8 * width - 1))
                     rms = []
-                    for win in _np.array_split(samples, n_windows):
+                    for win in _np.array_split(samples, AUDIO_WINDOWS):
                         rms.append(
                             float(_np.sqrt(_np.mean(win * win))) if len(win) else 0.0
                         )
@@ -277,17 +277,17 @@ def make_audio_decoder(n_windows: int = AUDIO_WINDOWS):
         sr = 8000 * (1 + h[0] % 6)  # 8k..48k
         ch = 1 + h[1] % 2
         nf = 1000 + h[2] * 64
-        rng = _np.frombuffer(h[:n_windows], dtype=_np.uint8).astype(_np.float32)
+        rng = _np.frombuffer(h[:AUDIO_WINDOWS], dtype=_np.uint8).astype(_np.float32)
         return sr, ch, nf, nf * 1000 // sr, rng / _np.float32(256.0)
 
     return decode
 
 
-def extract_audio_features(media: DataFrame, *, n_windows: int = AUDIO_WINDOWS) -> DataFrame:
+def extract_audio_features(media: DataFrame) -> DataFrame:
     """Audio decode + energy features over Arrow batches (``mapInPandas``),
     mirroring :func:`decode_images`: real stdlib-``wave`` decode per row with
     per-row stub fallback; self-contained worker closure (ships by value)."""
-    decode = make_audio_decoder(n_windows)
+    decode = make_audio_decoder()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import wave as _wave

@@ -162,10 +162,10 @@ def winsorize(
     *,
     p_lo: float = 0.01,
     p_hi: float = 0.99,
-    out: str = "value_w",
     keep_bounds: bool = False,
 ) -> DataFrame:
-    """Clamp ``value_col`` into its exact [p_lo, p_hi] percentile range.
+    """Clamp ``value_col`` into its exact [p_lo, p_hi] percentile range, as
+    ``value_w``.
 
     One exact-percentile aggregate (single reduce to one row — at 100 TB
     swap in ``approx_percentile`` which is fully mergeable map-side) is
@@ -179,7 +179,7 @@ def winsorize(
         F.percentile(v, F.lit(p_hi)).alias("__hi"),
     )
     clamped = F.least(F.greatest(v, F.col("__lo")), F.col("__hi"))
-    joined = df.crossJoin(F.broadcast(pct)).withColumn(out, clamped)
+    joined = df.crossJoin(F.broadcast(pct)).withColumn("value_w", clamped)
     if keep_bounds:
         return joined.withColumnRenamed("__lo", "p_lo").withColumnRenamed(
             "__hi", "p_hi"

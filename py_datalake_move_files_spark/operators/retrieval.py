@@ -27,7 +27,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_term_sql(term_idx: int, *, k1: float = BM25_K1, b: float = BM25_B) -> str:
+def bm25_term_sql(term_idx: int) -> str:
     """One term's BM25 contribution — IDENTICAL text runs on Spark SQL and
     DuckDB (ln/round/casts shared):
     idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)), with
@@ -36,18 +36,18 @@ def bm25_term_sql(term_idx: int, *, k1: float = BM25_K1, b: float = BM25_B) -> s
     tf, df = f"tf{term_idx}", f"df{term_idx}"
     idf = f"ln((CAST(n_docs AS DOUBLE) - {df} + 0.5) / ({df} + 0.5) + 1.0)"
     return (
-        f"({idf}) * (CAST({tf} AS DOUBLE) * {k1 + 1.0}) / "
-        f"(CAST({tf} AS DOUBLE) + {k1} * (1.0 - {b} + {b} * "
+        f"({idf}) * (CAST({tf} AS DOUBLE) * {BM25_K1 + 1.0}) / "
+        f"(CAST({tf} AS DOUBLE) + {BM25_K1} * (1.0 - {BM25_B} + {BM25_B} * "
         f"(CAST(dl AS DOUBLE) / avgdl)))"
     )
 
 
-def bm25_score_sql(n_terms: int, *, k1: float = BM25_K1, b: float = BM25_B) -> str:
+def bm25_score_sql(n_terms: int) -> str:
     """Σ over the fixed term list, left-associative in list order, rounded
     to 6 dp (ranking happens on the rounded value on both engines)."""
     chain = None
     for i in range(n_terms):
-        piece = bm25_term_sql(i, k1=k1, b=b)
+        piece = bm25_term_sql(i)
         chain = piece if chain is None else f"({chain}) + ({piece})"
     return f"round({chain}, 6)"
 
@@ -57,17 +57,13 @@ def bm25_topk(
     terms: tuple[str, ...] | list[str],
     *,
     k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
 ) -> DataFrame:
     """Top-k documents by BM25 for a fixed bag-of-words query. Output:
-    (id_col, score, rnk) — ties break on the lower document id. ``terms``
+    (doc_id, score, rnk) — ties break on the lower document id. ``terms``
     must not contain SQL-special characters (they are embedded as string
     literals into codegen'd filter lambdas)."""
     toks = ensure_parallelism(docs).withColumn(
-        "__toks", F.expr(f"split({text_col}, ' ')")
+        "__toks", F.expr("split(text, ' ')")
     )
     stats = toks.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -83,7 +79,7 @@ def bm25_topk(
         ],
     )
     perdoc = toks.select(
-        id_col,
+        "doc_id",
         F.size("__toks").cast("long").alias("dl"),
         *[
             F.expr(
@@ -93,14 +89,14 @@ def bm25_topk(
         ],
     )
     scored = perdoc.crossJoin(F.broadcast(stats)).select(
-        id_col, F.expr(bm25_score_sql(len(terms), k1=k1, b=b)).alias("score")
+        "doc_id", F.expr(bm25_score_sql(len(terms))).alias("score")
     )
     from pyspark.sql import Window
 
-    top = scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
+    top = scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
     return top.withColumn("rnk", F.row_number().over(w)).select(
-        F.col(id_col).cast("long"), "score", F.col("rnk").cast("int")
+        F.col("doc_id").cast("long"), "score", F.col("rnk").cast("int")
     )
 
 
@@ -208,7 +204,7 @@ def tfidf_pairs(
 QL_MU = 2000.0
 
 
-def ql_term_sql(term_idx: int, *, mu: float = QL_MU) -> str:
+def ql_term_sql(term_idx: int) -> str:
     """One term's query-likelihood contribution under Dirichlet smoothing
     (Zhai & Lafferty 2001, the standard LM retrieval model):
     ln((tf + μ·cf/|C|) / (dl + μ)). IDENTICAL text runs on Spark SQL and
@@ -222,20 +218,20 @@ def ql_term_sql(term_idx: int, *, mu: float = QL_MU) -> str:
     # ln(0) is NULL where DuckDB ABORTS, and this text is shared by both
     # engines, so the guard keeps them agreeing (no-op when the arg > 0)
     return (
-        f"ln(nullif((CAST({tf} AS DOUBLE) + {mu} * (CAST({cf} AS DOUBLE) /"
-        f" CAST(coll_tokens AS DOUBLE))) / (CAST(dl AS DOUBLE) + {mu}),"
+        f"ln(nullif((CAST({tf} AS DOUBLE) + {QL_MU} * (CAST({cf} AS DOUBLE) /"
+        f" CAST(coll_tokens AS DOUBLE))) / (CAST(dl AS DOUBLE) + {QL_MU}),"
         " 0.0))"
     )
 
 
-def ql_score_sql(n_terms: int, *, mu: float = QL_MU) -> str:
+def ql_score_sql(n_terms: int) -> str:
     """Σ over the fixed term list, left-associative in list order, rounded
     to 6 dp before ranking (the bm25_score_sql discipline)."""
     if n_terms < 1:  # else the SQL is the invalid 'round(None, 6)' (ADVICE r8)
         raise ValueError("at least one term required")
     chain = None
     for i in range(n_terms):
-        piece = ql_term_sql(i, mu=mu)
+        piece = ql_term_sql(i)
         chain = piece if chain is None else f"({chain}) + ({piece})"
     return f"round({chain}, 6)"
 
@@ -245,9 +241,6 @@ def ql_dirichlet_topk(
     terms: tuple[str, ...] | list[str],
     *,
     k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mu: float = QL_MU,
 ) -> DataFrame:
     """Top-k documents by Dirichlet-smoothed query likelihood — the
     language-model complement of :func:`bm25_topk` (RRF fusion of the two
@@ -259,7 +252,7 @@ def ql_dirichlet_topk(
     if not terms:  # fail fast, not an opaque parse error at execution (ADVICE r8)
         raise ValueError("at least one term required")
     toks = ensure_parallelism(docs).withColumn(
-        "__toks", F.expr(f"split({text_col}, ' ')")
+        "__toks", F.expr("split(text, ' ')")
     )
     stats = toks.agg(
         F.sum(F.size("__toks").cast("long")).cast("long").alias("coll_tokens"),
@@ -276,7 +269,7 @@ def ql_dirichlet_topk(
         ],
     )
     perdoc = toks.select(
-        id_col,
+        "doc_id",
         F.size("__toks").cast("long").alias("dl"),
         *[
             F.expr(
@@ -286,12 +279,12 @@ def ql_dirichlet_topk(
         ],
     )
     scored = perdoc.crossJoin(F.broadcast(stats)).select(
-        id_col, F.expr(ql_score_sql(len(terms), mu=mu)).alias("score")
+        "doc_id", F.expr(ql_score_sql(len(terms))).alias("score")
     )
     from pyspark.sql import Window
 
-    top = scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
+    top = scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
     return top.withColumn("rnk", F.row_number().over(w)).select(
-        F.col(id_col).cast("long"), "score", F.col("rnk").cast("int")
+        F.col("doc_id").cast("long"), "score", F.col("rnk").cast("int")
     )

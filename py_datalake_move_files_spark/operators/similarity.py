@@ -74,9 +74,6 @@ def brute_force_topk(
     queries: DataFrame,
     *,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     corpus_extra: dict[str, Column | str] | None = None,
     query_extra: dict[str, Column | str] | None = None,
     pair_predicate: Column | None = None,
@@ -84,7 +81,8 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
-    ``queries`` must have (query_id_col, vec_col). Similarity is rounded to
+    ``corpus`` must have (vec_id, embedding) and ``queries``
+    (query_id, embedding). Similarity is rounded to
     6 dp for stable cross-engine comparison; ties break on neighbor id.
     Self-matches (query_id == neighbor id) are excluded.
 
@@ -111,16 +109,16 @@ def brute_force_topk(
 
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
+            "query_id",
+            F.col("embedding").alias("q_vec"),
             *_cols(query_extra),
         ).withColumn("q_nrm", norm("q_vec"))
     )
     pairs = (
         ensure_parallelism(corpus)
         .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_vec"),
             *_cols(corpus_extra),
         )
         .withColumn("c_nrm", norm("c_vec"))
@@ -204,7 +202,7 @@ def _observe_cap(
 def _cap_bucket_size(
     df: DataFrame,
     keys: list[str],
-    max_bucket: int | None,
+    max_bucket: int,
     observation=None,
 ) -> DataFrame:
     """Hard guard for degenerate buckets: drop rows in buckets larger than
@@ -228,8 +226,6 @@ def _cap_bucket_size(
     to any ``QueryExecutionListener``/metrics sink in production. The node
     is a pass-through: result schema, row set, and exchange count are
     unchanged (the ``ann_recall_*`` queries quantify the recall side)."""
-    if max_bucket is None:
-        return df
     w = Window.partitionBy(*[F.col(k) for k in keys])
     flagged, dropped = _observe_cap(
         df.withColumn("__bucket_n", F.count(F.lit(1)).over(w)),
@@ -301,9 +297,6 @@ def lsh_bucketed_topk(
     n_planes: int | None = 8,
     dim: int = 64,
     n_tables: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate cosine top-k: candidates limited to the query's LSH
     bucket(s).
@@ -320,11 +313,11 @@ def lsh_bucketed_topk(
         n_planes = auto_n_planes(corpus.count())
     planes_per_table = [hyperplanes(n_planes, dim, table=t) for t in range(n_tables)]
     c, keys = _multi_bucketed(
-        ensure_parallelism(corpus), "neighbor_id", "c_vec", id_col, vec_col,
+        ensure_parallelism(corpus), "neighbor_id", "c_vec", "vec_id", "embedding",
         planes_per_table,
     )
     c = c.withColumn("c_nrm", norm("c_vec"))
-    q, _ = _multi_bucketed(queries, "query_id", "q_vec", query_id_col, vec_col,
+    q, _ = _multi_bucketed(queries, "query_id", "q_vec", "query_id", "embedding",
                            planes_per_table)
     q = q.withColumn("q_nrm", norm("q_vec"))
     scored = (
@@ -360,9 +353,6 @@ def lsh_multiprobe_topk(
     n_planes: int = 8,
     dim: int = 64,
     m_probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Multi-probe LSH (Lv et al. 2007): each query searches its own bucket
     PLUS the ``m_probes`` buckets reached by flipping its least-confident
@@ -382,7 +372,7 @@ def lsh_multiprobe_topk(
     cross-engine."""
     planes = hyperplanes(n_planes, dim)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     c = (
         ensure_parallelism(c)
@@ -393,7 +383,7 @@ def lsh_multiprobe_topk(
     # query side: materialize each plane's signed margin ONCE as a real
     # column (HOF-CSE rule), derive bucket + probe ranking from those
     q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        "query_id", F.col("embedding").alias("q_vec")
     )
     for p, row in enumerate(planes):
         consts = "array(" + ", ".join(f"{v}D" for v in row) + ")"
@@ -470,15 +460,13 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     n_planes: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH buckets: only vectors in
     the same bucket are compared (no all-pairs at scale); exact cosine then
     filters to ≥ threshold."""
     b = (
         ensure_parallelism(corpus)
-        .select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+        .select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
         .withColumn("bucket", bucket_expr("vec", hyperplanes(n_planes, dim)))
         .withColumn("nrm", norm("vec"))
     )
@@ -502,10 +490,10 @@ def embedding_near_dup_pairs(
 # IVF (inverted-file) ANN index — the centroid-partitioned scale path
 # --------------------------------------------------------------------------
 
-def auto_n_lists(n_vectors: int, *, floor: int = 8) -> int:
+def auto_n_lists(n_vectors: int) -> int:
     """The FAISS sizing rule as code, not docs (VERDICT r11 #3):
     ``n_lists ≈ sqrt(N)``, rounded UP to a power of two, never below
-    ``floor``. Candidate volume in an all-vectors kNN join is
+    8. Candidate volume in an all-vectors kNN join is
     ``N²·n_probe/n_lists``, so n_lists must track sqrt(N) to keep the
     join ~N^1.5 — the round-11 sf10 sweep priced the alternative: the
     kNN edge artifact at a FIXED test-scale n_lists=16 over 200k vectors
@@ -519,34 +507,30 @@ def auto_n_lists(n_vectors: int, *, floor: int = 8) -> int:
     import math
 
     if n_vectors <= 1:
-        return floor
-    return max(floor, 2 ** math.ceil(math.log2(math.sqrt(n_vectors))))
+        return 8
+    return max(8, 2 ** math.ceil(math.log2(math.sqrt(n_vectors))))
 
 
-def auto_n_planes(
-    n_vectors: int, *, target_bucket: int = 1024, floor: int = 4, cap: int = 24
-) -> int:
+def auto_n_planes(n_vectors: int) -> int:
     """The hyperplane-LSH twin of :func:`auto_n_lists`:
-    ``n_planes ≈ log2(N / target_bucket)`` (the :func:`hyperplanes`
+    ``n_planes ≈ log2(N / 1024)`` (the :func:`hyperplanes`
     docstring rule, now executable) — each plane halves the expected
-    bucket, so this holds expected bucket size ≈ ``target_bucket`` as the
+    bucket, so this holds expected bucket size ≈ 1024 as the
     corpus grows; recall lost to finer buckets is bought back with
-    ``n_tables``. Clamped to [floor, cap] (2^cap buckets is plenty for
-    any corpus this engine will see; below 2^floor the index is a scan).
+    ``n_tables``. Clamped to [4, 24] (2^24 buckets is plenty for
+    any corpus this engine will see; below 2^4 the index is a scan).
     """
     import math
 
-    if n_vectors <= target_bucket:
-        return floor
-    return min(cap, max(floor, math.ceil(math.log2(n_vectors / target_bucket))))
+    if n_vectors <= 1024:
+        return 4
+    return min(24, max(4, math.ceil(math.log2(n_vectors / 1024))))
 
 
 def ivf_centroids(
     corpus: DataFrame,
     *,
     n_lists: int | None = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Deterministic IVF 'training': the ``n_lists`` corpus vectors with the
     lexicographically smallest ``md5(id)`` become centroids — a reproducible
@@ -558,7 +542,7 @@ def ivf_centroids(
     to any corpus, though MBs once k reaches the tens of thousands). How
     the collected centroids re-enter the plan depends on k — see
     :func:`ivf_assign`: a closed-form struct-argmin over centroid literals
-    below ``max_literal_k`` (fastest, zero shuffles, linear in k), a
+    up to ``IVF_LITERAL_MAX_K`` (fastest, zero shuffles, linear in k), a
     broadcast centroid table above it (constant-size plan; a literal plan
     embeds k·dim constants and outgrows expression-tree budgets long
     before data volume matters).
@@ -570,7 +554,7 @@ def ivf_centroids(
     if n_lists is None:
         n_lists = auto_n_lists(corpus.count())
     rows = (
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
+        corpus.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
         .orderBy(F.md5(F.col("cid").cast("string")).asc())
         .limit(n_lists)
         .collect()
@@ -615,16 +599,15 @@ def _probe_lists(
     n_probe: int,
     vec_col: str = "q_vec",
     nrm_col: str = "q_nrm",
-    max_literal_k: int | None = None,
 ) -> DataFrame:
     """Per-query probe lists: the ``n_probe`` nearest centroid ids, ties
     to the lowest cid — one exploded ``list_id`` row per (query, probe).
     Shared by :func:`ivf_topk` and :func:`knn_graph`, and — like
     :func:`ivf_assign` — dispatched on centroid count:
 
-    - ``k <= max_literal_k``: per-centroid literal cosine expressions +
+    - ``k <= IVF_LITERAL_MAX_K``: per-centroid literal cosine expressions +
       struct sort (zero shuffle, fastest while codegen-friendly).
-    - ``k > max_literal_k``: the whole centroid table rides ONE broadcast
+    - ``k > IVF_LITERAL_MAX_K``: the whole centroid table rides ONE broadcast
       single-row ``array<struct>`` column and the ranking is a HOF loop
       (``transform`` → ``array_sort`` → ``slice``) — constant plan size,
       tiny bytecode, still ZERO shuffle at any n_lists. This is the
@@ -635,9 +618,7 @@ def _probe_lists(
       loops" rule applied to probing. Rounded cosines are bit-identical
       between paths (same zip_with/aggregate fold, same Python-side norm
       chain)."""
-    if max_literal_k is None:
-        max_literal_k = IVF_LITERAL_MAX_K
-    if len(centroids) <= max_literal_k:
+    if len(centroids) <= IVF_LITERAL_MAX_K:
         sims = _centroid_sims(vec_col, centroids)
         probe_structs = F.array(
             *[
@@ -693,8 +674,6 @@ def ivf_assign(
     *,
     vec_col: str = "embedding",
     out: str = "list_id",
-    id_col: str = "vec_id",
-    max_literal_k: int | None = None,
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (max rounded cosine, ties
     to the lowest centroid id). Vectors and centroids are assumed
@@ -704,21 +683,17 @@ def ivf_assign(
     different plans, identical results (same IEEE fold order, same
     rounding, same tie-break):
 
-    - ``k <= max_literal_k``: pure column expressions over centroid
+    - ``k <= IVF_LITERAL_MAX_K``: pure column expressions over centroid
       literals — ZERO shuffles, an embarrassingly parallel map stage, the
       core property that makes IVF the scale path (each query then scans
       n_probe/n_lists of the corpus instead of all). Fastest while the
       k-branch expression tree stays codegen-friendly.
-    - ``k > max_literal_k``: the centroids become a k-row broadcast
-      DataFrame; scoring is a broadcast nested-loop join + one array dot
-      per (row, centroid), argmin is a map-side-combined ``max_by`` on
-      ``(sim, -cid)`` structs grouped by ``id_col``, joined back to the
-      corpus. Plan size is CONSTANT in k — the regime a real large-k IVF
-      deployment (k ~ sqrt(N), thousands+) needs. Costs two shuffles
-      (n-row argmin + n-row join-back); ``id_col`` must be unique.
+    - ``k > IVF_LITERAL_MAX_K``: the centroids ride one broadcast
+      single-row ``array<struct>`` column and the argmin is a per-row HOF
+      loop over it. Plan size is CONSTANT in k — the regime a real large-k
+      IVF deployment (k ~ sqrt(N), thousands+) needs — and still zero
+      shuffles.
     """
-    if max_literal_k is None:
-        max_literal_k = IVF_LITERAL_MAX_K  # module constant, tunable at runtime
     if not centroids:
         # empty training set -> the index has no lists: assign NOTHING
         # (an empty frame with the output schema), so every downstream
@@ -727,7 +702,7 @@ def ivf_assign(
         return corpus.where(F.lit(False)).withColumn(
             out, F.lit(None).cast("int")
         )
-    if len(centroids) <= max_literal_k:
+    if len(centroids) <= IVF_LITERAL_MAX_K:
         sims = _centroid_sims(vec_col, centroids)
         # argmin of (-sim, cid) structs: every centroid cosine is evaluated
         # exactly ONCE (array construction), and struct ordering encodes
@@ -743,9 +718,7 @@ def ivf_assign(
             ]
         )
         return corpus.withColumn(out, F.array_min(structs).getField("cid"))
-    return _ivf_assign_broadcast(
-        corpus, centroids, vec_col=vec_col, out=out, id_col=id_col
-    )
+    return _ivf_assign_broadcast(corpus, centroids, vec_col=vec_col, out=out)
 
 
 def _ivf_assign_broadcast(
@@ -754,7 +727,6 @@ def _ivf_assign_broadcast(
     *,
     vec_col: str,
     out: str,
-    id_col: str,
 ) -> DataFrame:
     """Large-k assignment via a broadcast centroid table (see ivf_assign).
 
@@ -808,8 +780,6 @@ def kmeans_refine(
     centroids: list[tuple[int, list[float]]],
     *,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     scale: int = 1_000_000,
 ) -> list[tuple[int, list[float]]]:
     """Lloyd's k-means refinement of an IVF init — the aggregate-then-iterate
@@ -838,13 +808,11 @@ def kmeans_refine(
     dim = len(centroids[0][1])
     cents = sorted(centroids)
     for _ in range(iters):
-        assigned = ivf_assign(
-            corpus, cents, vec_col=vec_col, out="__c", id_col=id_col
-        )
+        assigned = ivf_assign(corpus, cents, out="__c")
         aggs = [F.count(F.lit(1)).cast("long").alias("__n")] + [
             F.sum(
                 F.round(
-                    F.element_at(F.col(vec_col), i + 1).cast("double")
+                    F.element_at(F.col("embedding"), i + 1).cast("double")
                     * F.lit(float(scale))
                 ).cast("long")
             )
@@ -870,8 +838,6 @@ def kmeans_profile(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
     *,
-    vec_col: str = "embedding",
-    out: str = "cluster_id",
     scale: int = 1_000_000,
 ) -> DataFrame:
     """Cluster-quality report over a (refined) centroid set: per cluster,
@@ -889,18 +855,18 @@ def kmeans_profile(
         return (
             corpus.where(F.lit(False))
             .select(
-                F.lit(None).cast("long").alias(out),
+                F.lit(None).cast("long").alias("cluster_id"),
                 F.lit(None).cast("long").alias("n_vectors"),
                 F.lit(None).cast("double").alias("mean_cos"),
             )
         )
-    sims = _centroid_sims(vec_col, centroids)
+    sims = _centroid_sims("embedding", centroids)
     structs = F.array(
         *[F.struct((-sc).alias("neg"), F.lit(cid).alias("cid")) for cid, sc in sims]
     )
     assigned = (
         corpus.withColumn("__best", F.array_min(structs))
-        .withColumn(out, F.col("__best").getField("cid"))
+        .withColumn("cluster_id", F.col("__best").getField("cid"))
         .withColumn(
             "__qc",
             F.round(
@@ -910,13 +876,13 @@ def kmeans_profile(
     )
     return (
         assigned
-        .groupBy(out)
+        .groupBy("cluster_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_vectors"),
             F.sum("__qc").cast("long").alias("__sq"),
         )
         .select(
-            F.col(out).cast("long").alias(out),
+            F.col("cluster_id").cast("long"),
             "n_vectors",
             F.round(
                 F.col("__sq").cast("double")
@@ -935,9 +901,6 @@ def ivf_topk(
     n_lists: int = 8,
     n_probe: int = 2,
     centroids: list[tuple[int, list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF approximate top-k: each query probes its ``n_probe`` nearest
     centroid lists and ranks only those lists' vectors.
@@ -950,12 +913,12 @@ def ivf_topk(
     scanned per query (n_lists ~ sqrt(N) and n_probe 1-10% of n_lists are
     the classic FAISS-style settings)."""
     cents = centroids if centroids is not None else ivf_centroids(
-        corpus, n_lists=n_lists, id_col=id_col, vec_col=vec_col
+        corpus, n_lists=n_lists
     )
     if not cents:
         # no lists to probe: empty result with the output schema
         return (
-            queries.select(F.col(query_id_col).alias("query_id"))
+            queries.select("query_id")
             .where(F.lit(False))
             .select(
                 "query_id",
@@ -966,15 +929,14 @@ def ivf_topk(
         )
     assigned = ivf_assign(
         ensure_parallelism(corpus).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
         ),
         cents,
         vec_col="c_vec",
-        id_col="neighbor_id",
     ).withColumn("c_nrm", norm("c_vec"))
     # per-query probe lists: sort (−sim, cid) structs, take first n_probe
     q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        "query_id", F.col("embedding").alias("q_vec")
     ).withColumn("q_nrm", norm("q_vec"))
     probes = _probe_lists(q, cents, n_probe=n_probe)
     scored = (
@@ -1007,8 +969,6 @@ def pq_codebook(
     corpus: DataFrame,
     *,
     k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Deterministic PQ 'training': the ``k`` corpus vectors with the
     smallest ``md5(id)`` become the shared codeword pool; codeword ``c`` of
@@ -1021,7 +981,7 @@ def pq_codebook(
     code id, mirrored by ``row_number() OVER (ORDER BY md5(id), id) - 1``
     in the SQL oracle."""
     rows = (
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
+        corpus.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
         .orderBy(F.md5(F.col("cid").cast("string")).asc(), F.col("cid").asc())
         .limit(k)
         .collect()
@@ -1064,7 +1024,6 @@ def pq_encode(
     *,
     m: int = 8,
     vec_col: str = "embedding",
-    out: str = "codes",
 ) -> DataFrame:
     """Encode every vector into ``m`` sub-codes (nearest codeword per
     subspace, fixed-point distances, ties to the lowest code id via struct
@@ -1080,7 +1039,7 @@ def pq_encode(
         return (
             ensure_parallelism(corpus)
             .where(F.lit(False))
-            .withColumn(out, F.lit(None).cast("array<tinyint>"))
+            .withColumn("codes", F.lit(None).cast("array<tinyint>"))
         )
     dim = len(codebook[0])
     if dim % m:
@@ -1100,7 +1059,7 @@ def pq_encode(
                 f"named_struct('d', {sd}, 'c', c{u}))).c"
             ).cast("tinyint")
         )
-    return ensure_parallelism(corpus).withColumn(out, F.array(*code_cols))
+    return ensure_parallelism(corpus).withColumn("codes", F.array(*code_cols))
 
 
 def pq_adc_topk(
@@ -1110,10 +1069,6 @@ def pq_adc_topk(
     *,
     k: int = 10,
     m: int = 8,
-    id_col: str = "vec_id",
-    codes_col: str = "codes",
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) PQ search: rank the encoded corpus by the
     sum over subspaces of the distance between the QUERY's subvector and
@@ -1130,7 +1085,7 @@ def pq_adc_topk(
     if not codebook:
         # no codewords -> no distance tables: empty result (degenerate rule)
         return (
-            queries.select(F.col(query_id_col).alias("query_id"))
+            queries.select("query_id")
             .where(F.lit(False))
             .select(
                 "query_id",
@@ -1145,7 +1100,7 @@ def pq_adc_topk(
     subdim = dim // m
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            "query_id", F.col("embedding").alias("q_vec")
         )
     )
     approx = None
@@ -1153,12 +1108,12 @@ def pq_adc_topk(
         cbj = _pq_cb_subspace_sql(codebook, j, subdim)
         term = F.expr(
             pq_subdist_sql(
-                "q_vec", cbj, f"element_at({codes_col}, {j + 1}) + 1", j, subdim
+                "q_vec", cbj, f"element_at(codes, {j + 1}) + 1", j, subdim
             )
         )
         approx = term if approx is None else approx + term
     scored = (
-        encoded.select(F.col(id_col).alias("neighbor_id"), codes_col)
+        encoded.select(F.col("vec_id").alias("neighbor_id"), "codes")
         .crossJoin(q)
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select(
@@ -1187,9 +1142,6 @@ def ivfpq_topk(
     rerank: int = 20,
     n_probe: int = 2,
     m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF+PQ composed ANN with exact re-ranking — the full FAISS-style
     architecture, assembled from this module's pieces:
@@ -1211,7 +1163,7 @@ def ivfpq_topk(
         # empty index (no lists and/or no codewords): empty result with
         # the output schema (degenerate-lake rule)
         return (
-            queries.select(F.col(query_id_col).alias("query_id"))
+            queries.select("query_id")
             .where(F.lit(False))
             .select(
                 "query_id",
@@ -1222,7 +1174,7 @@ def ivfpq_topk(
         )
     assigned = ivf_assign(
         ensure_parallelism(corpus).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
         ),
         centroids,
         vec_col="c_vec",
@@ -1232,7 +1184,7 @@ def ivfpq_topk(
     )
 
     q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        "query_id", F.col("embedding").alias("q_vec")
     ).withColumn("q_nrm", norm("q_vec"))
     sims = _centroid_sims("q_vec", centroids)
     probe_structs = F.array(
@@ -1265,7 +1217,7 @@ def ivfpq_topk(
     )
 
     full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("r_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("r_vec")
     ).withColumn("r_nrm", norm("r_vec"))
     wr = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
@@ -1311,7 +1263,6 @@ def sq_encode(
     corpus: DataFrame,
     *,
     vec_col: str = "embedding",
-    codes_col: str = "codes",
 ) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization (the FAISS
     ``SQ8``-style storage path): ``scale = max|x| / 127`` (1 for the zero
@@ -1335,7 +1286,7 @@ def sq_encode(
     )
     v = _u()
     return out.withColumn(
-        codes_col,
+        "codes",
         F.expr(
             f"transform({vec_col}, sq{v}v -> "
             f"CAST(round(CAST(sq{v}v AS DOUBLE) / __sq_scale) AS INT))"
@@ -1349,9 +1300,6 @@ def sq_topk(
     *,
     k: int = 10,
     rerank: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Scalar-quantized ANN with exact re-ranking — the int8 serving path
     that completes the compression spectrum beside :func:`pq_adc_topk`
@@ -1373,14 +1321,14 @@ def sq_topk(
     IEEE fold order, 6-dp rounding, id tie-breaks) → exact DuckDB oracle."""
     enc = sq_encode(
         ensure_parallelism(corpus).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
         ),
         vec_col="c_vec",
     ).select("neighbor_id", "codes")
     enc = enc.withColumn("code_nrm", norm("codes"))
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            "query_id", F.col("embedding").alias("q_vec")
         ).withColumn("q_nrm", norm("q_vec"))
     )
     wa = Window.partitionBy("query_id").orderBy(
@@ -1403,7 +1351,7 @@ def sq_topk(
         .select("query_id", "neighbor_id", "q_vec", "q_nrm")
     )
     full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("r_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("r_vec")
     ).withColumn("r_nrm", norm("r_vec"))
     wr = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
@@ -1474,9 +1422,6 @@ def knn_graph(
     n_lists: int | None = None,
     n_probe: int = 2,
     centroids: list[tuple[int, list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_list_size: int | None = None,
 ) -> DataFrame:
     """Approximate k-nearest-neighbor GRAPH: top-``k`` neighbors for EVERY
     corpus vector, via IVF candidate bucketing. The all-vectors analogue of
@@ -1497,19 +1442,16 @@ def knn_graph(
     to keep it ~N^1.5 — and since r12 the DEFAULT does exactly that:
     ``n_lists=None`` sizes the index via :func:`auto_n_lists` from the
     corpus count (registered queries pass their oracle-pinned value
-    instead); hot lists from a skewed embedding distribution are
-    bounded by ``max_list_size`` (over-cap lists are excluded from the
-    INDEX side via :func:`_cap_bucket_size` — recall degrades gracefully
-    instead of the join going quadratic) and by the session's AQE
-    skew-join split at runtime.
+    instead); hot lists from a skewed embedding distribution are split by
+    the session's AQE skew-join at runtime.
     """
     cents = centroids if centroids is not None else ivf_centroids(
-        corpus, n_lists=n_lists, id_col=id_col, vec_col=vec_col
+        corpus, n_lists=n_lists
     )
     if not cents:
         # empty corpus -> no index lists: an empty edge set (degenerate rule)
         return (
-            corpus.select(F.col(id_col).alias("query_id"))
+            corpus.select(F.col("vec_id").alias("query_id"))
             .where(F.lit(False))
             .select(
                 "query_id",
@@ -1521,19 +1463,17 @@ def knn_graph(
     par = ensure_parallelism(corpus)
     indexed = ivf_assign(
         par.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
         ),
         cents,
         vec_col="c_vec",
-        id_col="neighbor_id",
     )
-    indexed = _cap_bucket_size(indexed, ["list_id"], max_list_size)
     indexed = indexed.withColumn("c_nrm", norm("c_vec"))
     # probe side shares the parallelism guard: at auto-scaled n_lists the
     # per-row probe loop is the compute-heavy map stage (k·dim flops/row)
     # and must not run on a handful of scan splits
     q = par.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).withColumn("q_nrm", norm("q_vec"))
     probes = _probe_lists(q, cents, n_probe=n_probe)
     scored = (
@@ -1688,6 +1628,10 @@ def dim_correlations(
     return topped.withColumn("rnk", F.row_number().over(w).cast("int"))
 
 
+#: kcenter_greedy's cap on ``k``: each center is one driver round-trip.
+KCENTER_MAX_K = 4096
+
+
 def kcenter_greedy(
     df: DataFrame,
     *,
@@ -1695,7 +1639,6 @@ def kcenter_greedy(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: int = 1_000_000,
-    max_k: int = 4096,
 ) -> list[tuple[int, int, int]]:
     """Greedy k-center (Gonzalez' 2-approximation) — the DIVERSITY
     sampling / coreset primitive: iteratively pick the point farthest
@@ -1720,12 +1663,12 @@ def kcenter_greedy(
     ``k`` is capped: each center is one driver round-trip, so an
     accidental k=10⁵ call would hang the driver loop for hours. Coresets
     past ~4k centers belong to kmeans (one round-trip per ITERATION,
-    not per center) — raise deliberately via ``max_k`` if a bigger
+    not per center) — raise ``KCENTER_MAX_K`` deliberately if a bigger
     greedy selection is truly intended."""
-    if k > max_k:
+    if k > KCENTER_MAX_K:
         raise ValueError(
-            f"kcenter_greedy k={k} exceeds max_k={max_k}: each center is "
-            "one driver round-trip; use kmeans/ivf_centroids for large "
+            f"kcenter_greedy k={k} exceeds max_k={KCENTER_MAX_K}: each center "
+            "is one driver round-trip; use kmeans/ivf_centroids for large "
             "center counts or pass a deliberate smaller k"
         )
     base = ensure_parallelism(df).select(

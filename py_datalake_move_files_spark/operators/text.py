@@ -45,15 +45,15 @@ def marker_hits(text_sql: str, words: tuple[str, ...]) -> Column:
     )
 
 
-def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_scores(df: DataFrame) -> DataFrame:
     """Per-language marker-hit ratios, plus the argmax prediction
     (ties broken by language code order, 'unknown' when all scores are 0)."""
-    n = F.size(F.split(F.col(text_col), " "))
+    n = F.size(F.split(F.col("text"), " "))
     out = df
     langs = sorted(LANG_MARKERS)
     for lang in langs:
         out = out.withColumn(
-            f"score_{lang}", F.round(marker_hits(text_col, LANG_MARKERS[lang]) / n, 6)
+            f"score_{lang}", F.round(marker_hits("text", LANG_MARKERS[lang]) / n, 6)
         )
     best = F.greatest(*[F.col(f"score_{lang}") for lang in langs])
     pred = F.when(best.isNull() | (best == 0), F.lit("unknown"))
@@ -62,9 +62,9 @@ def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("pred_lang", pred)
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Token counting: whitespace tokens and BPE-ish regex tokens."""
-    t = F.col(text_col)
+    t = F.col("text")
     return df.withColumn("n_ws_tokens", F.size(F.split(t, " "))).withColumn(
         "n_bpe_tokens", F.size(F.regexp_extract_all(t, F.lit(BPE_ISH_PATTERN), 0))
     )
@@ -100,14 +100,14 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(df: DataFrame, id_col: str, text_col: str = "text", *, k: int = 5) -> DataFrame:
+def fingerprint(df: DataFrame, id_col: str, *, k: int = 5) -> DataFrame:
     """Document fingerprint: lexicographic min of md5 over the doc's k-word
     shingles — a one-permutation MinHash / simplified winnowing selection of
     a representative rolling window. Equal fingerprints ⇒ candidate dups."""
     from py_datalake_move_files_spark.functions.scaling import ensure_parallelism
     from py_datalake_move_files_spark.operators.dedup import with_shingles
 
-    sh = with_shingles(ensure_parallelism(df), text_col, k)
+    sh = with_shingles(ensure_parallelism(df), "text", k)
     u = next(_UNIQ)
     return sh.select(
         F.col(id_col),
@@ -117,13 +117,14 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str = "text", *, k: int = 
     )
 
 
-def normalize(df: DataFrame, text_col: str = "text", out: str = "text_norm") -> DataFrame:
-    """Training-corpus text normalization: lowercase, strip non-alphanumeric
-    (keeping spaces), collapse whitespace runs, trim. Pure column exprs."""
-    t = F.lower(F.col(text_col))
+def normalize(df: DataFrame) -> DataFrame:
+    """Training-corpus text normalization into ``text_norm``: lowercase,
+    strip non-alphanumeric (keeping spaces), collapse whitespace runs, trim.
+    Pure column exprs."""
+    t = F.lower(F.col("text"))
     t = F.regexp_replace(t, "[^a-z0-9 ]", " ")
     t = F.trim(F.regexp_replace(t, " +", " "))
-    return df.withColumn(out, t)
+    return df.withColumn("text_norm", t)
 
 
 #: PII patterns, written to the common subset of Java regex (Spark) and RE2
@@ -136,11 +137,10 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_scan(
-    df: DataFrame, text_col: str = "text", *, redacted_col: str = "text_redacted"
-) -> DataFrame:
+def pii_scan(df: DataFrame, text_col: str = "text") -> DataFrame:
     """PII detection + redaction (C4/RefinedWeb-style scrub stage): per-kind
-    match counts and a redacted text with each match replaced by ``<KIND>``.
+    match counts and a redacted ``text_redacted`` with each match replaced by
+    ``<KIND>``.
 
     Pure regexp column exprs — zero shuffles, codegen'd, linear per row; at
     100 TB this runs entirely map-side. Redaction order is fixed
@@ -155,7 +155,7 @@ def pii_scan(
             f"n_{kind}", F.size(F.regexp_extract_all(t, F.lit(pat), 0))
         )
         red = F.regexp_replace(red, pat, f"<{kind.upper()}>")
-    return out.withColumn(redacted_col, red)
+    return out.withColumn("text_redacted", red)
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -246,24 +246,20 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 def corpus_gate(
     df: DataFrame,
     text_col: str = "text",
-    *,
-    min_words: int = 10,
-    max_dup_word_frac: float = 0.6,
-    max_top_bigram_frac: float = 0.18,
-    min_stopword_ratio: float = 0.0,
 ) -> DataFrame:
     """Training-corpus admission gate: combine repetition + quality measures
-    into keep/drop with a first-failure reason column."""
+    into keep/drop with a first-failure reason column. A document needs at
+    least 10 words, at most 60% repeated words and at most 18% of its
+    bigrams on the most frequent one."""
     scored = repetition_stats(quality_score(df, text_col), text_col)
     reason = (
         # NULL text first: every numeric gate condition is NULL on a NULL
         # document and would fall through to otherwise('ok') — admitting
         # exactly the rows with no content (degenerate-lake rule)
         F.when(F.col(text_col).isNull(), F.lit("no_text"))
-        .when(F.col("n_words") < min_words, F.lit("too_short"))
-        .when(F.col("dup_word_frac") > max_dup_word_frac, F.lit("repetitive_words"))
-        .when(F.col("top_bigram_frac") > max_top_bigram_frac, F.lit("repetitive_bigram"))
-        .when(F.col("stopword_ratio") < min_stopword_ratio, F.lit("low_stopword"))
+        .when(F.col("n_words") < 10, F.lit("too_short"))
+        .when(F.col("dup_word_frac") > 0.6, F.lit("repetitive_words"))
+        .when(F.col("top_bigram_frac") > 0.18, F.lit("repetitive_bigram"))
         .otherwise(F.lit("ok"))
     )
     out = scored.withColumn("gate_reason", reason)
@@ -273,17 +269,14 @@ def corpus_gate(
 def dataset_split(
     df: DataFrame,
     id_col: str,
-    *,
-    weights: dict[str, int] | None = None,
-    out: str = "split",
 ) -> DataFrame:
     """Deterministic, reproducible train/val/test assignment: the first two
-    md5 hex digits of the id (0..255) are bucketed by cumulative weights.
+    md5 hex digits of the id (0..255) are bucketed 90/5/5 into ``split``.
     Stable across runs, engines, and partitionings — the property random
     ``sample()`` can't give a training pipeline."""
     from py_datalake_move_files_spark.operators.dedup import hex_value
 
-    w = weights or {"train": 90, "val": 5, "test": 5}
+    w = {"train": 90, "val": 5, "test": 5}
     total = sum(w.values())
     hv = hex_value(f"md5(CAST({id_col} AS STRING))", 2)
     expr = None
@@ -293,16 +286,13 @@ def dataset_split(
         bound = 256 * acc // total
         cond = F.expr(f"({hv}) < {bound}")
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    return df.withColumn(out, expr)
+    return df.withColumn("split", expr)
 
 
 def source_mixture_sample(
     df: DataFrame,
     *,
     rates: dict[str, float],
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    out: str = "sampled",
 ) -> DataFrame:
     """Deterministic mixture sampling: keep each document with its source's
     target rate, decided by the document id's md5 bucket (0..255 < 256*rate).
@@ -314,29 +304,25 @@ def source_mixture_sample(
     rate 1.0."""
     from py_datalake_move_files_spark.operators.dedup import hex_value
 
-    hv = hex_value(f"md5(CAST({id_col} AS STRING))", 2)
+    hv = hex_value("md5(CAST(doc_id AS STRING))", 2)
     expr = None
     for src, rate in sorted(rates.items()):
         bound = int(256 * rate)
         branch = F.expr(f"({hv}) < {bound}")
         expr = (
-            F.when(F.col(source_col) == src, branch)
+            F.when(F.col("source") == src, branch)
             if expr is None
-            else expr.when(F.col(source_col) == src, branch)
+            else expr.when(F.col("source") == src, branch)
         )
     if expr is None:
-        return df.withColumn(out, F.lit(True))
-    return df.withColumn(out, expr.otherwise(F.lit(True)))
+        return df.withColumn("sampled", F.lit(True))
+    return df.withColumn("sampled", expr.otherwise(F.lit(True)))
 
 
 def sequence_packing(
     df: DataFrame,
     *,
     budget: int,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    text_col: str = "text",
-    out: str = "pack_id",
 ) -> DataFrame:
     """Greedy contiguous sequence packing: within each source, documents in
     id order are packed into fixed token budgets; ``pack_id`` = which packed
@@ -350,13 +336,13 @@ def sequence_packing(
     (source, dataset_split bucket) if one source dominates."""
     from pyspark.sql import Window
 
-    n_toks = F.size(F.split(F.col(text_col), " "))
-    w = Window.partitionBy(source_col).orderBy(F.col(id_col).asc())
+    n_toks = F.size(F.split(F.col("text"), " "))
+    w = Window.partitionBy("source").orderBy(F.col("doc_id").asc())
     return (
         df.withColumn("n_toks", n_toks)
         .withColumn("running_toks", F.sum("n_toks").over(w))
         .withColumn(
-            out,
+            "pack_id",
             F.floor((F.col("running_toks") - F.col("n_toks")) / F.lit(budget)).cast(
                 "int"
             ),
@@ -364,13 +350,12 @@ def sequence_packing(
     )
 
 
-def char_entropy(
-    df: DataFrame, text_col: str = "text", *, out: str = "bigram_entropy"
-) -> DataFrame:
+def char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document Shannon entropy over character bigrams — the
     information-density quality signal (machine-generated / repetitive text
-    scores low, natural prose high; complements ``repetition_stats``'s
-    word-level measures at the character level).
+    scores low, natural prose high; written to ``bigram_entropy``;
+    complements ``repetition_stats``'s word-level measures at the character
+    level).
 
     Zero shuffles: everything is per-row SQL-text higher-order functions in
     whole-stage codegen. The shared bigram/count arrays are materialized as
@@ -434,7 +419,7 @@ def char_entropy(
         )
         .withColumn("n_bigrams", n)
         .withColumn("n_distinct_bigrams", F.size(F.col("__bnd")))
-        .withColumn(out, entropy)
+        .withColumn("bigram_entropy", entropy)
         .drop("__chars", "__srt", "__bnd", "__runs")
     )
 
@@ -525,12 +510,12 @@ def heavy_hitters(
     )
 
 
-def qc_weight_sum_sql(toks_sql: str, n_buckets: int = 1024) -> str:
+def qc_weight_sum_sql(toks_sql: str) -> str:
     """Spark-SQL text for the classifier's integer weight sum over a token
     array expression — shared by :func:`quality_classifier` and composed
     pipelines that inline the gate (``web_corpus_pipeline``)."""
     bucket = (
-        f"CAST(conv(substring(md5(qc_t), 1, 5), 16, 10) AS BIGINT) % {n_buckets}"
+        "CAST(conv(substring(md5(qc_t), 1, 5), 16, 10) AS BIGINT) % 1024"
     )
     w_int = (
         f"CAST(conv(substring(md5(CAST({bucket} AS STRING)), 1, 6), 16, 10) AS BIGINT)"
@@ -542,16 +527,10 @@ def qc_weight_sum_sql(toks_sql: str, n_buckets: int = 1024) -> str:
     )
 
 
-def quality_classifier(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    n_buckets: int = 1024,
-) -> DataFrame:
+def quality_classifier(df: DataFrame) -> DataFrame:
     """Hashing-trick linear quality classifier — the fastText/DCLM-style
     model-based filter a curation pipeline runs after the heuristic gates:
-    each token hashes into one of ``n_buckets`` weight slots, the document
+    each token hashes into one of 1024 weight slots, the document
     logit is the mean slot weight, and ``keep`` thresholds it at zero.
 
     The weight table is FROZEN and derived from the bucket id's md5 (a
@@ -568,14 +547,14 @@ def quality_classifier(
     from py_datalake_move_files_spark.functions.scaling import ensure_parallelism
 
     e = ensure_parallelism(df).withColumn(
-        "__qc_toks", F.expr(f"split({text_col}, ' ')")
+        "__qc_toks", F.expr("split(text, ' ')")
     )
     e = e.withColumn(
-        "__qc_s", F.expr(qc_weight_sum_sql("__qc_toks", n_buckets))
+        "__qc_s", F.expr(qc_weight_sum_sql("__qc_toks"))
     )
     n = F.size("__qc_toks")
     return e.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("int").alias("n_tokens"),
         F.round(
             F.col("__qc_s").cast("double") / (n.cast("double") * 16777216.0), 6
@@ -586,18 +565,15 @@ def quality_classifier(
 
 def unigram_logfreq_scores(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    rare_max_count: int = 2,
 ) -> DataFrame:
     """CCNet-style language-model frequency scoring, integer-exact: build a
     unigram model over the corpus (token -> count), then score each document
     by the mean log2-bucketed frequency of its tokens plus the fraction of
-    rare tokens. Low-scoring docs are tail/noise (the docs CCNet's KenLM
-    perplexity filter drops); the log2 bucket ``length(bin(count)) - 1`` is
-    an exact-integer surrogate for log-probability, which keeps the whole
-    two-pass pipeline bit-identical across engines (libm ``log`` is not).
+    rare tokens (corpus count ≤ 2). Low-scoring docs are tail/noise (the
+    docs CCNet's KenLM perplexity filter drops); the log2 bucket
+    ``length(bin(count)) - 1`` is an exact-integer surrogate for
+    log-probability, which keeps the whole two-pass pipeline bit-identical
+    across engines (libm ``log`` is not).
 
     Plan shape: ONE exchange builds the model (map-side combined token
     counts), the model broadcasts back onto the exploded token stream, and
@@ -607,24 +583,24 @@ def unigram_logfreq_scores(
     from py_datalake_move_files_spark.functions.scaling import ensure_parallelism
 
     tok = ensure_parallelism(df).select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("__t")
+        F.col("doc_id"), F.explode(F.split(F.col("text"), " ")).alias("__t")
     )
     model = tok.groupBy("__t").agg(F.count(F.lit(1)).alias("__c"))
     flog2 = (F.length(F.bin(F.col("__c"))) - 1).cast("long")
     scored = tok.join(F.broadcast(model), "__t").select(
-        F.col(id_col),
+        F.col("doc_id"),
         flog2.alias("__f"),
-        F.when(F.col("__c") <= rare_max_count, 1).otherwise(0).alias("__r"),
+        F.when(F.col("__c") <= 2, 1).otherwise(0).alias("__r"),
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_tokens"),
             F.sum("__f").alias("__fs"),
             F.sum("__r").alias("__rs"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "n_tokens",
             F.round(
                 F.col("__fs").cast("double") / F.col("n_tokens").cast("double"), 6
@@ -639,8 +615,6 @@ def unigram_logfreq_scores(
 def bigram_lm_scores(
     df: DataFrame,
     ref: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Bigram language-model scoring against a HELD-OUT reference corpus —
     the context-aware upgrade of :func:`unigram_logfreq_scores` and the
@@ -663,10 +637,10 @@ def bigram_lm_scores(
 
     def bigrams(frame: DataFrame) -> DataFrame:
         t = ensure_parallelism(frame).withColumn(
-            "__bgt", F.expr(f"split({text_col}, ' ')")
+            "__bgt", F.expr("split(text, ' ')")
         )
         return t.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.expr(
                     "CASE WHEN size(__bgt) < 2 THEN array() "
@@ -683,19 +657,19 @@ def bigram_lm_scores(
         F.col("__c").isNull(), F.lit(0).cast("long")
     ).otherwise((F.length(F.bin(F.col("__c"))) - 1).cast("long"))
     scored = joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         bucket.alias("__f"),
         F.when(F.col("__c").isNull(), 1).otherwise(0).alias("__o"),
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_bigrams"),
             F.sum("__f").alias("__fs"),
             F.sum("__o").alias("__os"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "n_bigrams",
             F.round(
                 F.col("__fs").cast("double") / F.col("n_bigrams").cast("double"),
@@ -754,8 +728,6 @@ def canonical_url(url) -> Column:
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     *,
     chunk_tokens: int = 32,
     overlap: int = 8,
@@ -774,10 +746,10 @@ def chunk_documents(
     from py_datalake_move_files_spark.functions.scaling import ensure_parallelism
 
     e = ensure_parallelism(df).withColumn(
-        "__ck_toks", F.expr(f"split({text_col}, ' ')")
+        "__ck_toks", F.expr("split(text, ' ')")
     )
     e = e.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "__ck_toks",
         F.explode(
             F.expr(f"sequence(0, size(__ck_toks) - 1, {stride})")
@@ -785,7 +757,7 @@ def chunk_documents(
     )
     chunk = F.expr(f"slice(__ck_toks, __ck_s + 1, {chunk_tokens})")
     return e.select(
-        F.col(id_col),
+        F.col("doc_id"),
         (F.col("__ck_s") / stride).cast("int").alias("chunk_id"),
         F.size(chunk).cast("int").alias("n_chunk_tokens"),
         F.array_join(chunk, " ").alias("chunk_text"),
@@ -796,11 +768,8 @@ def stratified_split(
     df: DataFrame,
     id_col: str,
     strata_col: str,
-    *,
-    weights: dict[str, int] | None = None,
-    out: str = "split",
 ) -> DataFrame:
-    """EXACT stratified train/val/test assignment: within each stratum,
+    """EXACT stratified 8/1/1 train/val/test ``split``: within each stratum,
     rows are ranked by ``md5(id)`` (a reproducible shuffle) and cumulative
     integer-weight boundaries ``ceil(n·cum_w/total)`` slice the ranking —
     every stratum lands within one row of its target proportion, the
@@ -812,7 +781,7 @@ def stratified_split(
     Deterministic across runs, engines, partitionings."""
     from pyspark.sql import Window
 
-    w = weights or {"train": 8, "val": 1, "test": 1}
+    w = {"train": 8, "val": 1, "test": 1}
     total = sum(w.values())
     win = Window.partitionBy(strata_col)
     rk = F.row_number().over(
@@ -832,4 +801,4 @@ def stratified_split(
         expr = (
             F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
         )
-    return e.withColumn(out, expr).drop("__st_rk", "__st_n")
+    return e.withColumn("split", expr).drop("__st_rk", "__st_n")

@@ -23,12 +23,12 @@ def dd_norm(a: str, dim: int = EMB_DIM) -> str:
     return "sqrt(" + " + ".join(f"{a}[{i}]::DOUBLE * {a}[{i}]::DOUBLE" for i in range(1, dim + 1)) + ")"
 
 
-def dd_cosine(a: str, b: str, dim: int = EMB_DIM) -> str:
-    return f"round(({dd_dot(a, b, dim)}) / (({dd_norm(a, dim)}) * ({dd_norm(b, dim)})), 6)"
+def dd_cosine(a: str, b: str) -> str:
+    return f"round(({dd_dot(a, b)}) / (({dd_norm(a)}) * ({dd_norm(b)})), 6)"
 
 
-def dd_recall_tail(approx_cte: str, k: int = 10) -> str:
-    """Shared recall@k oracle tail: compares an approximate top-k CTE
+def dd_recall_tail(approx_cte: str) -> str:
+    """Shared recall@10 oracle tail: compares an approximate top-k CTE
     (columns ``query_id, neighbor_id, rn``) against the exact brute-force
     baseline. Requires a ``qv(query_id, q_vec)`` CTE in scope. One
     definition keeps the ivf / refined-ivf / pq / ivf+pq recall metrics
@@ -49,20 +49,20 @@ hits AS (
   SELECT p.query_id, count(*) AS n
   FROM {approx_cte} p JOIN ex_r e
     ON p.query_id = e.query_id AND p.neighbor_id = e.neighbor_id
-  WHERE p.rn <= {k} AND e.rn <= {k}
+  WHERE p.rn <= 10 AND e.rn <= 10
   GROUP BY p.query_id
 )
 SELECT q.query_id,
        CAST(coalesce(h.n, 0) AS BIGINT) AS n_hits,
-       round(coalesce(h.n, 0) / {k}.0, 6) AS recall_at_{k}
+       round(coalesce(h.n, 0) / 10.0, 6) AS recall_at_10
 FROM qv q LEFT JOIN hits h USING (query_id)
 """
 
-def dd_hamming(a: str, b: str, length: int = 18) -> str:
-    """DuckDB positional mismatch count for equal-length strings (the
+def dd_hamming(a: str, b: str) -> str:
+    """DuckDB positional mismatch count for 18-character strings (the
     fuzzy-join / record-linkage oracles; Spark side is F.levenshtein-free
     positional comparison in operators/fuzzy)."""
     return " + ".join(
         f"CASE WHEN substr({a}, {i}, 1) = substr({b}, {i}, 1) THEN 0 ELSE 1 END"
-        for i in range(1, length + 1)
+        for i in range(1, 19)
     )

@@ -456,8 +456,7 @@ def q_cdc_upsert_apply(spark, sf_dir):
     """MERGE INTO emulation (the Delta/Iceberg upsert, engine-level): new
     snapshot rows win per key, unmatched old rows survive — the full
     post-merge table from ONE full-outer key join
-    (``operators/delta.upsert_preview``; ``delete_missing=True`` is the
-    WHEN-NOT-MATCHED-BY-SOURCE-DELETE variant, unit-tested). At 100 TB
+    (``operators/delta.upsert_preview``). At 100 TB
     both sides hash-partition on the merge key — the same single-shuffle
     shape as snapshot_diff/scd2, which share this join."""
     from py_datalake_move_files_spark.operators.delta import upsert_preview

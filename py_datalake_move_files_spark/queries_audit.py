@@ -1055,7 +1055,6 @@ _KT_K = 10
 
 def _kt_oracle() -> str:
     from py_datalake_move_files_spark.operators.retrieval import (
-        QL_MU,
         bm25_score_sql,
         ql_score_sql,
     )
@@ -1099,7 +1098,7 @@ lex AS (
 ql AS (
   SELECT doc_id, CAST(rn AS INT) AS rb FROM (
     SELECT d.doc_id, row_number() OVER (
-      ORDER BY {ql_score_sql(len(_KT_TERMS), mu=QL_MU)} DESC,
+      ORDER BY {ql_score_sql(len(_KT_TERMS))} DESC,
                d.doc_id ASC) AS rn
     FROM perdoc d CROSS JOIN stats
   ) WHERE rn <= {_KT_K}

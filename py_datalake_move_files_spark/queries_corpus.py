@@ -2411,16 +2411,16 @@ _EVAL_SAMPLE_K = 2
 _EVAL_TARGET_DOCS = 4_000_000
 
 
-def auto_eval_sample_k(n_docs: int, *, target_docs: int = _EVAL_TARGET_DOCS) -> int:
+def auto_eval_sample_k(n_docs: int) -> int:
     """Corpus-count-derived eval-sample modulus (VERDICT r12 #3, the
     ``auto_n_lists`` pattern): the smallest K whose 1-in-K doc sample
-    holds the eval at ≤ ``target_docs`` documents, floor 1. Monotone
+    holds the eval at ≤ ``_EVAL_TARGET_DOCS`` documents, floor 1. Monotone
     nondecreasing in N, so the eval's pair work stays ~flat (≤ target²
     pair candidates) as the corpus grows. Registered queries pass the
     oracle-pinned ``_EVAL_SAMPLE_K`` instead — their results never move;
     this default governs un-oracled production use of
     :func:`_sampled_arms`-style evals."""
-    return max(1, -(-int(n_docs) // int(target_docs)))
+    return max(1, -(-int(n_docs) // _EVAL_TARGET_DOCS))
 
 
 def _eval_sample_spark(k: int) -> str:

@@ -507,7 +507,7 @@ FROM sz LEFT JOIN rem ON sz.cid = rem.cid"""
     return "WITH " + ",\n".join(parts) + ",\n" + tail
 
 
-def _semdedup_pairs(asg, *, cap: int | None):
+def _semdedup_pairs(asg, *, cap: int):
     """Within-cluster near-dup candidate pairs above the cosine threshold,
     with the quadratic stage hard-bounded: clusters larger than ``cap``
     are excluded from pairing by similarity._cap_bucket_size (the window

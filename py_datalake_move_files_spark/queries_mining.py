@@ -733,10 +733,10 @@ def q_knn_link_prediction(spark, sf_dir):
     the degree-ordered O(m^1.5) restriction (complete for triangles,
     which have exactly one lowest-rank vertex) would undercount here.
     Every 2-path is generated at its center from the symmetric adjacency
-    (one equi-join on the center key): Σ deg² wedges, which the kNN
-    graph bounds by construction — out-degree is k, and in-degree rides
-    the same `max_list_size` hot-bucket cap the graph build enforces
-    (operators/similarity.knn_graph), so no hub goes quadratic. Minus
+    (one equi-join on the center key): Σ deg² wedges. Out-degree is k by
+    construction, but in-degree is not capped — a hub vector that is many
+    vectors' neighbor adds deg² wedges, with AQE's skew-join split as the
+    only runtime guard. Minus
     existing edges via one anti join; scores are integer ppm;
     top-{_LINK_TOP} with a full deterministic tie-break,
     TakeOrdered-sized."""

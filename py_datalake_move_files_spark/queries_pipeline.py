@@ -63,7 +63,6 @@ from pyspark.sql import functions as F
 
 from py_datalake_move_files_spark.functions.scaling import ensure_parallelism
 from py_datalake_move_files_spark.operators.retrieval import (
-    QL_MU,
     ql_dirichlet_topk,
     ql_score_sql,
 )
@@ -772,7 +771,7 @@ perdoc AS (
   FROM documents
 ),
 scored AS (
-  SELECT d.doc_id, {ql_score_sql(len(QL_TERMS), mu=QL_MU)} AS score
+  SELECT d.doc_id, {ql_score_sql(len(QL_TERMS))} AS score
   FROM perdoc d CROSS JOIN stats
 ),
 r AS (

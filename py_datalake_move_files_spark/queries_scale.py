@@ -365,10 +365,8 @@ def q_pagerank_nation_flow(spark, sf_dir):
     lineitem-orders-customer-supplier star join + one aggregation — all
     dimension sides broadcast); the iteration then runs on the 25-node
     aggregate via :func:`operators.graph.pagerank`, so 8 rounds cost 8
-    tiny joins. For graphs with large node sets the same loop takes
-    ``checkpoint_every``/``checkpoint_dir`` (localCheckpoint or reliable
-    checkpoint) to cut lineage per round; here the aggregate is small
-    enough that Catalyst folds the whole unrolled loop into one plan."""
+    tiny joins; the aggregate is small enough that Catalyst folds the whole
+    unrolled loop into one plan."""
     from py_datalake_move_files_spark.operators.graph import (
         normalize_edges,
         pagerank,

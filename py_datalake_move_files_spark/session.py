@@ -9,6 +9,8 @@ vars for local runs:
 - Arrow on, so any unavoidable Pandas UDF moves data in vectorized batches.
 - ``spark.sql.shuffle.partitions`` sized from SPARK_GRAFT_CPUS locally; on a
   real cluster AQE coalesces from a deliberately high initial number.
+- the driver heap (the executor too, in local mode) is SPARK_GRAFT_DRIVER_MEM,
+  else half the host's physical memory capped at 24g.
 """
 
 from __future__ import annotations
@@ -16,6 +18,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the driver-heap cap: at 8g the bench's accumulated shuffle/broadcast
+#: state pushed GC into the measured queries (1.7× total slowdown observed)
+DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def default_driver_mem() -> str:
+    """Half the host's physical memory, capped at ``DRIVER_MEM_CAP_MB``: in
+    local mode the driver JVM is also the executor, and a heap larger than
+    the host lets it grow until the kernel kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(DRIVER_MEM_CAP_MB, phys // 2 // 2**20)}m"
 
 
 def get_spark(
@@ -36,9 +50,7 @@ def get_spark(
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
-        )
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -57,11 +69,6 @@ def get_spark(
         # this knob only changes the small-shuffle/CPU-heavy regime.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # reliable-checkpoint GC: iterative operators (connected components,
-        # pagerank) checkpoint per round; the ContextCleaner deletes a
-        # round's files once its RDD is unreferenced, bounding checkpoint
-        # storage at O(live rounds) instead of O(all rounds)
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
@@ -73,11 +80,12 @@ def get_spark(
         # pinned to UTC above, NTZ -> UTC-instant is semantics-preserving, and
         # it keeps unix_millis and window ranges working uniformly.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # local mode: the driver JVM IS the executor — at 8g the bench's
-        # accumulated shuffle/broadcast state pushed GC into the measured
-        # queries (1.7× total slowdown observed); real clusters size
+        # local mode: the driver JVM IS the executor; real clusters size
         # spark.executor.memory instead and ignore this knob
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -76,3 +76,22 @@ def test_cli_applies_azure_conf_only_for_abfss_paths(monkeypatch, capsys):
     assert sessions == []  # no session was built
     err = capsys.readouterr().err.strip().splitlines()
     assert err == ["error: missing Azure config: client_secret"]
+
+
+@pytest.mark.parametrize("host_gib", [1, 4, 15, 16, 64, 512])
+def test_default_driver_heap_never_exceeds_host_memory(monkeypatch, host_gib):
+    """The default driver heap is half the host's physical memory, capped at
+    24g, so it always fits the host. ``os.sysconf`` is stubbed; no JVM
+    starts."""
+    page = 4096
+    pages = host_gib * 2**30 // page
+    monkeypatch.setattr(
+        session.os,
+        "sysconf",
+        lambda name: {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": pages}[name],
+    )
+    mem = session.default_driver_mem()
+    assert mem.endswith("m")
+    mb = int(mem[:-1])
+    assert mb == min(24 * 1024, host_gib * 1024 // 2)
+    assert mb * 2**20 <= host_gib * 2**30

@@ -80,7 +80,7 @@ def test_kmeans_refine_matches_bruteforce_one_round(spark, vecs):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     init = [(0, rows[0][1]), (1, rows[1][1])]
 
-    got = kmeans_refine(df, init, iters=1, vec_col="embedding")
+    got = kmeans_refine(df, init, iters=1)
 
     # brute force: argmax of 6-dp-rounded cosine (ties to lowest cid),
     # then exact fixed-point means — float32-widened inputs like Spark's

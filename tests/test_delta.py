@@ -59,9 +59,3 @@ def test_upsert_preview_new_wins_old_survives(spark):
     assert merged[5] == ("e", 50.0)  # insert
     assert len(merged) == 5
 
-
-def test_upsert_preview_delete_missing(spark):
-    old, new = _frames(spark)
-    merged = upsert_preview(old, new, ["k"], ["s", "v"], delete_missing=True)
-    keys = {r["k"] for r in merged.collect()}
-    assert keys == {2, 3, 4, 5}

@@ -7,6 +7,9 @@
 - Reachability: every package module is imported, directly or
   transitively, by an entry point (registry, CLI, `__spark_entry__.py`,
   bench, perfbench, tools). A module only tests import is dead weight.
+- Settings: every defaulted public parameter of a package function is set
+  by some call outside the tests, apart from named test seams. A value
+  only tests select is a code path only tests run.
 """
 
 from __future__ import annotations
@@ -114,14 +117,8 @@ def test_every_package_module_is_reached_from_an_entry_point():
     assert not unreached, f"package modules no entry point imports: {unreached}"
 
 
-#: The mover's modules. Every defaulted parameter of their public functions
-#: must be set by some call outside the tests, except the test seams: each
-#: lets a test substitute a fake or force a schedule.
-MOVER_MODULES = [
-    "catalog", "config", "sources/files", "operators/manifest",
-    "operators/paths", "operators/predicates", "plans/movecopy",
-    "plans/maintenance",
-]
+#: Defaulted parameters no entry point sets that stay anyway: each lets a
+#: test substitute a fake or force a schedule.
 TEST_SEAMS = {
     ("execute_plan", "parallelism"), ("execute_plan", "filesystem_factory"),
     ("execute_plan", "_stagger_s"), ("execute_plan", "_fail_task_once"),
@@ -141,16 +138,18 @@ def _public_functions(path: Path) -> list[ast.FunctionDef]:
 
 
 def _passed_values(path: Path, positional: dict[str, list[str]]) -> set:
-    """``(function, parameter)`` for every argument a call in ``path``
-    passes by keyword or position. Forwarding the enclosing function's own
-    same-named parameter (``glob=glob``) passes nothing new, so it does not
-    count."""
+    """``(function, parameter, forwarded_from)`` for every argument a call
+    in ``path`` passes by keyword or position. ``forwarded_from`` is
+    ``(enclosing function, parameter)`` when the call forwards the
+    enclosing function's own same-named parameter (``glob=glob``), else
+    None."""
     passed = set()
 
-    def visit(node, enclosing: set[str]):
+    def visit(node, fn, enclosing: set[str]):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
             a = node.args
             enclosing = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+            fn = getattr(node, "name", fn)
         if isinstance(node, ast.Call):
             f = node.func
             name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
@@ -159,24 +158,24 @@ def _passed_values(path: Path, positional: dict[str, list[str]]) -> set:
                 if isinstance(value, ast.Starred):
                     break
                 args.append((param, value))
-            passed.update(
-                (name, param)
-                for param, value in args
-                if not (
+            for param, value in args:
+                forwards = (
                     isinstance(value, ast.Name)
                     and value.id == param
                     and param in enclosing
                 )
-            )
+                passed.add((name, param, (fn, param) if forwards else None))
         for child in ast.iter_child_nodes(node):
-            visit(child, enclosing)
+            visit(child, fn, enclosing)
 
-    visit(ast.parse(path.read_text(), str(path)), set())
+    visit(ast.parse(path.read_text(), str(path)), None, set())
     return passed
 
 
-def test_mover_parameters_are_set_by_an_entry_point():
-    """A setting only tests select is a code path only tests run."""
+def test_package_parameters_are_set_by_an_entry_point():
+    """A setting only tests select is a code path only tests run. A
+    forwarded parameter (``f(x=x)``) counts as set only when the
+    forwarding function's own parameter is."""
     entry_files = [
         *(ROOT / PKG).rglob("*.py"),
         ROOT / "__spark_entry__.py",
@@ -184,9 +183,7 @@ def test_mover_parameters_are_set_by_an_entry_point():
         *(ROOT / "perfbench").glob("*.py"),
         *(ROOT / "tools").glob("*.py"),
     ]
-    funcs = [
-        f for m in MOVER_MODULES for f in _public_functions(ROOT / PKG / f"{m}.py")
-    ]
+    funcs = [f for p in (ROOT / PKG).rglob("*.py") for f in _public_functions(p)]
     defaults, positional = set(), {}
     for f in funcs:
         a = f.args
@@ -196,12 +193,19 @@ def test_mover_parameters_are_set_by_an_entry_point():
             (f.name, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
         )
         positional[f.name] = [p.arg for p in pos if p.arg not in ("self", "cls")]
-    passed = set().union(
+    calls = set().union(
         *(
             _passed_values(p, positional)
             for p in entry_files
             if not p.name.startswith("test_")
         )
     )
+    passed = {(name, param) for name, param, src in calls if src is None}
+    forwards = {(name, param, src) for name, param, src in calls if src is not None}
+    while True:
+        more = {(name, param) for name, param, src in forwards if src in passed}
+        if more <= passed:
+            break
+        passed |= more
     unset = sorted(defaults - passed - TEST_SEAMS)
     assert not unset, f"defaulted parameters no entry point sets: {unset}"

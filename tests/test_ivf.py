@@ -146,19 +146,16 @@ def test_kmeans_profile_assignment_stage_is_shuffle_free(emb):
     assert "partial_count" in plan or "partial_sum" in plan
 
 
-def test_ivf_assign_broadcast_path_matches_literal_path(emb):
+def test_ivf_assign_broadcast_path_matches_literal_path(emb, monkeypatch):
     """The two ivf_assign plans (centroid literals vs broadcast centroid
     table) must produce identical assignments — same rounded cosines, same
     (max sim, lowest cid) tie-break."""
+    import py_datalake_move_files_spark.operators.similarity as SIM
+
     cents = ivf_centroids(emb, n_lists=8)
-    lit = {
-        r["vec_id"]: r["list_id"]
-        for r in ivf_assign(emb, cents, max_literal_k=64).collect()
-    }
-    bc = {
-        r["vec_id"]: r["list_id"]
-        for r in ivf_assign(emb, cents, max_literal_k=0).collect()
-    }
+    lit = {r["vec_id"]: r["list_id"] for r in ivf_assign(emb, cents).collect()}
+    monkeypatch.setattr(SIM, "IVF_LITERAL_MAX_K", 0)  # force the broadcast path
+    bc = {r["vec_id"]: r["list_id"] for r in ivf_assign(emb, cents).collect()}
     assert lit == bc
 
 
@@ -334,7 +331,7 @@ def test_semantic_dedup_query_pairing_is_capped(spark):
     got = {r["cluster_id"]: r["n"] for r in pairs.collect()}
     assert 0 not in got                 # mega-cluster never paired
     assert got[1] == 4 * 3 // 2         # small cluster pairs fully
-    # and with no cap the same fixture would go quadratic — prove the
-    # bound is the cap's doing, not the data's
-    uncapped = _semdedup_pairs(asg, cap=None)
+    # and with a cap no cluster reaches the same fixture goes quadratic —
+    # prove the bound is the cap's doing, not the data's
+    uncapped = _semdedup_pairs(asg, cap=len(mega) + len(small))
     assert uncapped.where("cluster_id = 0").count() == 50 * 49 // 2

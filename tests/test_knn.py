@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from py_datalake_move_files_spark.catalog import load_table
-from py_datalake_move_files_spark.operators import similarity as SIM
 from py_datalake_move_files_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.01"
@@ -44,15 +43,6 @@ def test_knn_graph_edge_invariants(spark):
         es = sorted(es, key=lambda e: e["rnk"])
         keyed = [(-e["cosine_sim"], e["neighbor_id"]) for e in es]
         assert keyed == sorted(keyed), q
-
-
-def test_knn_graph_list_cap_bounds_candidates(spark):
-    # a hard list-size cap must drop over-cap lists from the index side
-    # (graceful recall loss), never error or go quadratic
-    emb = load_table(spark, SF, "embeddings")
-    capped = SIM.knn_graph(emb, k=3, n_lists=4, n_probe=1, max_list_size=50)
-    uncapped = SIM.knn_graph(emb, k=3, n_lists=4, n_probe=1)
-    assert capped.count() <= uncapped.count()
 
 
 def test_label_agreement_consistent_with_edges(spark):

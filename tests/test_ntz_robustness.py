@@ -25,13 +25,20 @@ def _with_flavor(df, flavor, *cols):
 
 
 @pytest.mark.parametrize("flavor", FLAVORS)
-def test_asof_join_tolerance_both_flavors(spark, flavor):
+def test_asof_join_salted_both_flavors(spark, flavor):
+    # the salted plan buckets by unix_micros of the timestamp, which must
+    # accept NTZ columns as well as TimestampType
     left = spark.createDataFrame(
-        [(1, D(2024, 1, 1, 0, 10)), (1, D(2024, 1, 1, 2, 0))],
+        [
+            (1, D(2023, 12, 31, 23, 0)),
+            (1, D(2024, 1, 1, 0, 10)),
+            (1, D(2024, 1, 1, 2, 0)),
+        ],
         "k long, lts timestamp",
     )
     right = spark.createDataFrame(
-        [(1, D(2024, 1, 1, 0, 0), "a")], "k long, rts timestamp, payload string"
+        [(1, D(2024, 1, 1, 0, 0), "a"), (1, D(2024, 1, 1, 1, 0), "b")],
+        "k long, rts timestamp, payload string",
     )
     left = _with_flavor(left, flavor, "lts")
     right = _with_flavor(right, flavor, "rts")
@@ -42,12 +49,14 @@ def test_asof_join_tolerance_both_flavors(spark, flavor):
         left_ts="lts",
         right_ts="rts",
         right_cols=["payload"],
-        tolerance_ms=30 * 60 * 1000,
+        salt_buckets=4,
     )
     rows = {r.lts.replace(tzinfo=None): r.asof_payload for r in out.collect()}
-    # 00:10 is within 30 min of the 00:00 right row; 02:00 is not
-    assert rows[D(2024, 1, 1, 0, 10)] == "a"
-    assert rows[D(2024, 1, 1, 2, 0)] is None
+    assert rows == {
+        D(2023, 12, 31, 23, 0): None,  # before every right row
+        D(2024, 1, 1, 0, 10): "a",
+        D(2024, 1, 1, 2, 0): "b",  # carried across salt buckets
+    }
 
 
 @pytest.mark.parametrize("flavor", FLAVORS)

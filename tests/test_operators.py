@@ -160,37 +160,6 @@ def test_range_join_buckets(spark):
     assert got == {5.0: "lo", 15.0: "mid", 150.0: "hi"}
 
 
-def test_asof_join_forward_and_tolerance(spark):
-    left = spark.createDataFrame(
-        [("u1", dt.datetime(2024, 1, 1, 10, 0), "p1")], ["user", "ts", "pid"]
-    )
-    right = spark.createDataFrame(
-        [
-            ("u1", dt.datetime(2024, 1, 1, 9, 0), "before"),
-            ("u1", dt.datetime(2024, 1, 1, 10, 30), "after30m"),
-            ("u1", dt.datetime(2024, 1, 1, 12, 0), "after2h"),
-        ],
-        ["user", "ts", "vid"],
-    )
-    fwd = asof_join(
-        left, right, on="user", left_ts="ts", right_ts="ts",
-        right_cols=["vid"], direction="forward",
-    ).first()
-    assert fwd.asof_vid == "after30m"  # earliest AT-or-after
-
-    tight = asof_join(
-        left, right, on="user", left_ts="ts", right_ts="ts",
-        right_cols=["vid"], direction="forward", tolerance_ms=10 * 60 * 1000,
-    ).first()
-    assert tight.asof_vid is None  # nearest forward match is 30m away
-
-    back_tol = asof_join(
-        left, right, on="user", left_ts="ts", right_ts="ts",
-        right_cols=["vid"], direction="backward", tolerance_ms=2 * 3600 * 1000,
-    ).first()
-    assert back_tol.asof_vid == "before"
-
-
 def test_incremental_dedup_statuses_and_keeper(spark):
     from py_datalake_move_files_spark.operators.dedup import incremental_dedup
 

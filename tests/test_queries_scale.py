@@ -105,7 +105,7 @@ def test_fuzzy_banding_is_length_adaptive_on_short_names(spark):
     # names of length >= 3 — the properties the fixed 10/13/16 scheme
     # violates for short strings (empty chunks => every short name shares
     # one bucket => quadratic fallback)
-    bands = banded_strings(df, "id", "name", max_dist=2).collect()
+    bands = banded_strings(df, "id", "name", (), 2, None).collect()
     by_id = {}
     for r in bands:
         by_id.setdefault(r["id"], {})[r["chunk_idx"]] = r
@@ -158,7 +158,7 @@ def test_fuzzy_banding_no_constant_bucket_on_uniform_prefix_corpus(spark):
     rows = [(i, f"Customer#{i:09d}") for i in range(0, 73 * n, 73)]
     df = spark.createDataFrame(rows, "id long, name string")
     stats = (
-        banded_strings(df, "id", "name", max_dist=2)
+        banded_strings(df, "id", "name", (), 2, None)
         .groupBy("chunk_idx", "chunk")
         .count()
         .agg(

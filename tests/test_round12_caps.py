@@ -281,11 +281,12 @@ def test_knn_graph_auto_default_applies_sqrt_rule(spark):
     assert len(cents) == auto_n_lists(n) == 32
 
 
-def test_probe_lists_large_k_matches_literal_path(spark):
+def test_probe_lists_large_k_matches_literal_path(spark, monkeypatch):
     """The probe stage's two dispatch paths (per-centroid literal
     expressions vs the broadcast array<struct> HOF loop) must produce
     IDENTICAL probe lists — same rounded cosines, same (−sim, cid) tie
     order — exactly like ivf_assign's two paths."""
+    import py_datalake_move_files_spark.operators.similarity as SIM
     from py_datalake_move_files_spark.operators.similarity import (
         _probe_lists,
         ivf_centroids,
@@ -303,16 +304,14 @@ def test_probe_lists_large_k_matches_literal_path(spark):
     q = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).withColumn("q_nrm", norm("q_vec"))
-    lit_rows = sorted(
-        (r.query_id, r.list_id)
-        for r in _probe_lists(
-            q, cents, n_probe=3, max_literal_k=64
-        ).select("query_id", "list_id").collect()
-    )
-    hof_rows = sorted(
-        (r.query_id, r.list_id)
-        for r in _probe_lists(
-            q, cents, n_probe=3, max_literal_k=4
-        ).select("query_id", "list_id").collect()
-    )
+    def probe_rows():
+        probes = _probe_lists(q, cents, n_probe=3)
+        return sorted(
+            (r.query_id, r.list_id)
+            for r in probes.select("query_id", "list_id").collect()
+        )
+
+    lit_rows = probe_rows()
+    monkeypatch.setattr(SIM, "IVF_LITERAL_MAX_K", 4)  # 12 lists > 4: HOF path
+    hof_rows = probe_rows()
     assert lit_rows == hof_rows and len(lit_rows) == 40 * 3

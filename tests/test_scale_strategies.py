@@ -112,26 +112,7 @@ def test_connected_components_on_crafted_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_reliable_checkpoint_identical(spark, tmp_path):
-    # reliable checkpoint() (executor-loss-safe path for real clusters)
-    # must yield clusters identical to the localCheckpoint default
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (5, 6), (6, 7)], ["id_a", "id_b"]
-    )
-    local = {r.node: r.cluster_id for r in connected_components(pairs).collect()}
-    reliable = {
-        r.node: r.cluster_id
-        for r in connected_components(
-            pairs, checkpoint_dir=str(tmp_path / "ckpt")
-        ).collect()
-    }
-    assert local == reliable
-    import os
-
-    assert os.listdir(tmp_path / "ckpt")  # checkpoint files actually written
-
-
-def test_pagerank_checkpoint_variants_identical(spark, tmp_path):
+def test_pagerank_conserves_rank_mass(spark):
     from py_datalake_move_files_spark.operators.graph import (
         normalize_edges,
         pagerank,
@@ -144,17 +125,9 @@ def test_pagerank_checkpoint_variants_identical(spark, tmp_path):
     nodes = spark.createDataFrame([(0,), (1,), (2,)], ["nation"])
     norm = normalize_edges(edges)
 
-    def run(**kw):
-        return {
-            r.nation: round(r.rank, 9)
-            for r in pagerank(norm, nodes, iterations=6, **kw).collect()
-        }
-
-    plain = run()
-    local_cut = run(checkpoint_every=2)
-    reliable = run(checkpoint_every=2, checkpoint_dir=str(tmp_path / "prckpt"))
-    assert plain == local_cut == reliable
-    assert abs(sum(plain.values()) - 1.0) < 1e-6  # no dangling mass here
+    ranks = {r.nation: r.rank for r in pagerank(norm, nodes, iterations=6).collect()}
+    assert set(ranks) == {0, 1, 2}
+    assert abs(sum(ranks.values()) - 1.0) < 1e-6  # no dangling mass here
 
 
 def test_inverted_jaccard_survives_universal_hot_shingle(spark):
