@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from py_datalake_move_files_spark.functions.scaling import ensure_parallelism
+from py_datalake_move_files_spark.functions.worker import make_worker_preamble
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -138,8 +139,10 @@ def decode_images(media: DataFrame) -> DataFrame:
     ``decode`` is a nested closure and ships by value with the task.
     """
     decode = make_image_decoder(FEATURE_DIM)
+    worker_preamble = make_worker_preamble()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_preamble()
         import pandas as _pd
 
         try:
@@ -186,9 +189,11 @@ def sample_frames(media: DataFrame, *, every_ms: int = 1000, max_frames: int = 8
     digests are derived deterministically from the content's md5 (over its
     hex string, so a ``md5(VARCHAR)``-only SQL oracle reproduces them);
     ffmpeg would produce real frames in the production path."""
+    worker_preamble = make_worker_preamble()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # self-contained worker closure: see decode_images
+        worker_preamble()
         import hashlib as _hashlib
 
         import pandas as _pd
@@ -288,8 +293,10 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     mirroring :func:`decode_images`: real stdlib-``wave`` decode per row with
     per-row stub fallback; self-contained worker closure (ships by value)."""
     decode = make_audio_decoder()
+    worker_preamble = make_worker_preamble()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_preamble()
         import wave as _wave
 
         import pandas as _pd

@@ -15,6 +15,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from py_datalake_move_files_spark.functions.worker import make_worker_preamble
+
 
 def date_range_predicate(
     ts: Column,
@@ -109,9 +111,12 @@ def make_json_key_probe_exact(key: str, target: str):
     not found / mismatch / non-JSON / decode error ⇒ False.
     """
     starget = str(target)
+    worker_preamble = make_worker_preamble()
 
     @F.pandas_udf(T.BooleanType())
     def probe(docs: pd.Series) -> pd.Series:
+        worker_preamble()
+
         def one(txt) -> bool:
             if txt is None:
                 return False

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from py_datalake_move_files_spark.functions.scaling import ensure_parallelism
+from py_datalake_move_files_spark.functions.worker import make_worker_preamble
 
 
 _UNIQ = iter(range(10**9))
@@ -1533,10 +1534,12 @@ def dim_correlations(
     posexplode + groupBy (map-side combined, 64 final rows); the
     assembly join is metadata-sized."""
     d = dim
+    worker_preamble = make_worker_preamble()
 
     def gram_partials(batches):
         # site-package imports INSIDE the closure: executors outside the
         # repo dir must never resolve names through this module's globals
+        worker_preamble()
         import numpy as np
         import pandas as pd
 
@@ -1733,10 +1736,12 @@ def gram_moments(
     scale a decade.
     """
     d = dim
+    worker_preamble = make_worker_preamble()
 
     def partials(batches):
         # site-package imports INSIDE the closure: executors outside the
         # repo dir must never resolve names through this module's globals
+        worker_preamble()
         import numpy as np
         import pandas as pd
 

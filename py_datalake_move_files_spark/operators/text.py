@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from py_datalake_move_files_spark.functions.worker import make_worker_preamble
+
 #: Marker tokens per language for the n-gram/stopword language-ID heuristic.
 #: Real pipelines use character n-gram profiles (e.g. CLD-style); the harness
 #: corpus is synthetic-English so markers demonstrate the mechanism.
@@ -467,6 +469,7 @@ def heavy_hitters(
     from pyspark.sql import types as T
 
     k = candidates_per_partition
+    worker_preamble = make_worker_preamble()
 
     def mg_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Vectorized Misra-Gries via the mergeable-summaries reduction
@@ -476,6 +479,7 @@ def heavy_hitters(
         # non-positives — ≤ k counters remain and total decrement stays
         # ≤ n_partition/(k+1), so any item with partition count
         # > n_partition/(k+1) retains a counter (≥ the 1/k guarantee).
+        worker_preamble()
         import pandas as _pd
 
         counters = _pd.Series(dtype="int64")

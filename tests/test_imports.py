@@ -10,6 +10,8 @@
 - Settings: every defaulted public parameter of a package function is set
   by some call outside the tests, apart from named test seams. A value
   only tests select is a code path only tests run.
+- Worker preamble: every Python stage (``mapInPandas`` function or
+  ``pandas_udf`` body) starts with the one ``worker_preamble()`` device.
 """
 
 from __future__ import annotations
@@ -209,3 +211,97 @@ def test_package_parameters_are_set_by_an_entry_point():
         passed |= more
     unset = sorted(defaults - passed - TEST_SEAMS)
     assert not unset, f"defaulted parameters no entry point sets: {unset}"
+
+
+#: Methods that run a Python function per task over Arrow batches.
+_PYTHON_STAGE_CALLS = {"mapInPandas", "applyInPandas", "mapInArrow", "applyInArrow"}
+_PREAMBLE_FACTORY = "make_worker_preamble"
+
+
+def _call_name(node) -> str | None:
+    f = node.func if isinstance(node, ast.Call) else node
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def _scope_nodes(scope):
+    """The nodes of ``scope``'s body, not descending into nested
+    functions, lambdas or classes."""
+    stack = list(scope.body)
+    while stack:
+        node = stack.pop()
+        yield node
+        if not isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef, ast.Lambda)
+        ):
+            stack.extend(ast.iter_child_nodes(node))
+
+
+def _python_stages_without_preamble(pkg_dir: Path) -> list[str]:
+    """``module:line function`` for every function in ``pkg_dir`` that is
+    passed to ``mapInPandas`` (or a sibling Arrow-batch method) or wrapped
+    by ``pandas_udf`` and whose first statement, after any docstring, is
+    not a call of a name bound to ``make_worker_preamble()``. A stage
+    function that cannot be resolved to a ``def`` in the calling scope is
+    listed as ``<unresolved>``."""
+    missing = []
+    for path in sorted(pkg_dir.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        devices = {
+            t.id
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Assign)
+            and isinstance(node.value, ast.Call)
+            and _call_name(node.value) == _PREAMBLE_FACTORY
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
+        stages = []
+        scopes = [tree, *(n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef))]
+        for scope in scopes:
+            nodes = list(_scope_nodes(scope))
+            defs = {n.name: n for n in nodes if isinstance(n, ast.FunctionDef)}
+            for node in nodes:
+                if isinstance(node, ast.FunctionDef) and any(
+                    _call_name(d) == "pandas_udf" for d in node.decorator_list
+                ):
+                    stages.append(node)
+                if not isinstance(node, ast.Call) or not node.args:
+                    continue
+                name = _call_name(node)
+                if name in _PYTHON_STAGE_CALLS or name == "pandas_udf":
+                    fn = node.args[0]
+                    if isinstance(fn, ast.Name) and fn.id in defs:
+                        stages.append(defs[fn.id])
+                    elif name in _PYTHON_STAGE_CALLS:
+                        missing.append(f"{path.name}:{node.lineno} <unresolved>")
+        for fn in stages:
+            body = [
+                s for s in fn.body
+                if not (isinstance(s, ast.Expr) and isinstance(s.value, ast.Constant))
+            ]
+            first = body[0] if body else None
+            if not (
+                isinstance(first, ast.Expr)
+                and isinstance(first.value, ast.Call)
+                and _call_name(first.value) in devices
+            ):
+                missing.append(f"{path.name}:{fn.lineno} {fn.name}")
+    return missing
+
+
+def test_every_python_stage_starts_with_the_worker_preamble():
+    """Each Python task otherwise re-reads every cached zip importer's
+    archive on CPython < 3.13 (functions/worker.py)."""
+    missing = _python_stages_without_preamble(ROOT / PKG)
+    assert not missing, f"Python stages without worker_preamble(): {missing}"
+
+
+def test_the_worker_preamble_has_one_definition():
+    """One device: no other module defines it or touches the importer cache."""
+    hits = sorted(
+        path.relative_to(ROOT / PKG).as_posix()
+        for path in (ROOT / PKG).rglob("*.py")
+        if "path_importer_cache" in path.read_text()
+        or f"def {_PREAMBLE_FACTORY}" in path.read_text()
+    )
+    assert hits == ["functions/worker.py"], hits
