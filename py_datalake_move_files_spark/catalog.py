@@ -43,15 +43,25 @@ MANIFEST_SCHEMA = T.StructType(
 
 def table_snapshot(sf_dir: str, name: str) -> tuple:
     """Cache-key fingerprint of a table: (path, mtime_ns, size) for a local
-    parquet file, path-only when the stat isn't available (remote storage,
-    missing file). Process-lifetime caches of anything DERIVED from a table
-    (IVF centroids, PQ codebooks) must key on this instead of the bare
-    sf_dir, so rewriting data under the same path invalidates them
-    (ADVICE r4: a bare-path key silently served stale trained state)."""
+    parquet file; for a (Spark-written) directory, the path followed by
+    (file, mtime_ns, size) of every file under it, in path order;
+    path-only when the stat isn't available (remote storage, missing
+    file). Process-lifetime caches of anything read from or DERIVED from a
+    table (its schema, IVF centroids, PQ codebooks) must key on this
+    instead of the bare sf_dir, so rewriting data under the same path
+    invalidates them (ADVICE r4: a bare-path key silently served stale
+    trained state)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        st = os.stat(path)
-        return (path, st.st_mtime_ns, st.st_size)
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (path, st.st_mtime_ns, st.st_size)
+        out = [path]
+        for root, _, files in sorted(os.walk(path)):
+            for f in sorted(files):
+                st = os.stat(os.path.join(root, f))
+                out += [os.path.join(root, f), st.st_mtime_ns, st.st_size]
+        return tuple(out)
     except OSError:
         return (path,)
 
@@ -78,26 +88,51 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
+#: parquet path -> (its table_snapshot, inferred schema); see load_table
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``spark.read.parquet`` of one table, inferring its schema once per
+    process.
+
+    Inference runs a footer-reading Spark job on every read; here it runs
+    on a path's first read, and later reads pass the cached schema with
+    ``.schema(...)`` and run no job. The cache is keyed on
+    :func:`table_snapshot`, so a rewritten file or a directory whose part
+    files change is inferred again, and a path that cannot be stat'ed
+    (path-only snapshot) is never cached."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    snap = table_snapshot(sf_dir, name)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == snap:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if len(snap) > 1:
+        _SCHEMAS[path] = (snap, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one harness table. Plain parquet scan — predicate pushdown and
     column pruning happen in the reader, so callers should filter/select on
-    this DataFrame directly rather than caching wide copies.
+    this DataFrame directly rather than caching wide copies. The schema is
+    inferred on the table's first read in the process and reused while its
+    files are unchanged (:func:`_read_parquet`), so building a query over
+    an already-read table runs no Spark job.
 
     ``events.ts`` has shipped as parquet TIMESTAMP(NANOS) — which Spark's
     vectorized reader rejects, so we read it as nano-long (``nanosAsLong``)
     and floor-truncate to microseconds, exactly what DuckDB/Arrow do — and
     as tz-less TIMESTAMP(MICROS), normalized by :func:`_normalize_timestamps`.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        from pyspark.sql import functions as F
-
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, sf_dir, name)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return _normalize_timestamps(df)
-    return _normalize_timestamps(spark.read.parquet(path))
+    return _normalize_timestamps(_read_parquet(spark, sf_dir, name))
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -56,6 +56,18 @@ def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFram
     )
 
 
+def _shingled(df: DataFrame, id_col: str) -> DataFrame:
+    """:func:`with_shingles` over ``df``'s non-NULL-id rows, spread over the
+    cluster. :func:`minhash_signatures` and :func:`jaccard_pairs` both start
+    here, so in a plan holding both (the LSH queries) the scan and its
+    round-robin exchange are identical subtrees, Spark reuses the one
+    exchange, and the documents are read once. The NULL-id filter is
+    explicit because the verify joins infer it and push it under the
+    exchange, which would make the two subtrees differ; a NULL id never
+    forms a pair in either operator."""
+    return with_shingles(ensure_parallelism(df.where(F.col(id_col).isNotNull())))
+
+
 def dedup_exact(df: DataFrame, id_col: str) -> DataFrame:
     """Exact dedup: one representative (min id) per identical text.
 
@@ -221,7 +233,7 @@ def minhash_signatures(
     Computed entirely PER ROW (``transform`` + ``array_min``): no explode,
     no groupBy, ZERO shuffles — the signature stage is embarrassingly
     parallel at any scale. Signature columns ``mh0..mh{n-1}`` (BIGINT)."""
-    sh = with_shingles(ensure_parallelism(df))
+    sh = _shingled(df, id_col)
     n_md5 = (num_hashes + 3) // 4
     u = f"s{next(_UNIQ)}"  # unique lambda vars: see tests/test_lambda_safety.py
     digest = " || ".join(
@@ -312,20 +324,22 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs ≥ threshold.
 
-    The shingle frame is consumed 2-3 times below (both join sides /
-    postings + sizes), so it is materialized once with ``localCheckpoint``
-    instead of re-running the HOF shingling per consumer.
-
     Two physical paths, same scoring:
 
     - with ``candidates`` (id_a, id_b) — e.g. from LSH banding — only those
       pairs are scored: two joins bring in both shingle sets and
       ``array_intersect`` computes the overlap per pair. Cost is
-      O(candidates), the 100 TB path when a sketch already pruned.
+      O(candidates), the 100 TB path when a sketch already pruned. The
+      shingle frame stays lazy here: its two consumers (the join sides)
+      cost less than the job an eager checkpoint would run while the plan
+      is built.
     - otherwise, inverted-index discovery: postings of df>1 shingles
       self-join on the shingle, and intersection counts come from one pair
       groupBy (the singleton prune rides a window over the same key the
-      join shuffles on, so postings arrive co-partitioned).
+      join shuffles on, so postings arrive co-partitioned). The shingle
+      frame feeds the postings, the sizes and the verify arm, so this path
+      materializes it once with ``localCheckpoint`` instead of re-running
+      the HOF shingling per consumer.
 
     ``max_df`` is the scale guard for the posting self-join: shingles whose
     document frequency exceeds the cap are EXCLUDED from candidate
@@ -347,15 +361,13 @@ def jaccard_pairs(
     the document count, which no shingle's df can exceed, so nothing is
     dropped.
     """
-    sh = (
-        with_shingles(ensure_parallelism(df))
-        .select(F.col(id_col).alias("doc"), F.col("shingle_set"))
-        .localCheckpoint(eager=True)
+    sh = _shingled(df, id_col).select(
+        F.col(id_col).alias("doc"), F.col("shingle_set")
     )
 
     def _verify(cand: DataFrame) -> DataFrame:
-        """Exact scoring of candidate pairs over the FULL shingle sets —
-        reuses the (checkpointed) shingle frame, never re-shingles."""
+        """Exact scoring of candidate pairs over the FULL shingle sets of
+        ``sh`` (checkpointed on the discovery path)."""
         a = sh.select(
             F.col("doc").alias("id_a"), F.col("shingle_set").alias("set_a")
         )
@@ -379,6 +391,7 @@ def jaccard_pairs(
     if candidates is not None:
         return _verify(candidates)
 
+    sh = sh.localCheckpoint(eager=True)
     # per-doc sizes side: broadcast only while provably small (the
     # checkpointed sh makes the count metadata-cheap)
     n_docs = sh.count()

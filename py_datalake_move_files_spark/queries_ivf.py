@@ -507,37 +507,53 @@ FROM sz LEFT JOIN rem ON sz.cid = rem.cid"""
     return "WITH " + ",\n".join(parts) + ",\n" + tail
 
 
-def _semdedup_pairs(asg, *, cap: int):
-    """Within-cluster near-dup candidate pairs above the cosine threshold,
-    with the quadratic stage hard-bounded: clusters larger than ``cap``
-    are excluded from pairing by similarity._cap_bucket_size (the window
-    count is co-partitioned with the join's cluster_id shuffle — no extra
-    exchange pattern), so candidates per cluster never exceed cap·(cap-1)/2
-    no matter how skewed the assignment. Norms are computed ONCE per row
-    (not per pair): the pair expression is a single dot product — 3x fewer
-    HOF flops on the quadratic stage, bit-identical result (same IEEE ops:
-    dot/(na*nb) with norms computed by the same sequential fold)."""
-    capped = SIM._cap_bucket_size(
-        asg.withColumn("nrm", SIM.norm("embedding")), ["cluster_id"], cap
+def _semdedup_scores(asg, *, cap: int):
+    """Per-cluster SemDeDup counts from an assignment frame (``vec_id``,
+    ``embedding``, ``cluster_id``): ``cluster_id``, ``n_vectors``,
+    ``n_removed``, ``n_kept``.
+
+    One exchange: the cap device's window count
+    (similarity._flag_bucket_size, with its metric node) partitions by
+    ``cluster_id``, and the groupBy on the same key reuses that
+    partitioning. Each cluster collects its members as (id, embedding,
+    norm) structs, the norm computed once per row, not per pair. An
+    over-cap cluster collects nothing (``collect_list`` skips the NULLs
+    ``when`` yields for dropped rows), so a group holds at most ``cap``
+    members and an over-cap cluster is kept whole, as the oracle's cap
+    does. A member is removed when a lower-id member of its cluster scores
+    ``round(dot/(na*nb), 6) >= _SEMDEDUP_T``: one array HOF over the member
+    list enumerates the pairs the oracle's self-join does, with the same
+    fold text (similarity.dot_sql), so the rounded cosines are
+    bit-identical."""
+    flagged, dropped = SIM._flag_bucket_size(asg, ["cluster_id"], cap)
+    member = F.struct(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        SIM.norm("embedding").alias("n"),
     )
-    a = capped.select(
-        "cluster_id",
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = capped.select(
-        "cluster_id",
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("vb"),
-        F.col("nrm").alias("nb"),
+    a, b = f"a{SIM._u()}", f"b{SIM._u()}"
+    near = (
+        f"round({SIM.dot_sql(f'{a}.v', f'{b}.v')} / ({a}.n * {b}.n), 6) "
+        f">= {_SEMDEDUP_T}D"
     )
     return (
-        a.join(b, "cluster_id")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(
-            F.round(SIM.dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
-            >= _SEMDEDUP_T
+        flagged.groupBy("cluster_id")
+        .agg(
+            F.max("__bucket_n").alias("n_vectors"),
+            F.collect_list(F.when(~dropped, member)).alias("__m"),
+        )
+        .withColumn(
+            "n_removed",
+            F.expr(
+                f"size(filter(__m, {b} -> "
+                f"exists(__m, {a} -> {a}.id < {b}.id AND {near})))"
+            ),
+        )
+        .select(
+            F.col("cluster_id").cast("long"),
+            F.col("n_vectors").cast("long"),
+            F.col("n_removed").cast("long"),
+            (F.col("n_vectors") - F.col("n_removed")).cast("long").alias("n_kept"),
         )
     )
 
@@ -551,37 +567,23 @@ def q_semantic_dedup_summary(spark, sf_dir):
     kept/removed counts (the curation decision a pipeline audits before
     applying).
 
-    100 TB shape: assignment is the zero-shuffle map stage over refined
-    centroid literals (operators/similarity.ivf_assign on kmeans_refine
-    output); the pairwise stage joins ONLY within a cluster — candidates
-    are bounded by Σ min(cluster_size, _SEMDEDUP_CAP)², never all-pairs
-    (the reason SemDeDup clusters first). The cap device
-    (similarity._cap_bucket_size on the cluster key) IS wired in: clusters
-    beyond _SEMDEDUP_CAP skip pairing entirely and are conservatively kept
-    whole — the oracle applies the identical cap, so parity holds at every
-    scale, including when the guard binds. (The production alternative is
-    raising k so clusters shrink; the cap is the semantic backstop for
-    skewed assignments.) Exactly oracle-checked end-to-end (fixed-point
-    centroids + rounded cosine)."""
+    100 TB shape: one scan, one assignment and one exchange. Assignment is
+    the zero-shuffle map stage over refined centroid literals
+    (operators/similarity.ivf_assign on kmeans_refine output); the cap
+    device's window count and the per-cluster groupBy share the
+    ``cluster_id`` shuffle, and pairs are scored inside each cluster's
+    member list (:func:`_semdedup_scores`) — no self-join, candidates
+    bounded by Σ min(cluster_size, _SEMDEDUP_CAP)², never all-pairs (the
+    reason SemDeDup clusters first). Clusters beyond _SEMDEDUP_CAP skip
+    pairing entirely and are conservatively kept whole — the oracle
+    applies the identical cap, so parity holds at every scale, including
+    when the guard binds. (The production alternative is raising k so
+    clusters shrink; the cap is the semantic backstop for skewed
+    assignments.) Exactly oracle-checked end-to-end (fixed-point centroids
+    + rounded cosine)."""
     emb = _t(spark, sf_dir, "embeddings")
-    cents = _kmeans_centroids(spark, sf_dir)
-    asg = SIM.ivf_assign(emb, cents, out="cluster_id")
-    pairs = _semdedup_pairs(asg, cap=_SEMDEDUP_CAP)
-    rem = pairs.groupBy("cluster_id").agg(
-        F.count_distinct(F.col("id_b")).alias("n_removed")
-    )
-    sz = asg.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_vectors"))
-    return (
-        sz.join(rem, "cluster_id", "left")
-        .select(
-            F.col("cluster_id").cast("long"),
-            F.col("n_vectors").cast("long"),
-            F.coalesce(F.col("n_removed"), F.lit(0)).cast("long").alias("n_removed"),
-            (F.col("n_vectors") - F.coalesce(F.col("n_removed"), F.lit(0)))
-            .cast("long")
-            .alias("n_kept"),
-        )
-    )
+    asg = SIM.ivf_assign(emb, _kmeans_centroids(spark, sf_dir), out="cluster_id")
+    return _semdedup_scores(asg, cap=_SEMDEDUP_CAP)
 
 
 # --- Johnson-Lindenstrauss random projection: distance preservation -------

@@ -12,6 +12,8 @@
   only tests select is a code path only tests run.
 - Worker preamble: every Python stage (``mapInPandas`` function or
   ``pandas_udf`` body) starts with the one ``worker_preamble()`` device.
+- Table reads: parquet is read through ``catalog.load_table``, whose
+  schema cache a direct ``spark.read.parquet(...)`` would bypass.
 """
 
 from __future__ import annotations
@@ -305,3 +307,53 @@ def test_the_worker_preamble_has_one_definition():
         or f"def {_PREAMBLE_FACTORY}" in path.read_text()
     )
     assert hits == ["functions/worker.py"], hits
+
+
+#: (module file, function) that may call ``<session>.read....parquet(``:
+#: the catalog's one cached read, and the CLI's reads of snapshots given on
+#: its command line (a previous card, two schema-diff directories), which
+#: are not catalog tables.
+_PARQUET_READERS = {
+    ("catalog.py", "_read_parquet"),
+    ("cli.py", "cmd_card"),
+    ("cli.py", "cmd_schema_diff"),
+}
+
+
+def _reads_parquet(call: ast.Call) -> bool:
+    """``call`` is ``<x>.read<...>.parquet(...)``: a ``parquet`` method
+    whose receiver chain passes through a ``.read`` attribute."""
+    if not (isinstance(call.func, ast.Attribute) and call.func.attr == "parquet"):
+        return False
+    node = call.func.value
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute):
+            if node.attr == "read":
+                return True
+            node = node.value
+        else:
+            node = node.func
+    return False
+
+
+def test_parquet_is_read_through_the_catalog():
+    """Every other module builds its tables with ``catalog.load_table``,
+    which infers a table's schema once per process; a direct read would
+    run a footer job on every query build."""
+    hits = []
+
+    def visit(node, path: Path, fn: str):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and _reads_parquet(node)
+            and (path.name, fn) not in _PARQUET_READERS
+        ):
+            hits.append(f"{path.relative_to(ROOT / PKG)}:{node.lineno} {fn}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, path, fn)
+
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        visit(ast.parse(path.read_text(), str(path)), path, "<module>")
+    assert not hits, f"direct parquet reads outside the catalog: {hits}"

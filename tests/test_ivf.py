@@ -308,30 +308,104 @@ def test_cap_bucket_size_metric_always_on_and_zero_when_clean(spark):
     assert obs.get["buckets_capped"] == 0
 
 
+def _semdedup_fixture(spark, clusters):
+    """An assignment frame: ``clusters`` maps cluster_id -> member count,
+    every member the same vector, so every pair passes the threshold."""
+    rows = [
+        (cid * 1000 + i, [1.0] * 8, cid)
+        for cid, n in clusters.items()
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, cluster_id long"
+    )
+
+
+def _counts(df):
+    return {
+        r["cluster_id"]: (r["n_vectors"], r["n_removed"], r["n_kept"])
+        for r in df.collect()
+    }
+
+
 def test_semantic_dedup_query_pairing_is_capped(spark):
     """VERDICT r4 #3: the cap must be wired into semantic_dedup_summary's
     OWN pairing stage, not just exist as a device. Inject one mega-cluster
     (identical vectors — every pair passes the threshold) next to a small
-    cluster: the mega-cluster contributes ZERO pairs (conservatively kept
-    whole), the small one pairs normally, so per-cluster candidates stay
+    cluster: the mega-cluster is never paired (conservatively kept whole),
+    the small one pairs normally, so per-cluster candidates stay
     <= cap·(cap-1)/2."""
-    from pyspark.sql import functions as F
-
-    from py_datalake_move_files_spark.queries_ivf import _semdedup_pairs
+    from py_datalake_move_files_spark.queries_ivf import _semdedup_scores
 
     cap = 10
-    mega = [(i, [1.0] * 8, 0) for i in range(50)]            # 50 > cap
-    small = [(100 + i, [1.0] * 8, 1) for i in range(4)]      # 4 <= cap
-    asg = spark.createDataFrame(
-        mega + small, "vec_id long, embedding array<double>, cluster_id long"
-    )
-    pairs = _semdedup_pairs(asg, cap=cap).groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    got = {r["cluster_id"]: r["n"] for r in pairs.collect()}
-    assert 0 not in got                 # mega-cluster never paired
-    assert got[1] == 4 * 3 // 2         # small cluster pairs fully
+    asg = _semdedup_fixture(spark, {0: 50, 1: 4})        # 50 > cap >= 4
+    got = _counts(_semdedup_scores(asg, cap=cap))
+    assert got[0] == (50, 0, 50)        # mega-cluster never paired
+    assert got[1] == (4, 3, 1)          # small cluster pairs fully
     # and with a cap no cluster reaches the same fixture goes quadratic —
     # prove the bound is the cap's doing, not the data's
-    uncapped = _semdedup_pairs(asg, cap=len(mega) + len(small))
-    assert uncapped.where("cluster_id = 0").count() == 50 * 49 // 2
+    uncapped = _counts(_semdedup_scores(asg, cap=54))
+    assert uncapped == {0: (50, 49, 1), 1: (4, 3, 1)}
+
+
+@pytest.mark.parametrize(
+    "clusters, metrics",
+    [({0: 50, 1: 4}, (50, 1, 50)), ({0: 50, 1: 12}, (62, 2, 50))],
+    ids=["one-over-cap", "all-over-cap"],
+)
+def test_semantic_dedup_cap_metric_is_observed(spark, clusters, metrics):
+    """No-silent-caps for the grouped SemDeDup shape, with AQE on: the
+    ``bucket_cap:*`` metric (rows_dropped, buckets_capped, max_bucket_n)
+    is in the query's observed metrics after ``collect()``, also when
+    every cluster is over the cap. The grouped shape keeps one row per
+    cluster, so the plan never collapses to an empty relation above the
+    metric node."""
+    from py_datalake_move_files_spark.queries_ivf import _semdedup_scores
+
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        df = _semdedup_scores(_semdedup_fixture(spark, clusters), cap=10)
+        qe = df._jdf.queryExecution()
+        got = _counts(df)
+        observed = qe.observedMetrics()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert got == {
+        cid: (n, 0, n) if n > 10 else (n, n - 1, 1) for cid, n in clusters.items()
+    }
+    names = observed.keys().mkString("\n").split("\n")
+    (name,) = [k for k in names if k.startswith("bucket_cap:")]
+    row = observed.get(name).get()
+    assert (row.getLong(0), row.getLong(1), row.getLong(2)) == metrics
+
+
+def test_semantic_dedup_summary_runs_one_exchange(spark, sf_small):
+    """One scan, one assignment, one exchange: once the table and the
+    k-means centroids have been read, building the query runs no Spark job,
+    the executed plan holds exactly one Exchange (the cluster_id shuffle
+    the cap window and the groupBy share), and the action runs at most two
+    jobs."""
+    from py_datalake_move_files_spark.queries import QUERIES
+
+    q = QUERIES["semantic_dedup_summary"]
+    q(spark, sf_small).collect()  # reads the schema, trains the centroids
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for group in ("build", "action"):
+            sc.setJobGroup(f"semdedup-{group}", group)
+            if group == "build":
+                df = q(spark, sf_small)
+            else:
+                df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    for group in ("build", "action"):
+        jobs[group] = len(sc.statusTracker().getJobIdsForGroup(f"semdedup-{group}"))
+    assert jobs["build"] == 0, jobs
+    assert 1 <= jobs["action"] <= 2, jobs
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Exchange ") == 1, plan
