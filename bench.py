@@ -2,10 +2,11 @@
 """Benchmark harness: run EVERY registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}. The historical HEADLINE subset is
-timed first and its subtotal reported as "headline_total" so the
-round-over-round series stays comparable; the remaining registry runs as
-the fast tier — no registered query is silently untimed (VERDICT r7 #3).
+"build_s_total": sec, "queries": {name: sec}, "sf": ...}. The historical
+HEADLINE subset is timed first and its subtotal reported as
+"headline_total" so the round-over-round series stays comparable; the
+remaining registry runs as the fast tier — no registered query is
+silently untimed (VERDICT r7 #3).
 
 Each query is fully materialized through the built-in ``noop`` sink, which
 consumes EVERY output column — unlike ``count()``, which lets Catalyst prune
@@ -349,21 +350,29 @@ def run_scale(spark, sf_dir: str, names: list[str]) -> dict:
 
     # min of two timed runs per query: this host shares CPU with other
     # tenants and single-shot timings showed 2-10× interference spikes; the
-    # minimum is the standard steady-state estimator under external noise
+    # minimum is the standard steady-state estimator under external noise.
+    # A run is the build (the QUERIES call: analysis and Py4J calls on the
+    # driver, no action) plus the noop action; the build is also reported
+    # on its own, min of the same two runs.
     times: dict[str, float] = {}
+    build_s: dict[str, float] = {}
     shuffle_read_mb: dict[str, float] = {}
     shuffle_write_mb: dict[str, float] = {}
     for name in names:
         if name in errors:
             continue
-        best = float("inf")
+        best = best_build = float("inf")
         try:
             before = shuffle_totals(spark)
             for _ in range(2):
                 t0 = time.perf_counter()
-                materialize(QUERIES[name](spark, sf_dir))
+                df = QUERIES[name](spark, sf_dir)
+                built = time.perf_counter()
+                materialize(df)
                 best = min(best, time.perf_counter() - t0)
+                best_build = min(best_build, built - t0)
             times[name] = round(best, 3)
+            build_s[name] = round(best_build, 3)
             after = shuffle_totals(spark)
             if before is not None and after is not None:
                 # two identical runs -> halve the delta for per-run volume
@@ -380,6 +389,8 @@ def run_scale(spark, sf_dir: str, names: list[str]) -> dict:
         # separately so per-query numbers never absorb them (VERDICT r9 #2)
         "artifacts": artifacts,
         "queries": times,
+        # per-query build time (included in "queries")
+        "build_s": build_s,
         # per-query exchange volume (delta of executor shuffle totals
         # around the timed runs, MB per run) — the diffable scale metric
         "shuffle_read_mb": shuffle_read_mb,
@@ -442,6 +453,8 @@ def main() -> None:
         "queries_headline": len(headline),
         "artifacts": first["artifacts"],
         "queries": times,
+        "build_s_total": round(sum(first["build_s"].values()), 3),
+        "build_s": first["build_s"],
         "shuffle_read_mb": first["shuffle_read_mb"],
         "shuffle_write_mb": first["shuffle_write_mb"],
         "plan_counts": first["plan_counts"],
@@ -488,6 +501,8 @@ def main() -> None:
         "metric": "registry_queries_total",
         "value": total,
         "unit": "sec",
+        # the part of value spent building the DataFrames on the driver
+        "build_s_total": full["build_s_total"],
         # the r1-r7 series totalled the HEADLINE subset only; this keeps
         # that series alive now that value covers the full registry
         "headline_total": headline_total,

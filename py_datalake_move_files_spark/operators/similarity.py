@@ -62,14 +62,18 @@ def dot(a: str, b: str) -> Column:
     return F.expr(dot_sql(a, b))
 
 
-def norm(a: str) -> Column:
+def norm_sql(a: str) -> str:
+    """SQL text of sqrt(Σ a[i]²), double, sequential fold."""
     u = _u()
-    return F.sqrt(
-        F.expr(
-            f"aggregate({a}, 0D, (acc{u}, v{u}) -> "
-            f"acc{u} + CAST(v{u} AS DOUBLE) * CAST(v{u} AS DOUBLE))"
-        )
+    return (
+        f"sqrt(aggregate({a}, 0D, (acc{u}, v{u}) -> "
+        f"acc{u} + CAST(v{u} AS DOUBLE) * CAST(v{u} AS DOUBLE)))"
     )
+
+
+def norm(a: str) -> Column:
+    """:func:`norm_sql` as a column."""
+    return F.expr(norm_sql(a))
 
 
 # NOTE: there is deliberately no cosine(a, b) convenience helper — it would
@@ -183,27 +187,28 @@ _CAP_OBS = iter(range(10**9))
 
 def _observe_cap(
     flagged: DataFrame, n_col: str, max_n: int, observation=None
-) -> tuple[DataFrame, Column]:
+) -> tuple[DataFrame, str]:
     """Attach the cap's ``CollectMetrics`` node to ``flagged``, a frame
     carrying each row's bucket size in ``n_col``; returns the observed frame
-    and the per-row ``dropped`` predicate (bucket size > ``max_n``).
+    and the SQL text of the per-row ``dropped`` predicate (bucket size >
+    ``max_n``).
 
     Metrics: ``rows_dropped`` = rows in capped buckets (NULL on an empty
     frame), ``buckets_capped`` = number of capped buckets (0 even on empty),
     ``max_bucket_n`` = the largest bucket (NULL on empty). Without an
     ``observation`` the node gets an auto-unique ``bucket_cap:<n>`` name."""
-    n = F.col(n_col)
-    dropped = n > F.lit(max_n)
+    dropped = f"{n_col} > {max_n}"
     obs = observation if observation is not None else f"bucket_cap:{next(_CAP_OBS)}"
     observed = flagged.observe(
         obs,
-        F.sum(dropped.cast("long")).alias("rows_dropped"),
+        F.expr(f"sum(CAST({dropped} AS BIGINT)) AS rows_dropped"),
         # DISTINCT is illegal in observed metrics; each dropped bucket's
         # rows sum 1/n → exactly 1 per bucket (round() absorbs FP)
-        F.round(F.coalesce(F.sum(F.when(dropped, F.lit(1.0) / n)), F.lit(0.0)))
-        .cast("long")
-        .alias("buckets_capped"),
-        F.max(n).alias("max_bucket_n"),
+        F.expr(
+            f"CAST(round(coalesce(sum(CASE WHEN {dropped} THEN 1.0D / {n_col} END), "
+            f"0.0D)) AS BIGINT) AS buckets_capped"
+        ),
+        F.expr(f"max({n_col}) AS max_bucket_n"),
     )
     return observed, dropped
 
@@ -213,17 +218,17 @@ def _flag_bucket_size(
     keys: list[str],
     max_bucket: int,
     observation=None,
-) -> tuple[DataFrame, Column]:
+) -> tuple[DataFrame, str]:
     """The bucket-cap device without its filter: one window count over
     ``keys`` into ``__bucket_n``, then the :func:`_observe_cap` metric node.
-    Returns the observed frame (every row kept) and the per-row ``dropped``
-    predicate. :func:`_cap_bucket_size` filters on it; a caller that
-    aggregates over the same keys instead (``semantic_dedup_summary``)
-    keeps the count and groups on the window's partitioning, so the two
-    share one exchange."""
-    w = Window.partitionBy(*[F.col(k) for k in keys])
+    Returns the observed frame (every row kept) and the SQL text of the
+    per-row ``dropped`` predicate. :func:`_cap_bucket_size` filters on it;
+    a caller that aggregates over the same keys instead
+    (``semantic_dedup_summary``) keeps the count and groups on the window's
+    partitioning, so the two share one exchange."""
+    part = ", ".join(f"`{k}`" for k in keys)
     return _observe_cap(
-        df.withColumn("__bucket_n", F.count(F.lit(1)).over(w)),
+        df.selectExpr("*", f"count(1) OVER (PARTITION BY {part}) AS __bucket_n"),
         "__bucket_n",
         max_bucket,
         observation,
@@ -258,7 +263,7 @@ def _cap_bucket_size(
     is a pass-through: result schema, row set, and exchange count are
     unchanged (the ``ann_recall_*`` queries quantify the recall side)."""
     flagged, dropped = _flag_bucket_size(df, keys, max_bucket, observation)
-    return flagged.where(~dropped).drop("__bucket_n")
+    return flagged.where(f"NOT ({dropped})").drop("__bucket_n")
 
 
 def bucket_expr(vec_col: str, planes: list[list[int]]) -> Column:
@@ -587,26 +592,55 @@ def ivf_centroids(
     return sorted((r["cid"], [float(v) for v in r["cv"]]) for r in rows)
 
 
-def _centroid_sims(vec_col: str, centroids: list[tuple[int, list[float]]]) -> list[tuple[int, Column]]:
-    """Rounded cosine(vec, centroid) per centroid, centroid norm precomputed
-    in Python with the identical left-associative chain (same IEEE ops ⇒ same
-    value the oracle's SQL chain produces)."""
+def _centroid_norm(cv: list[float]) -> float:
+    """A centroid's norm, in Python, with the left-associative chain the
+    Spark fold and the oracle's SQL chain run (same IEEE ops, same value)."""
     import math
 
-    out = []
+    acc = 0.0
+    for v in cv:
+        acc = acc + v * v
+    return math.sqrt(acc)
+
+
+def _double_array_sql(values: list[float]) -> str:
+    """SQL text of a constant ``ARRAY<DOUBLE>``: one string literal, split
+    and cast. Spark's SQL parser spends ~90 µs on every numeric literal (a
+    64-dim ``array(…D, …)`` takes 6 ms to parse), while one string literal
+    is one token; the optimizer's ConstantFolding turns the cast into the
+    same literal array before anything runs. ``repr`` is the shortest
+    string that Python parses back to the same double, and Java's
+    ``Double.parseDouble`` rounds it the same way, so the values are
+    bit-identical."""
+    return (
+        "CAST(split('" + ",".join(repr(float(v)) for v in values) + "', ',') "
+        "AS ARRAY<DOUBLE>)"
+    )
+
+
+def _centroid_sims(
+    vec_col: str, nrm_col: str, centroids: list[tuple[int, list[float]]]
+) -> str:
+    """SQL text of the literal-path probe array: per centroid, the struct
+    ``(neg = -round(cosine(vec, centroid), 6), cid)``, so ``array_min``
+    picks the nearest centroid (ties to the lowest cid) and ``array_sort``
+    ranks them. The row norm is read from ``nrm_col``, a column the caller
+    computes once per row (Catalyst does not share the per-centroid copies
+    of a HOF norm: each has its own lambda names). Centroid norms are
+    :func:`_centroid_norm` literals and each centroid vector is one
+    :func:`_double_array_sql` string. The whole array is one SQL text, not
+    k Column trees, so building it costs no Py4J calls per centroid."""
+    structs = []
     for cid, cv in centroids:
-        acc = 0.0
-        for v in cv:
-            acc = acc + v * v
-        cnorm = math.sqrt(acc)
-        consts = "array(" + ", ".join(f"{v!r}D" for v in cv) + ")"
+        consts = _double_array_sql(cv)
         u = _u()
-        d = F.expr(
+        d = (
             f"aggregate(zip_with({vec_col}, {consts}, (x{u}, y{u}) -> "
             f"cast(x{u} as double) * y{u}), 0D, (acc{u}, v{u}) -> acc{u} + v{u})"
         )
-        out.append((cid, F.round(d / (norm(vec_col) * F.lit(cnorm)), 6)))
-    return out
+        cos = f"round({d} / ({nrm_col} * {_centroid_norm(cv)!r}D), 6)"
+        structs.append(f"named_struct('neg', -{cos}, 'cid', {int(cid)})")
+    return "array(" + ", ".join(structs) + ")"
 
 
 #: Above this k, ivf_assign switches from centroid LITERALS (one cosine
@@ -630,8 +664,9 @@ def _probe_lists(
     Shared by :func:`ivf_topk` and :func:`knn_graph`, and — like
     :func:`ivf_assign` — dispatched on centroid count:
 
-    - ``k <= IVF_LITERAL_MAX_K``: per-centroid literal cosine expressions +
-      struct sort (zero shuffle, fastest while codegen-friendly).
+    - ``k <= IVF_LITERAL_MAX_K``: per-centroid literal cosine expressions
+      over the row norm in ``nrm_col`` + struct sort (zero shuffle, fastest
+      while codegen-friendly).
     - ``k > IVF_LITERAL_MAX_K``: the whole centroid table rides ONE broadcast
       single-row ``array<struct>`` column and the ranking is a HOF loop
       (``transform`` → ``array_sort`` → ``slice``) — constant plan size,
@@ -641,32 +676,17 @@ def _probe_lists(
       aggregate expressions past the 64 KB codegen budget and falls back
       to interpreted eval — the r4 "literal-table expressions as HOF
       loops" rule applied to probing. Rounded cosines are bit-identical
-      between paths (same zip_with/aggregate fold, same Python-side norm
-      chain)."""
+      between paths (same zip_with/aggregate fold, same ``nrm_col`` row
+      norm, same Python-side centroid norm chain)."""
     if len(centroids) <= IVF_LITERAL_MAX_K:
-        sims = _centroid_sims(vec_col, centroids)
-        probe_structs = F.array(
-            *[
-                F.struct((-s).alias("neg"), F.lit(cid).alias("cid"))
-                for cid, s in sims
-            ]
+        sims = _centroid_sims(vec_col, nrm_col, centroids)
+        return q.selectExpr(
+            "*", f"explode(slice(array_sort({sims}), 1, {n_probe}).cid) AS list_id"
         )
-        return q.withColumn(
-            "list_id",
-            F.explode(
-                F.slice(F.array_sort(probe_structs), 1, n_probe).getField(
-                    "cid"
-                )
-            ),
-        )
-    import math
-
-    rows = []
-    for cid, cv in sorted(centroids):
-        acc = 0.0
-        for v in cv:
-            acc = acc + v * v
-        rows.append((int(cid), [float(v) for v in cv], math.sqrt(acc)))
+    rows = [
+        (int(cid), [float(v) for v in cv], _centroid_norm(cv))
+        for cid, cv in sorted(centroids)
+    ]
     cdf = q.sparkSession.createDataFrame(
         [(rows,)],
         "___cents array<struct<___cid: bigint, ___cv: array<double>, ___cn: double>>",
@@ -712,7 +732,11 @@ def ivf_assign(
       literals — ZERO shuffles, an embarrassingly parallel map stage, the
       core property that makes IVF the scale path (each query then scans
       n_probe/n_lists of the corpus instead of all). Fastest while the
-      k-branch expression tree stays codegen-friendly.
+      k-branch expression tree stays codegen-friendly. Built as two
+      projections of SQL text: the row norm, then one
+      ``array_min(array(named_struct('neg', -round(dot/(nrm*cn), 6),
+      'cid', cid), …)).cid`` (:func:`_centroid_sims`) — two analyzer
+      passes and no per-centroid Column objects.
     - ``k > IVF_LITERAL_MAX_K``: the centroids ride one broadcast
       single-row ``array<struct>`` column and the argmin is a per-row HOF
       loop over it. Plan size is CONSTANT in k — the regime a real large-k
@@ -728,21 +752,21 @@ def ivf_assign(
             out, F.lit(None).cast("int")
         )
     if len(centroids) <= IVF_LITERAL_MAX_K:
-        sims = _centroid_sims(vec_col, centroids)
         # argmin of (-sim, cid) structs: every centroid cosine is evaluated
         # exactly ONCE (array construction), and struct ordering encodes
         # the (max rounded sim, ties to lowest cid) rule. The previous
         # greatest(...) + when-chain re-evaluated each interpreted HOF dot
         # O(k) times — O(k²) dots per row, measured 0.33 s (k=8) →
         # 4.2 s (k=32) on 2k×64-dim; this form is linear in k (0.8 s at
-        # k=32, see tests/test_ivf path-parity coverage).
-        structs = F.array(
-            *[
-                F.struct((-s).alias("neg"), F.lit(cid).alias("cid"))
-                for cid, s in sims
-            ]
+        # k=32, see tests/test_ivf path-parity coverage). The row norm is
+        # its own column: CollapseProject keeps a multi-referenced HOF
+        # un-inlined, so it runs once per row instead of once per centroid.
+        nrm = f"___nrm{_u()}"
+        keep = [f"`{c}`" for c in corpus.columns if c != out]
+        sims = _centroid_sims(vec_col, nrm, centroids)
+        return corpus.selectExpr("*", f"{norm_sql(vec_col)} AS {nrm}").selectExpr(
+            *keep, f"array_min({sims}).cid AS `{out}`"
         )
-        return corpus.withColumn(out, F.array_min(structs).getField("cid"))
     return _ivf_assign_broadcast(corpus, centroids, vec_col=vec_col, out=out)
 
 
@@ -756,18 +780,14 @@ def _ivf_assign_broadcast(
     """Large-k assignment via a broadcast centroid table (see ivf_assign).
 
     Centroid norms are precomputed in Python with the identical
-    left-associative chain _centroid_sims uses, and ``dot`` emits the same
+    left-associative chain (:func:`_centroid_norm`), and ``dot`` emits the same
     sequential zip_with/aggregate fold — the rounded cosines are
     bit-identical to the literal path's, so the argmin (and therefore the
     assignment) agrees exactly between the two plans."""
-    import math
-
-    rows = []
-    for cid, cv in sorted(centroids):
-        acc = 0.0
-        for v in cv:
-            acc = acc + v * v
-        rows.append((int(cid), [float(v) for v in cv], math.sqrt(acc)))
+    rows = [
+        (int(cid), [float(v) for v in cv], _centroid_norm(cv))
+        for cid, cv in sorted(centroids)
+    ]
     cdf = corpus.sparkSession.createDataFrame(
         [(rows,)],
         "___cents array<struct<___cid: bigint, ___cv: array<double>, ___cn: double>>",
@@ -874,7 +894,8 @@ def kmeans_profile(
     # assignment and the winning-cosine column: every centroid cosine HOF
     # is evaluated exactly once per row (Catalyst cannot CSE
     # structurally-unequal lambda trees, so re-deriving either column
-    # separately would double the HOF work)
+    # separately would double the HOF work); the row norm is its own
+    # column for the same reason (:func:`_centroid_sims`)
     if not centroids:
         # no clusters to profile: empty report (degenerate-lake rule)
         return (
@@ -885,18 +906,13 @@ def kmeans_profile(
                 F.lit(None).cast("double").alias("mean_cos"),
             )
         )
-    sims = _centroid_sims("embedding", centroids)
-    structs = F.array(
-        *[F.struct((-sc).alias("neg"), F.lit(cid).alias("cid")) for cid, sc in sims]
-    )
+    sims = _centroid_sims("embedding", "__nrm", centroids)
     assigned = (
-        corpus.withColumn("__best", F.array_min(structs))
-        .withColumn("cluster_id", F.col("__best").getField("cid"))
-        .withColumn(
-            "__qc",
-            F.round(
-                (-F.col("__best").getField("neg")) * F.lit(float(scale))
-            ).cast("long"),
+        corpus.selectExpr("embedding", f"{norm_sql('embedding')} AS __nrm")
+        .selectExpr(f"array_min({sims}) AS __best")
+        .selectExpr(
+            "__best.cid AS cluster_id",
+            f"CAST(round(-__best.neg * {float(scale)!r}D) AS BIGINT) AS __qc",
         )
     )
     return (
@@ -1211,14 +1227,7 @@ def ivfpq_topk(
     q = queries.select(
         "query_id", F.col("embedding").alias("q_vec")
     ).withColumn("q_nrm", norm("q_vec"))
-    sims = _centroid_sims("q_vec", centroids)
-    probe_structs = F.array(
-        *[F.struct((-s).alias("neg"), F.lit(cid).alias("cid")) for cid, s in sims]
-    )
-    probes = q.withColumn(
-        "list_id",
-        F.explode(F.slice(F.array_sort(probe_structs), 1, n_probe).getField("cid")),
-    )
+    probes = _probe_lists(q, centroids, n_probe=n_probe)
 
     dim = len(codebook[0])
     subdim = dim // m

@@ -1050,14 +1050,15 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup pairs, exact-Jaccard-verified: shingle → minhash
     signature → band buckets (capped at LSH_BUCKET_CAP — the degenerate-
     corpus guard, inert through stress sf1) → candidate pairs → verify ≥
-    threshold."""
-    docs = _t(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(docs, "doc_id", num_hashes=MINHASHES)
+    threshold. The shingle frame is built once and feeds both the
+    signatures and the verify, so ``documents`` is scanned once."""
+    sh = D.shingled(_t(spark, sf_dir, "documents"), "doc_id")
+    sigs = D.minhash_signatures(sh, "doc_id", num_hashes=MINHASHES)
     cands = D.lsh_candidate_pairs(
         sigs, "doc_id", num_hashes=MINHASHES, bands=BANDS,
         max_bucket=LSH_BUCKET_CAP,
     )
-    return D.jaccard_pairs(docs, "doc_id", threshold=JACCARD_T, candidates=cands)
+    return D.jaccard_verify(sh, "doc_id", cands, threshold=JACCARD_T)
 
 
 def _jaccard_oracle() -> str:
@@ -1844,15 +1845,13 @@ def dedup_cluster_cc(spark, sf_dir):
     from py_datalake_move_files_spark.operators.clusters import connected_components
 
     def build():
-        docs = _t(spark, sf_dir, "documents")
-        sigs = D.minhash_signatures(docs, "doc_id", num_hashes=MINHASHES)
+        sh = D.shingled(_t(spark, sf_dir, "documents"), "doc_id")
+        sigs = D.minhash_signatures(sh, "doc_id", num_hashes=MINHASHES)
         cands = D.lsh_candidate_pairs(
             sigs, "doc_id", num_hashes=MINHASHES, bands=BANDS,
             max_bucket=LSH_BUCKET_CAP,
         )
-        pairs = D.jaccard_pairs(
-            docs, "doc_id", threshold=JACCARD_T, candidates=cands
-        )
+        pairs = D.jaccard_verify(sh, "doc_id", cands, threshold=JACCARD_T)
         return connected_components(pairs)
 
     key = (

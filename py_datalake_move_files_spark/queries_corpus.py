@@ -2341,14 +2341,15 @@ def q_lsh_threshold_curve(spark, sf_dir):
     truth = DD.jaccard_pairs(
         docs, "doc_id", threshold=_CURVE_FLOOR, max_df=DF_CAP
     ).select("id_a", "id_b", F.col("jaccard").alias("jt"))
-    sigs = DD.minhash_signatures(docs, "doc_id", num_hashes=MINHASHES)
+    sh = DD.shingled(docs, "doc_id")
+    sigs = DD.minhash_signatures(sh, "doc_id", num_hashes=MINHASHES)
     cands = DD.lsh_candidate_pairs(
         sigs, "doc_id", num_hashes=MINHASHES, bands=BANDS,
         max_bucket=LSH_BUCKET_CAP,
     )
-    scored = DD.jaccard_pairs(
-        docs, "doc_id", threshold=0.0, candidates=cands
-    ).select("id_a", "id_b", F.col("jaccard").alias("jc"))
+    scored = DD.jaccard_verify(sh, "doc_id", cands, threshold=0.0).select(
+        "id_a", "id_b", F.col("jaccard").alias("jc")
+    )
     return _curve_agg(truth, scored)
 
 
@@ -2461,12 +2462,13 @@ def _sampled_arms(spark, sf_dir, *, truth_threshold: float,
     truth = DD.jaccard_pairs(
         sdocs, "doc_id", threshold=truth_threshold, max_df=DF_CAP
     )
-    sigs = DD.minhash_signatures(sdocs, "doc_id", num_hashes=MINHASHES)
+    sh = DD.shingled(sdocs, "doc_id")
+    sigs = DD.minhash_signatures(sh, "doc_id", num_hashes=MINHASHES)
     cands = DD.lsh_candidate_pairs(
         sigs, "doc_id", num_hashes=MINHASHES, bands=BANDS,
         max_bucket=LSH_BUCKET_CAP,
     )
-    scored = DD.jaccard_pairs(sdocs, "doc_id", threshold=0.0, candidates=cands)
+    scored = DD.jaccard_verify(sh, "doc_id", cands, threshold=0.0)
     return truth, scored
 
 

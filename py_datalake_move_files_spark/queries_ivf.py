@@ -512,24 +512,31 @@ def _semdedup_scores(asg, *, cap: int):
     ``embedding``, ``cluster_id``): ``cluster_id``, ``n_vectors``,
     ``n_removed``, ``n_kept``.
 
-    One exchange: the cap device's window count
-    (similarity._flag_bucket_size, with its metric node) partitions by
-    ``cluster_id``, and the groupBy on the same key reuses that
-    partitioning. Each cluster collects its members as (id, embedding,
-    norm) structs, the norm computed once per row, not per pair. An
-    over-cap cluster collects nothing (``collect_list`` skips the NULLs
-    ``when`` yields for dropped rows), so a group holds at most ``cap``
-    members and an over-cap cluster is kept whole, as the oracle's cap
-    does. A member is removed when a lower-id member of its cluster scores
-    ``round(dot/(na*nb), 6) >= _SEMDEDUP_T``: one array HOF over the member
-    list enumerates the pairs the oracle's self-join does, with the same
-    fold text (similarity.dot_sql), so the rounded cosines are
-    bit-identical."""
-    flagged, dropped = SIM._flag_bucket_size(asg, ["cluster_id"], cap)
-    member = F.struct(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("v"),
-        SIM.norm("embedding").alias("n"),
+    One exchange, spread over every task slot: an explicit
+    ``repartition(defaultParallelism, cluster_id)``, which the cap device's
+    window count (similarity._flag_bucket_size, with its metric node) and
+    the groupBy on the same key both reuse. The repartition is explicit
+    because the shuffle is tiny (cluster ids, vectors and norms, 0.13 MB at
+    sf0.01): left to the window, AQE coalesces it into ONE reduce task and
+    the quadratic member scoring runs on one core, while a shuffle with a
+    stated partition count is never coalesced. Clusters are balanced
+    (k-means), so the slots share the pairs. Each cluster collects its
+    members as (id, embedding, norm) structs, the norm computed once per
+    row, not per pair. An over-cap cluster collects nothing
+    (``collect_list`` skips the NULLs ``CASE WHEN`` yields for dropped
+    rows), so a group holds at most ``cap`` members and an over-cap
+    cluster is kept whole, as the oracle's cap does. A member is removed when a lower-id member of its cluster
+    scores ``round(dot/(na*nb), 6) >= _SEMDEDUP_T``: one array HOF over the
+    member list enumerates the pairs the oracle's self-join does, with the
+    same fold text (similarity.dot_sql), so the rounded cosines are
+    bit-identical. Everything after the repartition is SQL text; the
+    output projection names ``n_removed`` once and reads it back as a
+    lateral alias, so the HOF runs once per cluster."""
+    slots = asg.sparkSession.sparkContext.defaultParallelism
+    spread = asg.repartition(slots, "cluster_id")
+    flagged, dropped = SIM._flag_bucket_size(spread, ["cluster_id"], cap)
+    member = (
+        f"named_struct('id', vec_id, 'v', embedding, 'n', {SIM.norm_sql('embedding')})"
     )
     a, b = f"a{SIM._u()}", f"b{SIM._u()}"
     near = (
@@ -539,21 +546,15 @@ def _semdedup_scores(asg, *, cap: int):
     return (
         flagged.groupBy("cluster_id")
         .agg(
-            F.max("__bucket_n").alias("n_vectors"),
-            F.collect_list(F.when(~dropped, member)).alias("__m"),
+            F.expr("max(__bucket_n) AS n_vectors"),
+            F.expr(f"collect_list(CASE WHEN NOT ({dropped}) THEN {member} END) AS __m"),
         )
-        .withColumn(
-            "n_removed",
-            F.expr(
-                f"size(filter(__m, {b} -> "
-                f"exists(__m, {a} -> {a}.id < {b}.id AND {near})))"
-            ),
-        )
-        .select(
-            F.col("cluster_id").cast("long"),
-            F.col("n_vectors").cast("long"),
-            F.col("n_removed").cast("long"),
-            (F.col("n_vectors") - F.col("n_removed")).cast("long").alias("n_kept"),
+        .selectExpr(
+            "CAST(cluster_id AS BIGINT) AS cluster_id",
+            "CAST(n_vectors AS BIGINT) AS n_vectors",
+            f"CAST(size(filter(__m, {b} -> exists(__m, {a} -> "
+            f"{a}.id < {b}.id AND {near}))) AS BIGINT) AS n_removed",
+            "n_vectors - n_removed AS n_kept",
         )
     )
 
@@ -571,7 +572,8 @@ def q_semantic_dedup_summary(spark, sf_dir):
     the zero-shuffle map stage over refined centroid literals
     (operators/similarity.ivf_assign on kmeans_refine output); the cap
     device's window count and the per-cluster groupBy share the
-    ``cluster_id`` shuffle, and pairs are scored inside each cluster's
+    ``cluster_id`` shuffle, which is sized to the task slots so the
+    scoring uses every core, and pairs are scored inside each cluster's
     member list (:func:`_semdedup_scores`) — no self-join, candidates
     bounded by Σ min(cluster_size, _SEMDEDUP_CAP)², never all-pairs (the
     reason SemDeDup clusters first). Clusters beyond _SEMDEDUP_CAP skip
@@ -580,7 +582,9 @@ def q_semantic_dedup_summary(spark, sf_dir):
     when the guard binds. (The production alternative is raising k so
     clusters shrink; the cap is the semantic backstop for skewed
     assignments.) Exactly oracle-checked end-to-end (fixed-point centroids
-    + rounded cosine)."""
+    + rounded cosine). Every projection is SQL text, so the build is a few
+    analyzer passes and under 600 Py4J calls
+    (tests/test_build_cost.py)."""
     emb = _t(spark, sf_dir, "embeddings")
     asg = SIM.ivf_assign(emb, _kmeans_centroids(spark, sf_dir), out="cluster_id")
     return _semdedup_scores(asg, cap=_SEMDEDUP_CAP)

@@ -65,6 +65,11 @@ def test_bench_emits_one_compact_json_line_and_sidecar(tmp_path):
     assert full["shuffle_write_mb"]["q1_pricing_summary"] > 0
     assert summary["shuffle_read_mb_total"] >= 0
 
+    # per-query build time: the QUERIES call alone, part of the query time
+    assert set(full["build_s"]) == set(full["queries"])
+    assert all(0 <= full["build_s"][n] <= full["queries"][n] for n in full["queries"])
+    assert summary["build_s_total"] == full["build_s_total"] >= 0
+
     # join shape per timed query: hash exchanges, broadcast exchanges,
     # SortMergeJoin, CartesianProduct
     assert set(full["plan_counts"]) == set(full["queries"])

@@ -159,6 +159,22 @@ def test_ivf_assign_broadcast_path_matches_literal_path(emb, monkeypatch):
     assert lit == bc
 
 
+def test_double_array_sql_is_bit_exact(spark):
+    """The literal path's centroid vectors enter the plan as one string
+    literal cast to ARRAY<DOUBLE> each; every double must come back
+    bit-identical, subnormals, negative zero and exponent reprs included."""
+    import struct
+
+    from py_datalake_move_files_spark.operators.similarity import _double_array_sql
+
+    vals = [
+        0.1 + 0.2, 1 / 3, -0.0, 5e-324, 1e-05, -2.5e-310,
+        1.7976931348623157e308, 123456.789, -0.06948484615384615,
+    ]
+    got = spark.sql(f"SELECT {_double_array_sql(vals)} AS a").collect()[0]["a"]
+    assert [struct.pack("<d", v) for v in got] == [struct.pack("<d", v) for v in vals]
+
+
 def test_ivf_assign_large_k_uses_broadcast_plan(emb):
     """k=256 must auto-select the broadcast-table path: a BroadcastExchange
     appears and there is NO per-centroid when-chain / greatest tree (the
@@ -385,7 +401,8 @@ def test_semantic_dedup_summary_runs_one_exchange(spark, sf_small):
     k-means centroids have been read, building the query runs no Spark job,
     the executed plan holds exactly one Exchange (the cluster_id shuffle
     the cap window and the groupBy share), and the action runs at most two
-    jobs."""
+    jobs. The scoring stage after that exchange runs on every task slot:
+    AQE does not coalesce the small shuffle into one task."""
     from py_datalake_move_files_spark.queries import QUERIES
 
     q = QUERIES["semantic_dedup_summary"]
@@ -409,3 +426,12 @@ def test_semantic_dedup_summary_runs_one_exchange(spark, sf_small):
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("Exchange ") == 1, plan
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup("semdedup-action")
+        for stage in tracker.getJobInfo(job).stageIds
+        if tracker.getStageInfo(stage) is not None
+    ]
+    assert sc.defaultParallelism > 1
+    assert max(tasks) == sc.defaultParallelism, tasks

@@ -20,7 +20,11 @@ import hashlib
 import math
 
 from py_datalake_move_files_spark.catalog import load_table
-from py_datalake_move_files_spark.operators.dedup import minhash_signatures, simhash
+from py_datalake_move_files_spark.operators.dedup import (
+    minhash_signatures,
+    shingled,
+    simhash,
+)
 from py_datalake_move_files_spark.operators.similarity import brute_force_topk
 from py_datalake_move_files_spark.operators.text import (
     LANG_MARKERS,
@@ -61,7 +65,12 @@ def test_minhash_signatures_match_python_and_are_deterministic(spark):
     docs = load_table(spark, SF, "documents")
     texts = _texts(spark)
     runs = [
-        {r.doc_id: tuple(r)[1:] for r in minhash_signatures(docs, "doc_id", num_hashes=8).collect()}
+        {
+            r.doc_id: tuple(r)[1:]
+            for r in minhash_signatures(
+                shingled(docs, "doc_id"), "doc_id", num_hashes=8
+            ).collect()
+        }
         for _ in range(2)
     ]
     assert runs[0] == runs[1], "minhash signatures nondeterministic"

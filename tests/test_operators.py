@@ -18,8 +18,10 @@ from py_datalake_move_files_spark.operators.dedup import (
     hex_value,
     hex_value_sql,
     jaccard_pairs,
+    jaccard_verify,
     lsh_candidate_pairs,
     minhash_signatures,
+    shingled,
     simhash,
 )
 from py_datalake_move_files_spark.operators.similarity import brute_force_topk
@@ -39,11 +41,12 @@ def test_minhash_lsh_finds_exact_dup_pair(spark):
         [(1, base), (2, base), (3, "totally different words here now ok yes")],
         ["doc_id", "text"],
     )
-    sigs = minhash_signatures(df, "doc_id")
+    sh = shingled(df, "doc_id")
+    sigs = minhash_signatures(sh, "doc_id")
     cands = lsh_candidate_pairs(sigs, "doc_id")
     pairs = {(r.id_a, r.id_b) for r in cands.collect()}
     assert (1, 2) in pairs
-    verified = jaccard_pairs(df, "doc_id", threshold=0.99, candidates=cands).collect()
+    verified = jaccard_verify(sh, "doc_id", cands, threshold=0.99).collect()
     assert [(v.id_a, v.id_b, v.jaccard) for v in verified] == [(1, 2, 1.0)]
 
 
@@ -99,7 +102,10 @@ def test_hash_kernels_decode_hex_with_conv(spark):
     native ``conv`` per hash, not the oracle's per-nibble ``instr`` terms
     (those run interpreted inside the HOF lambdas, once per element)."""
     df = spark.createDataFrame([(1, "a b c d"), (2, "e f g h")], ["doc_id", "text"])
-    for out in (minhash_signatures(df, "doc_id"), simhash(df, "doc_id", bits=32)):
+    for out in (
+        minhash_signatures(shingled(df, "doc_id"), "doc_id"),
+        simhash(df, "doc_id", bits=32),
+    ):
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         assert "conv(" in plan and "instr(" not in plan, plan
 

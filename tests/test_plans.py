@@ -61,9 +61,14 @@ def test_dedup_exact_single_shuffle(spark):
 
 def test_minhash_signatures_have_no_shuffle(spark):
     from py_datalake_move_files_spark.catalog import load_table
-    from py_datalake_move_files_spark.operators.dedup import minhash_signatures
+    from py_datalake_move_files_spark.operators.dedup import (
+        minhash_signatures,
+        shingled,
+    )
 
-    df = minhash_signatures(load_table(spark, SF, "documents"), "doc_id")
+    df = minhash_signatures(
+        shingled(load_table(spark, SF, "documents"), "doc_id"), "doc_id"
+    )
     plan = df._jdf.queryExecution().executedPlan().toString()
     # per-row signature computation: the only exchange is the parallelism
     # guard's round-robin (local small-file case), never a hash shuffle

@@ -59,6 +59,7 @@ def test_lsh_candidate_cap_bounds_degenerate_corpus(spark):
     from py_datalake_move_files_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
+        shingled,
     )
 
     n_identical = 80
@@ -68,7 +69,7 @@ def test_lsh_candidate_cap_bounds_degenerate_corpus(spark):
         (1001, "a genuinely different small document about spark joins plus"),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    sigs = minhash_signatures(docs, "doc_id").localCheckpoint()
+    sigs = minhash_signatures(shingled(docs, "doc_id"), "doc_id").localCheckpoint()
 
     uncapped = lsh_candidate_pairs(sigs, "doc_id").count()
     assert uncapped >= n_identical * (n_identical - 1) // 2  # quadratic blowup
